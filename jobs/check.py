@@ -87,15 +87,6 @@ def main(argv: list[str] | None = None) -> int:
             [c.strip() for c in args.key_cols.split(",") if c.strip()]
             if args.key_cols else [df.columns[0]]
         )
-        if args.abort_early:
-            # abortEarly is a REPORTING shape (lyra: stop at the first
-            # error), not a gating one: a row failing rules A and B counts
-            # only toward A, so B's verdict/tolerance gate sees an
-            # undercount and can pass where the full report would fail.
-            # Say so loudly rather than silently weakening the CI gate.
-            print("[lyra] WARNING: --abort-early attributes each row to its "
-                  "FIRST failing rule only; per-rule gates see undercounts — "
-                  "drop the flag for gating runs")
         res = validate(df, ruleset, key_cols=key_cols, partition_col=part_col,
                        messages=args.messages, abort_early=args.abort_early)
         if args.out:
@@ -120,9 +111,7 @@ def main(argv: list[str] | None = None) -> int:
                   f"{n_viol} violation row(s), failing={failing[:10]}")
         else:
             n_viol = viol.count()
-            # whole-table gate mirrors verdict_gate semantics: tolerance
-            # forgives a rate, warn severity never gates
-            from lyra_spark.engine import ruleset_severities, ruleset_tolerances
+            from lyra_spark.engine import ruleset_severities, ruleset_tolerances, verdict_gate
 
             tols = ruleset_tolerances(ruleset) or {}
             sevs = ruleset_severities(ruleset) or {}
@@ -130,8 +119,9 @@ def main(argv: list[str] | None = None) -> int:
             per_rule = {r["rule_id"]: r["cnt"] for r in
                         viol.groupBy("rule_id").count().withColumnRenamed("count", "cnt").collect()}
             bad = [rid for rid, c in per_rule.items()
-                   if sevs.get(rid, "error") != "warn"
-                   and c > tols.get(rid, 0.0) * n_rows]
+                   if not verdict_gate([{"violation_count": c, "row_count": n_rows,
+                                         "severity": sevs.get(rid),
+                                         "tolerance": tols.get(rid)}])]
             report["rule_violations"] = per_rule
             report["rule_failing"] = sorted(bad)
             failed = failed or bool(bad)

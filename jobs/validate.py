@@ -3,10 +3,14 @@
     spark-submit --py-files dist/lyra_spark.zip jobs/validate.py \
         --table <parquet dir | iceberg:catalog.table> \
         --tools-dim <parquet> --checkpoint <dir> --run-id <id> \
-        [--out <violations dir>] [--partitions N] [--drift-col "length(text)"]
+        [--out <violations dir>] [--limit-partitions N] [--drift-col "length(text)"]
 
-Per pending partition: scoped scan (partition-pruned) → full suite →
-violation sink → manifest update with lineage + timing. Resume: re-run with
+Pending partitions go in batches of up to the session's default
+parallelism (enough partitions to keep every task slot busy; a crash loses
+at most one batch). Per batch: one scoped scan (partition-pruned) → one full
+suite pass, each conversation checked within its own partition → the batch's
+partition dirs of every output replaced → one manifest save, recording each
+partition with lineage and the batch wall split evenly. Resume: re-run with
 the same --run-id skips completed partitions whose rule fingerprint matches.
 A final drift pass merges per-partition t-digests tree-wise.
 """
@@ -22,7 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lyra_spark import checkpoint as ckpt
 from lyra_spark import io as lio
-from lyra_spark.presets import transcript_ruleset, validate_transcripts
+from lyra_spark import presets
 from lyra_spark.session import get_spark
 
 
@@ -40,25 +44,6 @@ DEFAULT_TRANSITIONS = {
     ("tool", "tool"),
     ("user", "tool"),
 }
-
-
-def rule_ids(
-    ruleset, check_transitions: bool = False, check_placement: bool = False
-) -> list[str]:
-    """Suite rule ids: the row rules plus the dataset checks (the same grid
-    run_suite uses); + the transition/placement rules when their flags are on."""
-    from lyra_spark.checks import MONO_RULE, PLACEMENT_RULE, TRANSITION_RULE, UNIQ_RULE
-    from lyra_spark.fused import REF_RULE
-
-    ids = [r.rule_id for r in ruleset.checks]
-    for extra in (REF_RULE, UNIQ_RULE, MONO_RULE):
-        if extra not in ids:
-            ids.append(extra)
-    if check_transitions:
-        ids.append(TRANSITION_RULE)
-    if check_placement:
-        ids.append(PLACEMENT_RULE)
-    return ids
 
 
 def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = None) -> int:
@@ -80,12 +65,6 @@ def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = Non
     ap.add_argument("--save-reference", default=None,
                     help="persist this run's global drift digest here (tomorrow's --reference)")
     ap.add_argument("--limit-partitions", type=int, default=None, help="validate at most N pending partitions")
-    ap.add_argument("--concurrency", type=int, default=1,
-                    help="partitions validated concurrently (driver threads + FAIR "
-                         "scheduler pools). 1 = serial (v1 behavior). At 10^5 Iceberg "
-                         "partitions the per-partition driver gaps (planning, manifest "
-                         "IO) serialize a single-threaded loop; K threads keep the "
-                         "cluster busy through them")
     ap.add_argument("--hll-cols", default=None,
                     help="comma-separated columns: persist per-partition DataSketches HLL "
                          "blobs next to the verdicts; the global distinct estimate then "
@@ -172,35 +151,23 @@ def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = Non
         raise SystemExit("--metric-history requires --metric-rules (there is no "
                          "metric grid to store without declared metric rules)")
 
-    # Shuffle partitions sized by DATA, not core count: each per-partition run
-    # shuffles one date's rows on conv_id, so the right granularity is
-    # ~100 MB of that date's input per shuffle partition (at 10^12 turns a
-    # date is ~100s of GB → thousands of partitions regardless of cores;
-    # cores-sized shuffling would hand every sort task the whole date and
-    # spill). AQE coalesces any excess at runtime; Iceberg URIs fall back to
-    # the session default (manifests carry the sizes in prod).
-    shuf = None
+    spark = get_spark(master=args.master, app_name=f"lyra_validate_{args.run_id}")
+    batch_size = spark.sparkContext.defaultParallelism
+    # Shuffle partitions sized by DATA, not core count: each batch shuffles
+    # its dates' rows on conv_id, so the right granularity is ~100 MB of the
+    # batch's input per shuffle partition (at 10^12 turns a date is ~100s of
+    # GB → thousands of partitions regardless of cores; cores-sized shuffling
+    # would hand every sort task whole dates and spill). AQE coalesces any
+    # excess at runtime; Iceberg URIs keep the session default (manifests
+    # carry the sizes in prod).
     if os.path.isdir(args.table):
         import glob as _glob
 
         files = _glob.glob(os.path.join(args.table, "*", "*.parquet"))
-        dates = {os.path.dirname(f) for f in files}
-        if files and dates:
-            per_date = sum(os.path.getsize(f) for f in files) // len(dates)
-            shuf = max(os.cpu_count() or 8, per_date // (100 << 20) + 1)
-    spark = get_spark(
-        master=args.master,
-        app_name=f"lyra_validate_{args.run_id}",
-        shuffle_partitions=shuf,
-        # FAIR scheduling only matters with concurrent partition batches; it is
-        # a context-construction conf, so a pre-existing session keeps FIFO.
-        extra_conf={"spark.scheduler.mode": "FAIR"} if args.concurrency > 1 else None,
-    )
-    # Pre-set the sink's AQE coalesce floor ONCE: write_violations' auto mode
-    # then never mutates the session-global conf per write, so concurrent
-    # partition writes (--concurrency>1) neither race on it nor serialize
-    # behind its lock (lyra_spark.io._AQE_FLOOR_LOCK).
-    spark.conf.set(lio._AQE_FLOOR_KEY, lio._AQE_FLOOR_VALUE)
+        if files:
+            per_date = sum(os.path.getsize(f) for f in files) // len({os.path.dirname(f) for f in files})
+            shuf = max(os.cpu_count() or 8, per_date * batch_size // (100 << 20) + 1)
+            spark.conf.set("spark.sql.shuffle.partitions", str(shuf))
     df = lio.read_transcripts(spark, args.table)
     if args.check_schema:
         from lyra_spark.schema import TRANSCRIPTS_SCHEMA, assert_schema, schema_diff
@@ -219,12 +186,12 @@ def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = Non
               f"(fingerprint {ruleset.fingerprint()}, "
               f"{len(cfg_checks)} declared dataset check(s))")
     else:
-        ruleset = transcript_ruleset()
+        ruleset = presets.transcript_ruleset()
     hll_cols = [c.strip() for c in args.hll_cols.split(",") if c.strip()] if args.hll_cols else []
     # Per-partition row counts from table metadata (parquet footers locally,
     # Iceberg manifests in prod — one TableCatalog interface either way):
     # computed once, reused by every --out verdict roll-up below so the loop
-    # never rescans a partition just to count it.
+    # never rescans a batch just to count it.
     if catalog is None:
         catalog = lio.catalog_for(spark, args.table)
     meta_counts = catalog.partition_record_counts()
@@ -280,16 +247,6 @@ def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = Non
 
     verdicts_out = args.verdicts_out or os.path.join(args.checkpoint, args.run_id, "verdicts")
     hll_out = os.path.join(args.checkpoint, args.run_id, "hll")
-    # Per-partition action budget (the driver loop is SERIAL over up to 10^5
-    # Iceberg partitions, so every extra job is a scale tail):
-    #   1. violation sink write (the one full compute of the pipeline), when
-    #      --out is given;
-    #   2. verdict collect — row/violation counts come from the collected
-    #      verdict frame (rules × 1 partition rows), never from re-reading the
-    #      sink or rescanning the partition;
-    #   (3.) optional HLL sketch pass when --hll-cols is set.
-    # The verdict parquet is then written from the ALREADY-COLLECTED local
-    # rows — a no-scan job.
     transitions = DEFAULT_TRANSITIONS
     if args.allowed_transitions:
         # accept both 'a>b' and the 'a->b' notation the violation output
@@ -324,191 +281,158 @@ def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = Non
             args.check_placement = True
             placement_ts = chk["ts_col"]
 
-    clean_rules = clean_ds_rules = None
-    if args.clean_out or args.quarantine_out:
-        # loop-invariant: inline_referential_rule collects the dim ONCE here;
-        # building it inside validate_partition would re-run that collect per
-        # partition (1e5 identical driver-blocking jobs at the design point)
-        from lyra_spark.checks import (
-            MONO_RULE,
-            PLACEMENT_RULE,
-            TRANSITION_RULE,
-            UNIQ_RULE,
-        )
-        from lyra_spark.fused import inline_referential_rule
-        from lyra_spark.rules import RuleSet
+    # Referential rule compiled ONCE per run: inline_referential_rule collects
+    # the (tiny) dim, and the suite then reuses the compiled rule instead of
+    # re-collecting per batch. Manifest fingerprints stay the config ruleset's.
+    from lyra_spark.engine import (
+        clean_rows,
+        compute_verdicts,
+        quarantine_rows,
+        ruleset_severities,
+        ruleset_tolerances,
+        verdict_gate,
+    )
+    from lyra_spark.fused import REF_RULE, inline_referential_rule, suite_rule_ids
+    from lyra_spark.rules import RuleSet
 
-        clean_rules = RuleSet(ruleset.rules + [inline_referential_rule(dim)])
-        clean_ds_rules = (
-            [UNIQ_RULE, MONO_RULE]
-            + ([TRANSITION_RULE] if args.check_transitions else [])
-            + ([PLACEMENT_RULE] if args.check_placement else [])
-        )
+    suite_rules = (
+        ruleset if any(r.rule_id == REF_RULE for r in ruleset.rules)
+        else RuleSet(ruleset.rules + [inline_referential_rule(dim)])
+    )
+    rule_ids = suite_rule_ids(suite_rules, args.check_transitions, args.check_placement)
+    row_rule_ids = {r.rule_id for r in suite_rules.checks}
+    ds_rule_ids = [rid for rid in rule_ids if rid not in row_rule_ids]
+    severities, tolerances = ruleset_severities(suite_rules), ruleset_tolerances(suite_rules)
 
+    # Every output keeps one dir per partition, <dir>/part=<pk>/. A batch
+    # first deletes its own keys' dirs in every output, then appends its rows
+    # partitioned by the `part` key column (lio.partition_key) — so a
+    # re-validated partition that comes out clean keeps no stale files, and
+    # other partitions' dirs are never touched.
+    from pyspark.sql import functions as F
 
-    def verdict_gate(vrows) -> bool:
-        """The partition's ACTUAL gate from its collected verdict grid —
-        replicating engine.partition_pass semantics driver-side: warn rules
-        never gate; a tolerance column makes pass = within-rate (NULL
-        tolerance fails safe to strict). Raw violation counts stay the
-        report; this is what the checkpoint/CI should call pass/fail."""
-        ok = True
-        for r in vrows:
-            d = r.asDict()
-            if (d.get("severity") or "error") == "warn":
-                continue
-            vc, rc = d["violation_count"], d["row_count"]
-            if "tolerance" in d:
-                ok = ok and vc <= (d["tolerance"] or 0.0) * rc
-            else:
-                ok = ok and vc == 0
-        return ok
+    part_key = lio.partition_key()
+    outputs = [d for d in (args.out, verdicts_out, args.clean_out, args.quarantine_out,
+                           hll_out if hll_cols else None) if d]
 
-    def validate_partition(pk: str) -> tuple[str, int, int, bool, float]:
-        from lyra_spark.engine import ruleset_severities, ruleset_tolerances
+    def empty(schema):
+        # no partitions, so no task and no Python worker
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
 
+    def write_parts(frame, out_dir: str, batch: list[str]) -> None:
+        frame.write.mode("append").partitionBy("part").parquet(out_dir)
+        # a key without rows still gets its dir, holding one empty file that
+        # carries the schema, so every batch partition's output reads back
+        for uri, exists in lio.partition_dirs(spark, out_dir, batch, "part"):
+            if not exists:
+                empty(frame.drop("part").schema).write.parquet(uri)
+
+    # Action budget per BATCH: the violation sink write (the one full compute
+    # of the pipeline) when --out is given, one verdict roll-up over the tiny
+    # written sink and its collect (row and violation counts come from the
+    # collected grid, never from a rescan), the no-scan verdict write from
+    # those local rows, and the optional clean/quarantine/HLL writes.
+    for start in range(0, len(pending), batch_size):
+        batch = pending[start : start + batch_size]
         t0 = time.perf_counter()
-        scoped = lio.partition_scope(df, pk)
+        for d in outputs:
+            lio.delete_partition_dirs(spark, d, batch, "part")
+        scoped = lio.partition_scope(df, batch)
         # transitions fuse into the suite's single conv exchange and placement
-        # into its row-rule scan — no separate scan or shuffle per partition
-        # for either dataset check
-        result = validate_transcripts(
-            scoped, dim, ruleset=ruleset,
+        # into its row-rule scan; conversations are checked per partition so
+        # a partition's result never depends on its batch mates
+        result = presets.validate_transcripts(
+            scoped, dim, ruleset=suite_rules,
             transitions=transitions if args.check_transitions else None,
             allowed_first=allowed_first,
             placement_ts=placement_ts if args.check_placement else None,
+            convs_per_partition=True,
         )
+        viol = result.violations
         if args.out:
             # write-then-reuse: violations compute once into the sink; the
             # verdict roll-up aggregates the WRITTEN files (never recomputes)
-            out_pk = f"{args.out}/part={pk}"
-            lio.write_violations(result.violations, out_pk, partition_col="part_date")
-            # explicit schema: a clean partition's sink holds only _SUCCESS and
-            # schema inference would throw UNABLE_TO_INFER_SCHEMA
-            viol = spark.read.schema(result.violations.schema).parquet(out_pk)
-            if meta_counts is not None and pk in meta_counts:
-                # row count from table metadata + violation counts from the
-                # tiny written sink — no rescan of the partition for counting
-                from lyra_spark.presets import verdicts_from_metadata
-
-                verd = verdicts_from_metadata(
-                    scoped, viol,
-                    rule_ids(ruleset, args.check_transitions, args.check_placement),
-                    "part_date", {pk: meta_counts[pk]},
-                    severities=ruleset_severities(ruleset),
-                    tolerances=ruleset_tolerances(ruleset),
+            lio.write_violations(viol.withColumn("part", part_key), args.out,
+                                 partition_col=["part", "part_date"], mode="append")
+            # a clean partition gets no sink dir: read only the dirs written
+            # (explicit schema), or an empty frame when the batch is clean
+            written = [uri for uri, exists in lio.partition_dirs(spark, args.out, batch, "part") if exists]
+            viol = (spark.read.schema(viol.schema).option("basePath", args.out).parquet(*written)
+                    if written else empty(viol.schema))
+            if meta_counts is not None and all(pk in meta_counts for pk in batch):
+                # row counts from table metadata + violation counts from the
+                # tiny written sink — no rescan of the batch for counting
+                verd = presets.verdicts_from_metadata(
+                    scoped, viol, rule_ids, "part_date", {pk: meta_counts[pk] for pk in batch},
+                    severities=severities, tolerances=tolerances,
                 )
             else:
-                from lyra_spark.engine import compute_verdicts
-
-                verd = compute_verdicts(
-                    scoped, viol,
-                    rule_ids(ruleset, args.check_transitions, args.check_placement),
-                    "part_date",
-                    severities=ruleset_severities(ruleset),
-                    tolerances=ruleset_tolerances(ruleset),
-                )
+                verd = compute_verdicts(scoped, viol, rule_ids, "part_date",
+                                        severities=severities, tolerances=tolerances)
         else:
             # both dataset checks are fused into the suite, so its verdict
             # grid is already complete — no rebuild pass needed
             verd = result.verdicts
         if args.clean_out or args.quarantine_out:
-            from pyspark.sql import functions as F
-
-            from lyra_spark.engine import clean_rows, quarantine_rows
-
-            # dataset-check keys come from the written sink when available
-            # (tiny read), else from the result frame (recompute of the
-            # windowed branch — still ≪ a second full suite)
-            src = viol if args.out else result.violations
+            # Row rules (the inlined referential check included) filter
+            # map-only on the scan; rows keyed by dataset-check violations —
+            # from the written sink when there is one, else recomputed from
+            # the result frame — are subtracted or marked via a broadcast
+            # join on (conv_id, turn_idx, part), so the batch never shuffles
             ds_keys = (
-                src.filter(F.col("rule_id").isin(*clean_ds_rules))
-                .select("conv_id", "turn_idx")
+                viol.filter(F.col("rule_id").isin(*ds_rule_ids))
+                .select("conv_id", "turn_idx", part_key.alias("part"))
                 .distinct()
             )
+            keyed = scoped.withColumn("part", part_key)
+            join_cols = ["conv_id", "turn_idx", "part"]
             if args.clean_out:
-                clean = clean_rows(scoped, clean_rules).join(
-                    F.broadcast(ds_keys), ["conv_id", "turn_idx"], "left_anti"
-                )
-                clean.write.mode("overwrite").parquet(os.path.join(args.clean_out, f"part={pk}"))
+                clean = clean_rows(keyed, suite_rules).join(F.broadcast(ds_keys), join_cols, "left_anti")
+                write_parts(clean, args.clean_out, batch)
             if args.quarantine_out:
                 # full failing rows: rule failures via the negated map-only
                 # predicate, dataset-check keys OR'd in as a broadcast marker
                 # — together the exact complement of the clean side
-                marked = scoped.join(
-                    F.broadcast(ds_keys.withColumn("__ds_fail", F.lit(True))),
-                    ["conv_id", "turn_idx"], "left",
+                marked = keyed.join(
+                    F.broadcast(ds_keys.withColumn("__ds_fail", F.lit(True))), join_cols, "left"
                 )
-                quar = quarantine_rows(
-                    marked, clean_rules, extra_fail=[F.col("__ds_fail")]
-                ).drop("__ds_fail")
-                quar.write.mode("overwrite").parquet(
-                    os.path.join(args.quarantine_out, f"part={pk}")
-                )
-        vrows = verd.collect()
-        n_rows = max((r["row_count"] for r in vrows), default=0)
-        n_viol = sum(r["violation_count"] for r in vrows)
-        gate = verdict_gate(vrows)
-        # pandas in, Arrow across: createDataFrame(list-of-Rows) would become a
-        # pickled RDD whose single task launches a Python worker just to
-        # unpickle ~|rules| rows — ~1 s of zero-CPU wall per partition, a real
-        # tail at 10^5 partitions. The pandas path is a driver-side Arrow
-        # conversion into a pure-JVM LocalRelation.
-        import pandas as pd
-
-        vp = pd.DataFrame([r.asDict() for r in vrows], columns=verd.columns)
-        spark.createDataFrame(vp, schema=verd.schema).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(verdicts_out, f"part={pk}")
-        )
+                quar = quarantine_rows(marked, suite_rules, extra_fail=[F.col("__ds_fail")])
+                write_parts(quar.drop("__ds_fail"), args.quarantine_out, batch)
         if hll_cols:
             from lyra_spark.stats import hll_sketches
 
-            hll_sketches(scoped, hll_cols, partition_col=None).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(hll_out, f"part={pk}"))
-        return pk, n_rows, n_viol, gate, (time.perf_counter() - t0) * 1000
+            sk = hll_sketches(scoped.withColumn("part", part_key), hll_cols, partition_col="part")
+            write_parts(sk.coalesce(1), hll_out, batch)
+        vrows = verd.collect()
+        # pandas in, Arrow across: createDataFrame(list-of-Rows) would become a
+        # pickled RDD whose single task launches a Python worker just to
+        # unpickle ~|rules| x |batch| rows. The pandas path is a driver-side
+        # Arrow conversion into a pure-JVM LocalRelation.
+        import pandas as pd
 
-    def record(pk: str, n_rows: int, n_viol: int, gate: bool, wall_ms: float) -> None:
-        manifest.record(pk, ruleset, rows=n_rows, violations=n_viol, wall_ms=wall_ms,
-                        snapshot_id=snapshot_id)
+        vp = pd.DataFrame([r.asDict() for r in vrows], columns=verd.columns)
+        local = spark.createDataFrame(vp, schema=verd.schema).withColumn("part", part_key)
+        write_parts(local.coalesce(1), verdicts_out, batch)
+        wall_ms = (time.perf_counter() - t0) * 1000 / len(batch)
+        by_part: dict[str, list] = {pk: [] for pk in batch}
+        for r in vrows:
+            by_part.setdefault(str(r["part_date"]), []).append(r)
+        for pk in batch:
+            rows = by_part[pk]
+            n_rows = max((r["row_count"] for r in rows), default=0)
+            n_viol = sum(r["violation_count"] for r in rows)
+            manifest.record(pk, ruleset, rows=n_rows, violations=n_viol, wall_ms=wall_ms,
+                            snapshot_id=snapshot_id)
+            # `pass` is the partition's ACTUAL gate (tolerance- and
+            # severity-aware), not violations == 0 — a within-tolerance
+            # partition reports its raw counts AND pass=true, like the grid
+            report["partitions"].append(
+                {"partition": str(pk), "rows": n_rows, "violations": n_viol,
+                 "wall_ms": round(wall_ms, 1), "pass": verdict_gate(rows)}
+            )
+            print(f"[lyra] partition={pk} rows={n_rows} violations={n_viol} wall_ms={wall_ms:.0f}")
+        # recorded only after every output of the batch is written
         ckpt.save_manifest(args.checkpoint, manifest)
-        # `pass` is the partition's ACTUAL gate (verdict_gate: tolerance- and
-        # severity-aware), not violations == 0 — a within-tolerance partition
-        # reports its raw counts AND pass=true, exactly like the verdict grid
-        report["partitions"].append(
-            {"partition": str(pk), "rows": n_rows, "violations": n_viol,
-             "wall_ms": round(wall_ms, 1), "pass": gate}
-        )
-        print(f"[lyra] partition={pk} rows={n_rows} violations={n_viol} wall_ms={wall_ms:.0f}")
-
-    if args.concurrency <= 1:
-        for pk in pending:
-            record(*validate_partition(pk))
-    else:
-        # K partitions in flight: driver threads submit independent job DAGs;
-        # FAIR pools stop one partition's long stage from starving the others'
-        # job submission (jobs/validate sets scheduler.mode=FAIR at session
-        # build; an already-running session falls back to FIFO, still correct).
-        # Manifest updates are driver-local and guarded by a lock; each
-        # partition's outputs live under disjoint part=<pk>/ paths, so
-        # concurrent partitions never touch the same files. Checkpoint
-        # semantics are unchanged: a partition is recorded only after its
-        # sink + verdict writes completed — a crash mid-batch loses only
-        # in-flight partitions, exactly as the serial loop does.
-        import threading
-        from concurrent.futures import ThreadPoolExecutor
-
-        lock = threading.Lock()
-
-        def worker(pk: str) -> None:
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", f"validate_{hash(pk) % args.concurrency}")
-            res = validate_partition(pk)
-            with lock:
-                record(*res)
-
-        with ThreadPoolExecutor(max_workers=args.concurrency) as ex:
-            for f in [ex.submit(worker, pk) for pk in pending]:
-                f.result()  # propagate the first failure
 
     if hll_cols:
         # Global distinct estimates from the STORED blobs — covers completed

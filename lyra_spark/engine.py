@@ -10,6 +10,7 @@ only aggregations.
 
 from __future__ import annotations
 
+import warnings
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -311,6 +312,22 @@ def partition_pass(verdicts: DataFrame, partition_col: str = "part_date") -> Dat
     )
 
 
+def verdict_gate(rows) -> bool:
+    """partition_pass's gate over ONE partition's already-collected verdict
+    rows (``Row``s or dicts), evaluated driver-side without a Spark job: True
+    iff every gating rule is within tolerance. Same cell semantics: a "warn"
+    severity never gates, a NULL severity gates, a NULL tolerance is strict,
+    and without a tolerance cell a rule passes only at zero violations."""
+    for r in rows:
+        d = r if isinstance(r, dict) else r.asDict()
+        if (d.get("severity") or "error") == "warn":
+            continue
+        limit = (d["tolerance"] or 0.0) * d["row_count"] if "tolerance" in d else 0
+        if d["violation_count"] > limit:
+            return False
+    return True
+
+
 def validate(
     df: DataFrame,
     ruleset: RuleSet,
@@ -330,7 +347,17 @@ def validate(
     verdict grid; each frame must share the violation schema (when
     ``messages=True`` they gain a generic '<rule_id> failed' message so the
     union stays schema-equal).
+
+    ``abort_early=True`` warns: each failing row then counts toward its
+    first failing rule only, so every later rule's verdict count, and any
+    per-rule gate built from these violations, is an undercount.
     """
+    if abort_early:
+        warnings.warn(
+            "abort_early attributes each row to its FIRST failing rule only; "
+            "per-rule verdict counts and gates see undercounts — drop it for gating runs",
+            stacklevel=2,
+        )
     viol = row_violations(df, ruleset, key_cols, partition_col,
                           messages=messages, abort_early=abort_early)
     for ev in extra_violations or []:

@@ -53,6 +53,20 @@ def inline_referential_rule(df_dim: DataFrame, fk_col: str = "tool", dim_col: st
     return enum(fk_col, values, rule_id=rule_id)
 
 
+def suite_rule_ids(ruleset: RuleSet, transitions: bool = False, placement: bool = False) -> list[str]:
+    """The full suite's verdict-grid rule ids, in grid order: the ruleset's
+    checks, then the referential/uniqueness/monotone dataset checks (unless
+    the ruleset already carries them), then the transition and placement
+    checks when enabled."""
+    ids = [r.rule_id for r in ruleset.checks]
+    ids += [rid for rid in (REF_RULE, UNIQ_RULE, MONO_RULE) if rid not in ids]
+    if transitions:
+        ids.append(TRANSITION_RULE)
+    if placement:
+        ids.append(PLACEMENT_RULE)
+    return ids
+
+
 def conv_scoped_violations(
     df: DataFrame,
     key_cols: list[str] = KEY_COLUMNS,
@@ -66,9 +80,17 @@ def conv_scoped_violations(
     allowed_first: set | None = None,
     state_col: str = "role",
     transition_rule_id: str = TRANSITION_RULE,
+    convs_per_partition: bool = False,
 ) -> DataFrame:
     """Uniqueness + monotone (+ optionally transition) violations off ONE
     exchange on (conv_id, bucket).
+
+    ``convs_per_partition``: a conversation whose turns span several
+    partitions is ordered and transition-checked within each partition
+    separately, so every partition's violations depend on that partition's
+    rows alone — the contract of a caller that validates a batch of
+    partitions in one pass but records each partition on its own. By default
+    a conversation is checked across every partition of ``df``.
 
     Skew-proof lag: windowing ``partitionBy(conv_id)`` puts a whole
     conversation in one task — a hot conversation holding 10% of 10^12 turns
@@ -130,8 +152,20 @@ def conv_scoped_violations(
         ]
     else:
         shared_order = mono_order
-    w_mono = Window.partitionBy(group_col, "__bkt__").orderBy(*shared_order)
-    w_dup = Window.partitionBy(group_col, "__bkt__", order_col, partition_col)
+    # per-partition scope: the conversation key gains a never-NULL partition
+    # token, so the boundary equi-join below also matches the NULL partition
+    conv_keys = [group_col, "__scope__"] if convs_per_partition else [group_col]
+    scope_proj = (
+        [F.coalesce(F.col(partition_col).cast("string"), F.lit("\x00NULL")).alias("__scope__")]
+        if convs_per_partition
+        else []
+    )
+    w_mono = Window.partitionBy(*conv_keys, "__bkt__").orderBy(*shared_order)
+    # (conv, scope, bkt, turn) names the same groups as (conv, bkt, turn,
+    # part) and keeps the dup window's sort a prefix of the mono window's
+    w_dup = Window.partitionBy(
+        *conv_keys, "__bkt__", order_col, *([] if convs_per_partition else [partition_col])
+    )
     # ONE explicit exchange feeds the window stack AND the boundary aggregate
     # (ReusedExchange) — the boundary branch costs no second scan of the table.
     # The explicit NULL-key filter does two jobs: rows with NULL conv_id /
@@ -145,7 +179,7 @@ def conv_scoped_violations(
     # pruning it from only one branch would defeat ReusedExchange.
     tr_proj = [transition_state(state_col).alias("__cur__")] if with_tr else []
     dfb = (
-        df.select(*keep, ts_col, bkt.alias("__bkt__"), *tr_proj)
+        df.select(*keep, ts_col, bkt.alias("__bkt__"), *tr_proj, *scope_proj)
         .filter(F.col(group_col).isNotNull() & F.col("__bkt__").isNotNull())
         .repartition(group_col, "__bkt__")
     )
@@ -156,7 +190,7 @@ def conv_scoped_violations(
     # construction (hot conv of 10^11 turns → ~10^7 boundary rows; boundary
     # is 1/4096 of input). groupBy keys equal the exchange keys, so the
     # aggregate runs in place with no further shuffle.
-    w_bnd = Window.partitionBy(group_col).orderBy("__bkt__")
+    w_bnd = Window.partitionBy(*conv_keys).orderBy("__bkt__")
     # The struct includes partition_col under partition_from_ts: same max row
     # (the ordering equivalence above), and consuming it keeps the boundary
     # branch's column set identical to the main branch's so column pruning
@@ -167,10 +201,10 @@ def conv_scoped_violations(
     # fused check adds no boundary aggregate of its own.
     last_struct = F.struct(*shared_order)
     boundary = (
-        dfb.groupBy(group_col, "__bkt__")
+        dfb.groupBy(*conv_keys, "__bkt__")
         .agg(F.max(last_struct).alias("__last__"))
         .select(
-            group_col,
+            *conv_keys,
             "__bkt__",
             F.lag(F.col(f"__last__.{ts_col}")).over(w_bnd).alias("__prev_bucket_ts__"),
             *(
@@ -191,6 +225,7 @@ def conv_scoped_violations(
         *keep,
         ts_col,
         "__bkt__",
+        *(["__scope__"] if convs_per_partition else []),
         F.lag(ts_col).over(w_mono).alias("__prev_in_bucket__"),
         F.row_number().over(w_mono).alias("__mono_rn__"),
         F.lag(order_col).over(w_mono).alias("__prev_turn__"),
@@ -207,7 +242,7 @@ def conv_scoped_violations(
             if with_tr
             else []
         ),
-    ).join(boundary, [group_col, "__bkt__"], "left").withColumn(
+    ).join(boundary, [*conv_keys, "__bkt__"], "left").withColumn(
         "__prev_ts__",
         F.when(F.col("__mono_rn__") == 1, F.col("__prev_bucket_ts__")).otherwise(F.col("__prev_in_bucket__")),
     )
@@ -284,6 +319,7 @@ def validate_transcripts_fused(
     transitions: set | None = None,
     allowed_first: set | None = None,
     placement_ts: str | None = None,
+    convs_per_partition: bool = False,
 ) -> ValidationResult:
     """Full suite in two data passes (see module docstring).
 
@@ -292,7 +328,8 @@ def validate_transcripts_fused(
     column name) fuses the partition-placement check into the row-rule scan
     (checks.placement_check riding engine.row_violations' compiled array) —
     the suite stays at two data passes and one shuffle with all five checks
-    enabled.
+    enabled. ``convs_per_partition`` scopes the conversation checks to each
+    partition (see conv_scoped_violations).
 
     partition_from_ts declares the table-layout invariant part_date = date(ts)
     (the standard Iceberg days(ts) layout), which lets the conv checks share
@@ -324,18 +361,14 @@ def validate_transcripts_fused(
     conv_v = conv_scoped_violations(
         df, key_cols, partition_col, bucket_turns=bucket_turns,
         partition_from_ts=partition_from_ts, transitions=transitions,
-        allowed_first=allowed_first,
+        allowed_first=allowed_first, convs_per_partition=convs_per_partition,
     )
     # column order must match for union
     cols = [*key_cols, partition_col, "rule_id", "observed_value"]
     viol = row_v.select(*cols).unionByName(conv_v.select(*cols))
     if persist:
         viol = viol.persist(StorageLevel.MEMORY_AND_DISK)
-    rule_ids = [r.rule_id for r in fused_rules.checks] + [UNIQ_RULE, MONO_RULE]
-    if transitions is not None:
-        rule_ids.append(TRANSITION_RULE)
-    if placement_ts is not None:
-        rule_ids.append(PLACEMENT_RULE)
+    rule_ids = suite_rule_ids(fused_rules, transitions is not None, placement_ts is not None)
     from lyra_spark.engine import ruleset_severities, ruleset_tolerances
 
     verd = compute_verdicts(df, viol, rule_ids, partition_col,

@@ -10,7 +10,6 @@ only by its error message here, by design.
 from __future__ import annotations
 
 import os
-import threading
 import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -18,21 +17,18 @@ from pyspark.sql import functions as F
 
 from lyra_spark.schema import PARTITION_COLUMN
 
-# Serializes the session-global AQE-conf set/restore in write_violations'
-# auto mode: concurrent writers (jobs/validate --concurrency>1) could
-# otherwise read a sibling's temporary value as "previous" and restore it
-# permanently, or flip the conf under a sibling's in-flight write.
-_AQE_FLOOR_LOCK = threading.Lock()
 _AQE_FLOOR_KEY = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
 _AQE_FLOOR_VALUE = "64KB"
 HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _conf_bytes(value: str) -> int:
-    """Parse a Spark byte-size conf ('134217728', '128m', '64KB') to bytes."""
+    """Parse a Spark byte-size conf ('134217728', '128m', '64KB', '1t') to
+    bytes; raises ValueError on anything else."""
     v = value.strip().lower()
     for suffix, mult in (("kb", 1 << 10), ("k", 1 << 10), ("mb", 1 << 20), ("m", 1 << 20),
-                         ("gb", 1 << 30), ("g", 1 << 30), ("b", 1)):
+                         ("gb", 1 << 30), ("g", 1 << 30), ("tb", 1 << 40), ("t", 1 << 40),
+                         ("pb", 1 << 50), ("p", 1 << 50), ("b", 1)):
         if v.endswith(suffix):
             return int(float(v[: -len(suffix)])) * mult
     return int(v)
@@ -64,15 +60,15 @@ def planned_scan_tasks(df: DataFrame) -> int | None:
     unavailable: non-file sources (in-memory test relations are already
     parallelized by createDataFrame), remote URIs we cannot stat (a real
     cluster's tables are well-split by the writer layout contract), or any
-    stat failure.
+    stat failure, or a ``maxPartitionBytes`` value it cannot parse.
     """
     try:
         files = df.inputFiles()
+        mpb = _conf_bytes(df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
     except Exception:
         return None
     if not files:
         return None
-    mpb = _conf_bytes(df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
     non_splittable = (".gz", ".zip", ".deflate", ".zst", ".bz2", ".xz", ".lz4", ".snappy")
     tasks = 0
     for uri in files:
@@ -125,23 +121,56 @@ def list_partitions(spark: SparkSession, df: DataFrame, partition_col: str = PAR
     return sorted(str(r[0]) for r in df.select(partition_col).distinct().collect())
 
 
-def partition_scope(df: DataFrame, partition_key: str, partition_col: str = PARTITION_COLUMN) -> DataFrame:
-    """Filter on the partition column — Catalyst turns this into partition
-    pruning, so a per-partition validation run scans ONLY that directory.
+def partition_key(partition_col: str = PARTITION_COLUMN):
+    """The string key of each row's partition, as list_partitions renders
+    it: the value cast to string, "None" for the NULL partition."""
+    return F.coalesce(F.col(partition_col).cast("string"), F.lit("None"))
+
+
+def partition_scope(
+    df: DataFrame, partition_keys: str | list[str], partition_col: str = PARTITION_COLUMN
+) -> DataFrame:
+    """Filter on the partition column (one key or a list of keys) — Catalyst
+    turns this into partition pruning, so a scoped validation run scans ONLY
+    those directories.
 
     The key "None" (how list_partitions renders a NULL partition value)
     ALSO scopes `partition_col IS NULL`: rows written to the NULL partition
     (Hive's __HIVE_DEFAULT_PARTITION__) would otherwise match no scope and
-    silently skip every check in the per-partition loop — the exact
+    silently skip every check in the partition loop — the exact
     escapes-all-pruned-queries failure the placement check exists to flag.
     For a date-typed partition column "None" can only mean NULL; a
     string-typed column whose literal value is "None" shares the scope
     (and both deserve the scrutiny).
     """
-    cond = F.col(partition_col).cast("string") == partition_key
-    if partition_key == "None":
+    keys = [partition_keys] if isinstance(partition_keys, str) else list(partition_keys)
+    cond = F.col(partition_col).cast("string").isin(keys)
+    if "None" in keys:
         cond = cond | F.col(partition_col).isNull()
     return df.filter(cond)
+
+
+def _partition_dirs_fs(spark: SparkSession, base: str, keys: list[str], col: str):
+    """(Hadoop Path, FileSystem) of ``<base>/<col>=<key>`` per key, the key
+    escaped the way ``partitionBy`` names its directories — any URI scheme."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    escape = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+    for key in keys:
+        path = jvm.org.apache.hadoop.fs.Path(base, f"{col}={escape(key)}")
+        yield path, path.getFileSystem(conf)
+
+
+def delete_partition_dirs(spark: SparkSession, base: str, keys: list[str], col: str) -> None:
+    """Remove ``<base>/<col>=<key>`` for each key (a missing dir is a no-op)."""
+    for path, fs in _partition_dirs_fs(spark, base, keys, col):
+        fs.delete(path, True)
+
+
+def partition_dirs(spark: SparkSession, base: str, keys: list[str], col: str) -> list[tuple[str, bool]]:
+    """(dir URI, exists) of ``<base>/<col>=<key>`` per key — a partitioned
+    write creates no dir for a key without rows."""
+    return [(path.toString(), fs.exists(path)) for path, fs in _partition_dirs_fs(spark, base, keys, col)]
 
 
 def _partition_dirs(path: str, partition_col: str) -> list[tuple[str, list[str]]] | None:
@@ -198,11 +227,17 @@ def partition_row_counts(path: str, partition_col: str = PARTITION_COLUMN) -> di
 def write_violations(
     violations: DataFrame,
     out_dir: str,
-    partition_col: str = PARTITION_COLUMN,
+    partition_col: str | list[str] = PARTITION_COLUMN,
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     buckets_per_partition: int | None = None,
+    mode: str = "overwrite",
 ) -> None:
     """Deterministic violation sink (BASELINE.json:6 byte-match contract).
+
+    ``partition_col`` may list several columns, outermost directory level
+    first. ``mode`` is the DataFrameWriter save mode: "overwrite" replaces
+    ``out_dir``; "append" adds partition dirs beside existing ones (the
+    caller clears the ones it rewrites).
 
     Parallelism — ``buckets_per_partition``:
       * ``None`` (default, auto): AQE REBALANCE on the date. Runtime shuffle
@@ -225,8 +260,9 @@ def write_violations(
     statistics, which are reproducible), and each file's row set is a
     deterministic slice of one (date[, bucket]) group — so every file's
     CONTENT is byte-stable across runs (pinned by the determinism test)."""
+    cols = [partition_col] if isinstance(partition_col, str) else list(partition_col)
     if buckets_per_partition is None:
-        shaped = violations.hint("rebalance", partition_col)
+        shaped = violations.hint("rebalance", *cols)
         # Parallelism floor for the write stage: AQE's coalescing normally
         # stops at minPartitionSize (1 MB), which at small violation volumes
         # collapses the write into a handful of tasks that then SERIALLY pay
@@ -235,49 +271,32 @@ def write_violations(
         # lets parallelismFirst spread the write over ~defaultParallelism
         # tasks; at real scale partitions are ≫ 1 MB and this is a no-op.
         # Scoped to this write: AQE reads the conf at execution time, and
-        # .parquet() below is eager. The conf is SESSION-GLOBAL, so:
-        #   * if it already holds the floor value (a concurrent caller set it
-        #     once up front, as jobs/validate does), write without touching it
-        #     — zero mutation, zero race;
-        #   * otherwise set/restore under a module lock. Concurrent writers
-        #     that skip the pre-set therefore serialize — pre-set the conf
-        #     before a concurrent loop to keep writes parallel.
+        # .parquet() below is eager. The conf is SESSION-GLOBAL: a concurrent
+        # writer on the same session could restore it under this write.
         conf = violations.sparkSession.conf
-        # The pre-set check MUST happen under the same lock the set/restore
-        # path holds for its whole write: checked lock-free, a caller could
-        # observe a sibling's TEMPORARY floor value, skip the lock, and have
-        # the sibling's finally-restore flip the conf under its in-flight
-        # write. Under the lock, conf == floor can only be the steady-state
-        # pre-set (temp holders always restore a non-floor value before
-        # releasing), so the fast path below is genuinely parallel.
-        with _AQE_FLOOR_LOCK:
-            preset = conf.get(_AQE_FLOOR_KEY, None) == _AQE_FLOOR_VALUE
-            if not preset:
-                prev = conf.get(_AQE_FLOOR_KEY, None)
-                conf.set(_AQE_FLOOR_KEY, _AQE_FLOOR_VALUE)
-                try:
-                    _write_shaped(shaped, out_dir, partition_col, key_cols)
-                finally:
-                    conf.set(_AQE_FLOOR_KEY, prev) if prev is not None else conf.unset(_AQE_FLOOR_KEY)
-                return
-        # pre-set by the session owner (jobs/validate does this before its
-        # concurrent loop): zero mutation — write without serializing
-        _write_shaped(shaped, out_dir, partition_col, key_cols)
+        prev = conf.get(_AQE_FLOOR_KEY, None)
+        conf.set(_AQE_FLOOR_KEY, _AQE_FLOOR_VALUE)
+        try:
+            _write_shaped(shaped, out_dir, cols, key_cols, mode)
+        finally:
+            conf.set(_AQE_FLOOR_KEY, prev) if prev is not None else conf.unset(_AQE_FLOOR_KEY)
         return
     elif buckets_per_partition > 1:
         bkt = F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(int(buckets_per_partition)))
-        shaped = violations.withColumn("__bkt__", bkt).repartition(partition_col, "__bkt__")
+        shaped = violations.withColumn("__bkt__", bkt).repartition(*cols, "__bkt__")
     else:
-        shaped = violations.repartition(partition_col)
-    _write_shaped(shaped, out_dir, partition_col, key_cols)
+        shaped = violations.repartition(*cols)
+    _write_shaped(shaped, out_dir, cols, key_cols, mode)
 
 
-def _write_shaped(shaped: DataFrame, out_dir: str, partition_col: str, key_cols: tuple[str, ...]) -> None:
+def _write_shaped(
+    shaped: DataFrame, out_dir: str, cols: list[str], key_cols: tuple[str, ...], mode: str
+) -> None:
     (
-        shaped.sortWithinPartitions(partition_col, *key_cols, "rule_id", "observed_value")
+        shaped.sortWithinPartitions(*cols, *key_cols, "rule_id", "observed_value")
         .drop("__bkt__")
-        .write.mode("overwrite")
-        .partitionBy(partition_col)
+        .write.mode(mode)
+        .partitionBy(*cols)
         .parquet(out_dir)
     )
 

@@ -37,6 +37,7 @@ def validate_transcripts(
     transitions: set | None = None,
     allowed_first: set | None = None,
     placement_ts: str | None = None,
+    convs_per_partition: bool = False,
 ) -> ValidationResult:
     """Full suite: row rules + uniqueness + referential + monotone ordering.
 
@@ -46,6 +47,8 @@ def validate_transcripts(
     ``allowed_first`` constrains each conversation's first role.
     ``placement_ts`` (a ts column name) adds the partition-placement check:
     fused into the row-rule scan, or as the composable map-only operator.
+    ``convs_per_partition`` (fused path only) checks each conversation within
+    each partition instead of across the whole frame.
 
     fused=True (default): two-pass plan — one scan for all row rules with the
     tools dim inlined, one conv_id exchange for uniqueness+monotone
@@ -74,6 +77,8 @@ def validate_transcripts(
     # well-defined — route there instead of crashing mid-plan
     if fused and partition_col is None:
         fused = False
+    if convs_per_partition and not fused:
+        raise ValueError("convs_per_partition needs the fused plan and a partition column")
     if fused:
         from lyra_spark.fused import validate_transcripts_fused
 
@@ -81,6 +86,7 @@ def validate_transcripts(
             df, tools_dim, ruleset, partition_col=partition_col, persist=persist,
             partition_from_ts=partition_from_ts, transitions=transitions,
             allowed_first=allowed_first, placement_ts=placement_ts,
+            convs_per_partition=convs_per_partition,
         )
     extra = [
         checks.uniqueness_violations(df, partition_col=partition_col),
@@ -146,9 +152,8 @@ def run_suite(
     scan and no join stages. Without it, verdicts fall back to the
     distributed compute_verdicts roll-up."""
     from lyra_spark import io as lio
-    from lyra_spark.checks import MONO_RULE, PLACEMENT_RULE, TRANSITION_RULE, UNIQ_RULE
     from lyra_spark.engine import compute_verdicts
-    from lyra_spark.fused import REF_RULE, validate_transcripts_fused
+    from lyra_spark.fused import suite_rule_ids, validate_transcripts_fused
 
     ruleset = ruleset or transcript_ruleset()
     res = validate_transcripts_fused(
@@ -161,14 +166,7 @@ def run_suite(
     # explicit schema: a clean run writes only _SUCCESS (no parquet files) and
     # schema inference would throw UNABLE_TO_INFER_SCHEMA on the empty sink
     viol = df.sparkSession.read.schema(violations.schema).parquet(out_dir)
-    rule_ids = [r.rule_id for r in ruleset.checks]
-    for extra in (REF_RULE, UNIQ_RULE, MONO_RULE):
-        if extra not in rule_ids:
-            rule_ids.append(extra)
-    if transitions is not None:
-        rule_ids.append(TRANSITION_RULE)
-    if check_placement:
-        rule_ids.append(PLACEMENT_RULE)
+    rule_ids = suite_rule_ids(ruleset, transitions is not None, check_placement)
     from lyra_spark.engine import ruleset_severities, ruleset_tolerances
 
     sev = ruleset_severities(ruleset)

@@ -61,6 +61,15 @@ def test_abort_early_equals_first_of_full_report(spark, df, rs):
     assert got == first
 
 
+def test_abort_early_warns_of_undercounted_gates(spark, df, rs):
+    """abort_early attributes a row to its first failing rule only, so the
+    library itself warns that per-rule counts and gates undercount."""
+    from lyra_spark.engine import validate
+
+    with pytest.warns(UserWarning, match="undercounts"):
+        validate(df, rs, key_cols=["id"], partition_col=None, abort_early=True)
+
+
 def test_message_excluded_from_fingerprint():
     base = R.enum("s", ["ok"])
     assert with_message(base, "reworded").fingerprint() == base.fingerprint()

@@ -16,6 +16,33 @@ def test_conf_bytes_parses_spark_size_strings():
     assert _conf_bytes("128MB") == 128 << 20
     assert _conf_bytes("64KB") == 64 << 10
     assert _conf_bytes("1g") == 1 << 30
+    assert _conf_bytes("1t") == 1 << 40
+    assert _conf_bytes("2TB") == 2 << 40
+    assert _conf_bytes("1p") == 1 << 50
+    assert _conf_bytes("1pb") == 1 << 50
+
+
+def test_planned_scan_tasks_unparsable_size_is_none(spark, tmp_path):
+    """A maxPartitionBytes value the parser cannot read makes the estimate
+    unavailable (None: no spread) instead of raising out of the guard."""
+    p = str(tmp_path / "one")
+    spark.range(10).coalesce(1).write.parquet(p)
+    real = spark.read.parquet(p)
+
+    class Conf:
+        def get(self, key, default=None):
+            return "12 parsecs"
+
+    class Session:
+        conf = Conf()
+
+    class Plan:
+        sparkSession = Session()
+
+        def inputFiles(self):
+            return real.inputFiles()
+
+    assert planned_scan_tasks(Plan()) is None
 
 
 def test_planned_scan_tasks_single_small_file(spark, tmp_path):

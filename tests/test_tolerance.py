@@ -13,7 +13,7 @@ import os
 import pytest
 
 from lyra_spark import rules as R
-from lyra_spark.engine import partition_pass, ruleset_tolerances, validate
+from lyra_spark.engine import partition_pass, ruleset_tolerances, validate, verdict_gate
 from lyra_spark.rules import RuleSet, ruleset_from_json, ruleset_to_json
 
 
@@ -87,6 +87,38 @@ def test_null_tolerance_fails_safe_to_strict(spark):
     nulled = res.verdicts.withColumn("tolerance", F.lit(None).cast("double"))
     pp = {r["part_date"]: r["pass"] for r in partition_pass(nulled).collect()}
     assert pp == {"2024-01-01": False, "2024-01-02": False}
+
+
+# (extra columns, grid rows (rule_id, violation_count, row_count, *extra), gate)
+GATE_GRIDS = {
+    "strict_clean": ([], [("a", 0, 10)], True),
+    "strict_dirty": ([], [("a", 0, 10), ("b", 2, 10)], False),
+    "warn_rows_never_gate": (["severity"], [("a", 0, 10, "error"), ("b", 5, 10, "warn")], True),
+    "error_row_gates_beside_warn": (["severity"], [("a", 1, 10, "error"), ("b", 5, 10, "warn")], False),
+    "null_severity_gates": (["severity"], [("a", 1, 10, None)], False),
+    # 0.3 * 10 is 3.0000000000000004 in doubles: exactly at the bound passes
+    "tolerance_at_boundary": (["tolerance"], [("a", 3, 10, 0.3), ("b", 1, 10, 0.1)], True),
+    "tolerance_just_above": (["tolerance"], [("a", 4, 10, 0.3)], False),
+    "null_tolerance_is_strict": (["tolerance"], [("a", 1, 10, None)], False),
+    "null_tolerance_clean": (["tolerance"], [("a", 0, 10, None)], True),
+    "warn_and_tolerance": (
+        ["severity", "tolerance"], [("a", 3, 10, "error", 0.3), ("b", 9, 10, "warn", 0.0)], True,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(GATE_GRIDS))
+def test_verdict_gate_equals_partition_pass(spark, case):
+    """The driver-side gate over collected verdict rows agrees with the
+    Spark roll-up on every cell semantic: warn, NULL severity, the tolerance
+    boundary and NULL tolerance."""
+    extra, grid, want = GATE_GRIDS[case]
+    types = {"severity": "string", "tolerance": "double"}
+    schema = ", ".join(["part_date string", "rule_id string", "violation_count long",
+                        "row_count long", *(f"{c} {types[c]}" for c in extra)])
+    verd = spark.createDataFrame([("d", *row) for row in grid], schema)
+    assert partition_pass(verd).collect()[0]["pass"] is want
+    assert verdict_gate(verd.collect()) is want
 
 
 def test_config_rejects_bad_tolerance():

@@ -8,3 +8,6 @@ test:
 
 bench:
 	python bench.py
+
+oracle:
+	python tools/check_oracle.py

@@ -3288,18 +3288,18 @@ def oracle_sql() -> dict[str, str]:
             ),
             scored AS (
                 SELECT day AS partition, rate AS metric,
-                       ROUND(AVG(rate) OVER (ORDER BY day
-                           ROWS BETWEEN 5 PRECEDING AND 1 PRECEDING), 6) AS expected,
-                       COUNT(*) OVER (ORDER BY day
+                       AVG(rate) OVER (ORDER BY day
+                           ROWS BETWEEN 5 PRECEDING AND 1 PRECEDING) AS e,
+                       COUNT(rate) OVER (ORDER BY day
                            ROWS BETWEEN 5 PRECEDING AND 1 PRECEDING) AS n_ref_parts
                 FROM rates
             )
-            SELECT partition, metric, expected,
-                   ROUND(ABS(metric - expected) / ABS(expected), 6) AS deviation,
+            SELECT partition, metric, ROUND(e, 6) AS expected,
+                   ROUND(ABS(metric - e) / ABS(e), 6) AS deviation,
                    n_ref_parts
             FROM scored
-            WHERE expected IS NOT NULL AND expected <> 0
-              AND ROUND(ABS(metric - expected) / ABS(expected), 6) > 0.6
+            WHERE metric IS NOT NULL AND e IS NOT NULL AND e <> 0
+              AND ABS(metric - e) / ABS(e) > 0.6
               AND n_ref_parts >= 1
         """,
         "reconcile": """
@@ -3725,16 +3725,16 @@ def oracle_sql() -> dict[str, str]:
             ),
             s AS (
                 SELECT day, row_count,
-                       ROUND(AVG(row_count) OVER (ORDER BY day ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING), 6) AS expected,
-                       COUNT(*) OVER (ORDER BY day ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING) AS n_ref_parts
+                       AVG(row_count) OVER (ORDER BY day ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING) AS e,
+                       COUNT(row_count) OVER (ORDER BY day ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING) AS n_ref_parts
                 FROM c
             )
-            SELECT day, row_count, expected,
-                   ROUND(ABS(row_count - expected) / expected, 6) AS deviation,
+            SELECT day, row_count, ROUND(e, 6) AS expected,
+                   ROUND(ABS(row_count - e) / ABS(e), 6) AS deviation,
                    n_ref_parts
             FROM s
-            WHERE expected IS NOT NULL AND expected > 0
-              AND ROUND(ABS(row_count - expected) / expected, 6) > 0.05
+            WHERE row_count IS NOT NULL AND e IS NOT NULL AND e <> 0
+              AND ABS(row_count - e) / ABS(e) > 0.05
               AND n_ref_parts >= 1
         """,
         "incremental_neardup": """

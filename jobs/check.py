@@ -79,7 +79,7 @@ def main(argv: list[str] | None = None) -> int:
     failed = False
 
     if args.rules:
-        from lyra_spark.engine import partition_pass, validate
+        from lyra_spark.engine import validate, verdict_gate
         from lyra_spark.rules import ruleset_from_json
 
         ruleset = ruleset_from_json(args.rules)
@@ -95,9 +95,12 @@ def main(argv: list[str] | None = None) -> int:
         else:
             viol = res.violations
         if part_col:
+            # one collect of the lazy grid; each cohort gates on its own rows
             grid = res.verdicts.collect()
-            pp = {str(r[part_col]): r for r in partition_pass(res.verdicts, part_col).collect()}
-            failing = sorted(k for k, r in pp.items() if not r["pass"])
+            cohorts: dict[str, list] = {}
+            for r in grid:
+                cohorts.setdefault(str(r[part_col]), []).append(r)
+            failing = sorted(k for k, rows in cohorts.items() if not verdict_gate(rows))
             n_viol = sum(r["violation_count"] for r in grid)
             report["rule_verdicts"] = [
                 {"cohort": str(r[part_col]), "rule_id": r["rule_id"],
@@ -107,11 +110,11 @@ def main(argv: list[str] | None = None) -> int:
             ]
             report["rule_failing_cohorts"] = failing
             failed = failed or bool(failing)
-            print(f"[lyra] rules: {len(ruleset.rules)} over {len(pp)} cohort(s), "
+            print(f"[lyra] rules: {len(ruleset.rules)} over {len(cohorts)} cohort(s), "
                   f"{n_viol} violation row(s), failing={failing[:10]}")
         else:
             n_viol = viol.count()
-            from lyra_spark.engine import ruleset_severities, ruleset_tolerances, verdict_gate
+            from lyra_spark.engine import ruleset_severities, ruleset_tolerances
 
             tols = ruleset_tolerances(ruleset) or {}
             sevs = ruleset_severities(ruleset) or {}

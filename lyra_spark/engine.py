@@ -13,7 +13,7 @@ from __future__ import annotations
 import warnings
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -218,12 +218,15 @@ def compute_verdicts(
     partition_col: str = "part_date",
     severities: dict[str, str] | None = None,
     tolerances: dict[str, float] | None = None,
+    row_counts: DataFrame | None = None,
 ) -> DataFrame:
-    """Per (partition, rule) pass/fail with counts (BASELINE.json:6,14).
+    """Per (partition, rule) pass/fail with counts (BASELINE.json:6,14) — the
+    one verdict-grid builder.
 
-    The (partitions × rules) grid is tiny (dates × ~dozen rules) — built from a
-    broadcastable rule-id frame so the whole roll-up is two small hash
-    aggregations over pre-aggregated counts, never a shuffle of raw rows.
+    The (partitions × rules) grid is tiny (dates × ~dozen rules) — each
+    partition's count row expands into one row per rule in the projection
+    (no join, no rule frame to broadcast), so the whole roll-up is two small
+    hash aggregations over pre-aggregated counts, never a shuffle of raw rows.
 
     ``severities`` (rule_id → "error"/"warn"): when given, the grid gains a
     ``severity`` column (unknown rule_ids — e.g. dataset checks — default
@@ -236,22 +239,26 @@ def compute_verdicts(
     rule_ids default 0.0) and ``pass`` becomes violation_count ≤
     tolerance · row_count — the rule's verdict, since a tolerance rule IS
     satisfied within threshold. violation_count stays the raw count.
-    """
-    import pandas as pd
 
-    spark = df.sparkSession
-    rows = df.groupBy(partition_col).agg(F.count(F.lit(1)).alias("row_count"))
-    # pandas in, Arrow across: a Python list becomes a pickled RDD whose task
-    # launches a Python worker just to unpickle a dozen rule ids (~1 s of
-    # zero-CPU wall per call — per PARTITION on the CLI path); the pandas path
-    # is a driver-side Arrow conversion into a pure-JVM LocalRelation.
-    rframe = {"rule_id": rule_ids}
-    if severities is not None:
-        rframe["severity"] = [severities.get(r, "error") for r in rule_ids]
-    if tolerances is not None:
-        rframe["tolerance"] = [float(tolerances.get(r, 0.0)) for r in rule_ids]
-    rules = spark.createDataFrame(pd.DataFrame(rframe))
-    grid = rows.crossJoin(F.broadcast(rules))
+    ``row_counts`` (partition_col, row_count): the grid's partitions and
+    their row counts, e.g. from table metadata (see
+    presets.verdicts_from_metadata), so ``df`` is never scanned for
+    counting. Omitted, one count aggregate over ``df`` supplies them.
+    """
+    rows = (
+        row_counts
+        if row_counts is not None
+        else df.groupBy(partition_col).agg(F.count(F.lit(1)).alias("row_count"))
+    )
+    cells = []
+    for rid in rule_ids:
+        cell = [F.lit(rid).alias("rule_id")]
+        if severities is not None:
+            cell.append(F.lit(severities.get(rid, "error")).alias("severity"))
+        if tolerances is not None:
+            cell.append(F.lit(float(tolerances.get(rid, 0.0))).alias("tolerance"))
+        cells.append(F.struct(*cell))
+    grid = rows.select(partition_col, "row_count", F.inline(F.array(*cells)))
     vc = violations.groupBy(partition_col, "rule_id").agg(F.count(F.lit(1)).alias("violation_count"))
     # NULL-sentineled join key: an equi-join never matches NULL = NULL, so
     # the NULL partition's violation counts would never reach its grid row
@@ -264,19 +271,24 @@ def compute_verdicts(
         out_cols.append("severity")
     if tolerances is not None:
         out_cols.append("tolerance")
-    ok = (
-        F.col("violation_count") <= F.col("tolerance") * F.col("row_count")
-        if tolerances is not None
-        else F.col("violation_count") == 0
-    )
-    return (
+    joined = (
         grid.withColumn("__pk", pk)
         .join(vc.withColumn("__pk", pk).drop(partition_col), ["__pk", "rule_id"], "left")
         .drop("__pk")
         .withColumn("violation_count", F.coalesce(F.col("violation_count"), F.lit(0)))
-        .withColumn("pass", ok)
-        .select(*out_cols)
     )
+    return joined.withColumn("pass", _within_tolerance(joined.columns)).select(*out_cols)
+
+
+def _within_tolerance(columns: list[str]) -> Column:
+    """A verdict-grid cell's own pass: violation_count ≤ tolerance ·
+    row_count when the grid (``columns``) carries a tolerance column, else
+    zero violations. A NULL tolerance cell (column-mismatched unions) is
+    strict."""
+    vc = F.col("violation_count")
+    if "tolerance" not in columns:
+        return vc == 0
+    return vc <= F.coalesce(F.col("tolerance"), F.lit(0.0)) * F.col("row_count")
 
 
 def partition_pass(verdicts: DataFrame, partition_col: str = "part_date") -> DataFrame:
@@ -298,14 +310,8 @@ def partition_pass(verdicts: DataFrame, partition_col: str = "part_date") -> Dat
     )
     gating = sev != "warn"
     vc = F.col("violation_count")
-    ok = (
-        # NULL tolerance cells (column-mismatched unions) fail safe to strict
-        vc <= F.coalesce(F.col("tolerance"), F.lit(0.0)) * F.col("row_count")
-        if "tolerance" in verdicts.columns
-        else vc == 0
-    )
     return verdicts.groupBy(partition_col).agg(
-        F.min(F.when(gating, ok).otherwise(F.lit(True))).alias("pass"),
+        F.min(F.when(gating, _within_tolerance(verdicts.columns)).otherwise(F.lit(True))).alias("pass"),
         F.sum(F.when(gating, vc).otherwise(F.lit(0))).alias("error_violations"),
         F.sum(F.when(~gating, vc).otherwise(F.lit(0))).alias("warn_violations"),
         F.max("row_count").alias("row_count"),

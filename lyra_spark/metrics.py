@@ -31,6 +31,8 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lyra_spark.stats import _anomaly_filter
+
 METRICS = {
     "row_count",
     "mean",
@@ -463,40 +465,6 @@ def metric_anomalies(
         F.col("value").cast("double").alias("value"),
     )
     return _anomaly_filter(scored, w, "n_ref_parts", threshold, min_ref_parts)
-
-
-def _anomaly_filter(
-    scored: DataFrame, w, n_alias: str, threshold: float, min_ref: int, keep=None
-) -> DataFrame:
-    """Shared trailing-mean anomaly scorer: expected / deviation are DECIDED
-    on unrounded values (a near-zero trailing mean must not round to 0.0 and
-    dodge the flag; a boundary deviation must not round onto the threshold)
-    and only the REPORTED columns are rounded to 6 dp. ``keep`` is an
-    optional row filter applied AFTER the window is materialized (run-mode:
-    history rows feed every window but only the current run reports)."""
-    v = F.col("value")
-    exp_raw = F.avg(v).over(w)
-    dev_raw = F.abs(v - exp_raw) / F.abs(exp_raw)
-    out = (
-        scored.withColumn("__exp", exp_raw)
-        .withColumn("__dev", dev_raw)
-        .withColumn("__n", F.count(v).over(w))
-    )
-    if keep is not None:
-        out = out.filter(keep)
-    return (
-        out.filter(
-            v.isNotNull()
-            & F.col("__exp").isNotNull()
-            & (F.col("__exp") != 0)
-            & (F.col("__dev") > threshold)
-            & (F.col("__n") >= int(min_ref))
-        )
-        .withColumn("expected", F.round(F.col("__exp"), 6))
-        .withColumn("deviation", F.round(F.col("__dev"), 6))
-        .withColumn(n_alias, F.col("__n"))
-        .drop("__exp", "__dev", "__n")
-    )
 
 
 def append_metric_history(verdicts: DataFrame, history_dir: str, run_id: str) -> str:

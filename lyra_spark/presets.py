@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from lyra_spark import checks
-from lyra_spark.engine import ValidationResult, validate
+from lyra_spark.engine import ValidationResult, compute_verdicts, validate
 from lyra_spark.rules import RuleSet, enum, nonempty, range_rule, required
 from lyra_spark.schema import ROLE_ENUM
 
@@ -147,12 +147,10 @@ def run_suite(
 
     ``input_path``: the Hive-partitioned parquet dir ``df`` reads, UNFILTERED.
     When given, per-partition row counts come from table METADATA (parquet
-    footers here; Iceberg manifest record-counts in prod) and the verdict grid
-    is assembled driver-side from the two tiny count sets — no second data
-    scan and no join stages. Without it, verdicts fall back to the
-    distributed compute_verdicts roll-up."""
+    footers here; Iceberg manifest record-counts in prod), so the verdict
+    roll-up reads only the written sink — no second data scan. Without it,
+    compute_verdicts counts rows with one aggregate over ``df``."""
     from lyra_spark import io as lio
-    from lyra_spark.engine import compute_verdicts
     from lyra_spark.fused import suite_rule_ids, validate_transcripts_fused
 
     ruleset = ruleset or transcript_ruleset()
@@ -189,50 +187,18 @@ def verdicts_from_metadata(
     severities: dict[str, str] | None = None,
     tolerances: dict[str, float] | None = None,
 ) -> DataFrame:
-    """Verdict grid from metadata row counts + one tiny violation aggregate.
-
-    The only cluster work is the violation count roll-up (input: the written
-    sink, a few hundred KB); the (partitions × rules) grid itself is
-    driver-assembled — same columns and values as compute_verdicts, minus its
-    row-count scan and two join stages."""
+    """compute_verdicts over metadata row counts: ``counts`` (str(partition
+    value) → row count, as io.partition_row_counts and the catalog serve
+    them) become the grid's (partition_col, row_count) frame, cast to the
+    partition column's type, so ``df`` is never scanned for counting."""
     import pandas as pd
     from pyspark.sql import functions as F
 
-    spark = df.sparkSession
-    vc = viol.groupBy(partition_col, "rule_id").agg(F.count(F.lit(1)).alias("c")).collect()
-    vmap = {(str(r[partition_col]), r["rule_id"]): r["c"] for r in vc}
-    grid = [
-        (pk, rid, vmap.get((pk, rid), 0), n)
-        for pk, n in sorted(counts.items())
-        for rid in rule_ids
-    ]
-    part_type = df.schema[partition_col].dataType.simpleString()
     # pandas in, Arrow across: a plain Python list becomes a pickled RDD whose
-    # every task launches a Python worker just to unpickle a few grid rows
-    # (measured: ~2 s of zero-CPU wall); the pandas path is a driver-side
-    # Arrow conversion into a pure-JVM LocalRelation.
-    gpdf = pd.DataFrame(grid, columns=["pk", "rule_id", "violation_count", "row_count"])
-    if severities is not None:
-        # same schema rule as compute_verdicts: severity column appears
-        # exactly when the ruleset declares non-default severities
-        gpdf["severity"] = [severities.get(r, "error") for r in gpdf["rule_id"]]
-    if tolerances is not None:
-        gpdf["tolerance"] = [float(tolerances.get(r, 0.0)) for r in gpdf["rule_id"]]
-    ok = (
-        F.col("violation_count") <= F.col("tolerance") * F.col("row_count")
-        if tolerances is not None
-        else F.col("violation_count") == 0
-    )
-    out = (
-        spark.createDataFrame(gpdf)
-        .select(
-            F.col("pk").cast(part_type).alias(partition_col),
-            "rule_id",
-            ok.alias("pass"),
-            "violation_count",
-            "row_count",
-            *(["severity"] if severities is not None else []),
-            *(["tolerance"] if tolerances is not None else []),
-        )
-    )
-    return out
+    # task launches a Python worker just to unpickle a few rows; the pandas
+    # path is a driver-side Arrow conversion into a pure-JVM LocalRelation
+    row_counts = df.sparkSession.createDataFrame(
+        pd.DataFrame({"pk": list(counts), "row_count": list(counts.values())}),
+        schema="pk string, row_count long",
+    ).select(F.col("pk").cast(df.schema[partition_col].dataType).alias(partition_col), "row_count")
+    return compute_verdicts(df, viol, rule_ids, partition_col, severities, tolerances, row_counts)

@@ -123,13 +123,13 @@ def row_count_anomaly(
     fail loudly even when every row in it is individually valid.
 
     Returns (partition_col, row_count, expected, deviation, n_ref_parts) for
-    anomalous partitions. Only the FIRST partition has no expectation at all;
-    early partitions score against a PARTIAL window (partition #2's "mean" is
-    one sample) — ``n_ref_parts`` reports the window's actual size and
-    ``min_ref_parts`` suppresses flags until the window has at least that
-    many partitions (default 1 = report from the second partition on, the
-    caller deciding what warm-up noise to trust; categorical_psi_trailing
-    exposes the same dial).
+    anomalous partitions, scored by _anomaly_filter. Only the FIRST partition
+    has no expectation at all; early partitions score against a PARTIAL
+    window (partition #2's "mean" is one sample) — ``n_ref_parts`` reports
+    the window's actual (non-NULL) size and ``min_ref_parts`` suppresses
+    flags until the window has at least that many partitions (default 1 =
+    report from the second partition on, the caller deciding what warm-up
+    noise to trust; categorical_psi_trailing exposes the same dial).
 
     Scale: the anomaly math runs on ONE ROW PER PARTITION — ~10⁵ rows at the
     10⁵-Iceberg-partition design point — so the unpartitioned ordering window
@@ -143,20 +143,47 @@ def row_count_anomaly(
     if counts is None:
         counts = df.groupBy(partition_col).agg(F.count(F.lit(1)).alias("row_count"))
     w = Window.orderBy(partition_col).rowsBetween(-trailing, -1)
-    scored = counts.select(
-        partition_col,
-        F.col("row_count").cast("long").alias("row_count"),
-        F.round(F.avg("row_count").over(w), 6).alias("expected"),
-        F.count(F.lit(1)).over(w).alias("n_ref_parts"),
-    ).withColumn(
-        "deviation",
-        F.round(F.abs(F.col("row_count") - F.col("expected")) / F.col("expected"), 6),
+    scored = counts.select(partition_col, F.col("row_count").cast("long").alias("row_count"))
+    return _anomaly_filter(scored, w, "n_ref_parts", threshold, min_ref_parts, value="row_count")
+
+
+def _anomaly_filter(
+    scored: DataFrame, w, n_alias: str, threshold: float, min_ref: int, keep=None,
+    value: str = "value",
+) -> DataFrame:
+    """The one trailing-mean anomaly scorer, under row_count_anomaly,
+    metric_anomaly and metrics.metric_anomalies/metric_run_anomalies: each
+    row's ``value`` column against its mean over the window ``w``.
+    expected / deviation are DECIDED on unrounded values (a near-zero
+    trailing mean must not round to 0.0 and dodge the flag; a boundary
+    deviation must not round onto the threshold) and only the REPORTED
+    columns are rounded to 6 dp. ``n_alias`` counts the window's non-NULL
+    values — the ones the mean averages; a NULL value and a NULL or zero
+    mean never flag. ``keep`` is an optional row filter applied AFTER the window
+    is materialized (run-mode: history rows feed every window but only the
+    current run reports). Appends (expected, deviation, n_alias)."""
+    v = F.col(value)
+    exp_raw = F.avg(v).over(w)
+    dev_raw = F.abs(v - exp_raw) / F.abs(exp_raw)
+    out = (
+        scored.withColumn("__exp", exp_raw)
+        .withColumn("__dev", dev_raw)
+        .withColumn("__n", F.count(v).over(w))
     )
-    return scored.filter(
-        F.col("expected").isNotNull()
-        & (F.col("expected") > 0)
-        & (F.col("deviation") > threshold)
-        & (F.col("n_ref_parts") >= int(min_ref_parts))
+    if keep is not None:
+        out = out.filter(keep)
+    return (
+        out.filter(
+            v.isNotNull()
+            & F.col("__exp").isNotNull()
+            & (F.col("__exp") != 0)
+            & (F.col("__dev") > threshold)
+            & (F.col("__n") >= int(min_ref))
+        )
+        .withColumn("expected", F.round(F.col("__exp"), 6))
+        .withColumn("deviation", F.round(F.col("__dev"), 6))
+        .withColumn(n_alias, F.col("__n"))
+        .drop("__exp", "__dev", "__n")
     )
 
 
@@ -647,10 +674,11 @@ def metric_anomaly(
 
     Input is ALREADY aggregated — one row per partition (verdict parquet,
     stats output, metadata counts), so the single-task ordering window is
-    O(#partitions) and this check never touches data files. Only the first
-    partition has no expectation; early partitions score against a PARTIAL
-    window — ``n_ref_parts`` reports the window's actual size and
-    ``min_ref_parts`` suppresses warm-up flags (row_count_anomaly's dial).
+    O(#partitions) and this check never touches data files. Scored by
+    _anomaly_filter: only the first partition has no expectation; early
+    partitions score against a PARTIAL window — ``n_ref_parts`` reports the
+    window's actual (non-NULL) size and ``min_ref_parts`` suppresses warm-up
+    flags (row_count_anomaly's dial).
     All-zero history (expected = 0) never flags either — a metric appearing
     for the first time is a different alert than one that moved.
 
@@ -659,22 +687,12 @@ def metric_anomaly(
     """
     from pyspark.sql import Window
 
-    w = Window.orderBy(partition_col).rowsBetween(-trailing, -1)
+    w = Window.orderBy("partition").rowsBetween(-trailing, -1)
     scored = metrics.select(
         F.col(partition_col).alias("partition"),
         F.col(value_col).cast("double").alias("metric"),
-        F.round(F.avg(F.col(value_col).cast("double")).over(w), 6).alias("expected"),
-        F.count(F.lit(1)).over(w).alias("n_ref_parts"),
-    ).withColumn(
-        "deviation",
-        F.round(F.abs(F.col("metric") - F.col("expected")) / F.abs(F.col("expected")), 6),
     )
-    return scored.filter(
-        F.col("expected").isNotNull()
-        & (F.col("expected") != 0)
-        & (F.col("deviation") > threshold)
-        & (F.col("n_ref_parts") >= int(min_ref_parts))
-    )
+    return _anomaly_filter(scored, w, "n_ref_parts", threshold, min_ref_parts, value="metric")
 
 
 def robust_outlier_rows(

@@ -52,6 +52,29 @@ def test_check_rules_and_metrics_per_cohort(tmp_path, spark, events_table, capsy
     assert viol.count() == sum(v["violations"] for v in rep["rule_verdicts"])
 
 
+def test_check_partitioned_out_jobs(tmp_path, spark, events_table):
+    """A partitioned --out check runs the rule pipeline for its sink write and
+    once more for the verdict grid, whose collected rows gate every cohort —
+    the per-cohort gate never re-runs the scan and the count aggregate."""
+    rules = tmp_path / "rules.json"
+    rules.write_text(json.dumps([
+        {"kind": "range", "column": "value", "min": 0.0, "max": 100.0, "rule_id": "v_range"},
+    ]))
+    sc = spark.sparkContext
+    sc.setJobGroup("check_jobs", "count jobs")
+    try:
+        rc = run(["--table", events_table, "--rules", str(rules),
+                  "--partition-col", "date_format(ts, 'yyyy-MM-dd')",
+                  "--out", str(tmp_path / "viol")])
+    finally:
+        sc.setJobGroup("", "")
+    assert rc == 1
+    jobs = len(sc.statusTracker().getJobIdsForGroup("check_jobs"))
+    # measured 6: the sink write and the grid collect (scan, count aggregate
+    # and AQE stages); gating through partition_pass re-ran the grid (12)
+    assert jobs <= 6, f"{jobs} Spark jobs"
+
+
 def test_check_whole_table_tolerance_gate(tmp_path, events_table):
     """Whole-table mode: tolerance forgives a violation RATE, warn severity
     never gates — exit 0 with violations present but forgiven."""

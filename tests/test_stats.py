@@ -421,6 +421,82 @@ def test_metric_anomaly_flags_regression_only(spark):
     assert metric_anomaly(zeros, "day", "m", trailing=2).count() == 0
 
 
+def _row_count_scorer(spark, values):
+    from lyra_spark.stats import row_count_anomaly
+
+    counts = spark.createDataFrame([(f"d{i:02d}", v) for i, v in enumerate(values)],
+                                   "part_date string, row_count long")
+    return {r["part_date"]: (r["expected"], r["deviation"], r["n_ref_parts"])
+            for r in row_count_anomaly(spark.range(0), counts=counts, threshold=0.5).collect()}
+
+
+def _doubles(values):
+    return [None if v is None else float(v) for v in values]
+
+
+def _metric_scorer(spark, values):
+    from lyra_spark.stats import metric_anomaly
+
+    df = spark.createDataFrame([(f"d{i:02d}", v) for i, v in enumerate(_doubles(values))],
+                               "part_date string, value double")
+    return {r["partition"]: (r["expected"], r["deviation"], r["n_ref_parts"])
+            for r in metric_anomaly(df, "part_date", "value", threshold=0.5).collect()}
+
+
+def _metric_rules_scorer(spark, values):
+    from lyra_spark.metrics import metric_anomalies
+
+    grid = spark.createDataFrame([(f"d{i:02d}", "r", "mean", v) for i, v in enumerate(_doubles(values))],
+                                 "part_date string, rule_id string, metric string, value double")
+    return {r["part_date"]: (r["expected"], r["deviation"], r["n_ref_parts"])
+            for r in metric_anomalies(grid, threshold=0.5).collect()}
+
+
+def _metric_runs_scorer(spark, values):
+    from lyra_spark.metrics import metric_run_anomalies
+
+    hist = spark.createDataFrame(
+        [("p", "r", "mean", v, f"d{i:02d}") for i, v in enumerate(_doubles(values))],
+        "part_date string, rule_id string, metric string, value double, run_id string",
+    )
+    current = f"d{len(values) - 1:02d}"
+    # only the current run is judged, one (partition, rule) pair
+    return {current: (r["expected"], r["deviation"], r["n_ref_runs"])
+            for r in metric_run_anomalies(hist, current, threshold=0.5).collect()}
+
+
+ANOMALY_SCORERS = {
+    "row_count_anomaly": _row_count_scorer,
+    "metric_anomaly": _metric_scorer,
+    "metric_anomalies": _metric_rules_scorer,
+    "metric_run_anomalies": _metric_runs_scorer,
+}
+# (values in partition/run order, the last one's (expected, deviation,
+# n_ref) — it must be the only flag)
+ANOMALY_BOUNDARIES = {
+    # 0.5000004 > 0.5: decided unrounded, reported rounded onto the threshold
+    "threshold": ([10_000_000, 15_000_004], (10_000_000.0, 0.5, 1)),
+    # a 4e-7 mean reports as 0.0 but is not a zero mean
+    "near_zero_mean": ([4e-7, 1.0], (0.0, 2499999.0, 1)),
+    # the NULL value neither flags nor counts as a reference partition
+    "null_in_window": ([10, None, 10, 30], (10.0, 2.0, 2)),
+}
+
+
+@pytest.mark.parametrize(
+    "scorer,case",
+    [(s, c) for s in ANOMALY_SCORERS for c in ANOMALY_BOUNDARIES
+     # row counts are integers: no 4e-7 mean
+     if (s, c) != ("row_count_anomaly", "near_zero_mean")],
+)
+def test_anomaly_scorers_share_boundaries(spark, scorer, case):
+    """All four trailing-anomaly scorers decide on the unrounded mean and
+    deviation and count only non-NULL reference values (SEMANTICS #80)."""
+    values, want = ANOMALY_BOUNDARIES[case]
+    got = ANOMALY_SCORERS[scorer](spark, values)
+    assert got == {f"d{len(values) - 1:02d}": want}
+
+
 def test_reconcile_checksum_is_order_and_layout_invariant(spark):
     """The SUM-of-row-hash checksum must not care how rows are partitioned
     or ordered — only what they are: a repartitioned, reshuffled copy of the

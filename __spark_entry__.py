@@ -406,23 +406,22 @@ def q_cms_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_tdigest_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable t-digest quantiles (drift.sketch_by_partition + tree merge,
-    SURVEY.md §2 rows 30-31) made driver-visible: per-returnflag sketches of
-    l_extendedprice merge into a global digest whose quantile answers are
-    rank-checked against the data in ONE aggregate pass — |rank(v_q) - q|
-    must be <= 0.01 (measured max 4.3e-4 at delta=100: a 20x margin, so the
-    booleans are stable under shuffle-order nondeterminism in sketch
-    construction). The oracle expects every check TRUE (hll/cms tolerance
-    pattern)."""
+    """Mergeable quantile sketches (drift.sketch_by_partition + tree merge,
+    SURVEY.md §2 rows 30-31) made driver-visible: per-returnflag KLL
+    sketches of l_extendedprice merge (kll_merge_agg_double) into a global
+    sketch whose quantile answers are rank-checked against the data in ONE
+    aggregate pass — |rank(v_q) - q| must be <= 0.01 (measured max 6.7e-4
+    over 3 runs at sf0.01, k=1000: a 15x margin, so the booleans are stable
+    under KLL's randomized compaction). The name is kept from the t-digest
+    sketch this query first checked. The oracle expects every check TRUE
+    (hll/cms tolerance pattern)."""
     ensure_shipped(spark)
     import pandas as pd
 
-    from lyra_spark.drift import collect_digests, global_digest, sketch_by_partition
+    from lyra_spark.drift import collect_quantiles, sketch_by_partition
 
     li = _read(spark, sf_dir, "lineitem")
-    gd = global_digest(
-        collect_digests(sketch_by_partition(li, "l_extendedprice", "l_returnflag"))
-    )
+    _, gd = collect_quantiles(sketch_by_partition(li, "l_extendedprice", "l_returnflag"))
     qs = [0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
     vals = gd.quantile(qs)
     ranks_row = (
@@ -445,17 +444,18 @@ def q_tdigest_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ks_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KS drift (drift.ks_statistic over merged t-digests, §2 row 32) made
-    driver-visible: digest KS vs drift.ks_exact (distinct-grid ECDF ground
+    """KS drift (drift.ks_statistic over KLL quantile grids, §2 row 32) made
+    driver-visible: sketch KS vs drift.ks_exact (distinct-grid ECDF ground
     truth) on a no-drift pair (returnflag A vs N, both ~same distribution)
     and a PLANTED drift pair (A vs A-prices-scaled-1.15). Gates per pair:
-    |digest − exact| <= 0.01 (measured ~8e-4: >12x margin) AND the 0.05
-    drift threshold classifies correctly (no-drift ~0.005, planted ~0.131).
+    |sketch − exact| <= 0.01 (measured max 2.1e-3 over 3 runs at sf0.01:
+    a ~5x margin) AND the 0.05 drift threshold classifies correctly
+    (no-drift 0.006-0.007, planted 0.132).
     Oracle expects every boolean TRUE (tolerance pattern)."""
     ensure_shipped(spark)
     import pandas as pd
 
-    from lyra_spark.drift import collect_digests, ks_exact, ks_statistic, sketch_by_partition
+    from lyra_spark.drift import collect_quantiles, ks_exact, ks_statistic, sketch_by_partition
 
     li = _read(spark, sf_dir, "lineitem")
     base = li.filter(F.col("l_returnflag").isin("A", "N")).select(
@@ -465,7 +465,7 @@ def q_ks_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("S").alias("g"), (F.col("l_extendedprice") * 1.15).alias("x")
     )
     comp = base.unionByName(shifted)
-    digs = collect_digests(sketch_by_partition(comp, "x", "g"))
+    digs, _ = collect_quantiles(sketch_by_partition(comp, "x", "g"))
     rows = []
     for name, pa, pb, drifted in [("same", "A", "N", False), ("shifted", "A", "S", True)]:
         approx = ks_statistic(digs[pa], digs[pb])
@@ -1690,10 +1690,11 @@ def q_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_multi_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-scan multi-column drift sketching (drift.sketch_columns_by_
-    partition): t-digests for THREE lineitem measures built in a single
+    partition): KLL sketches for THREE lineitem measures built in a single
     pass (the per-column path re-reads the table k times — the scan is the
-    cost at 10¹² rows). Each column's merged global digest is rank-checked
-    in ONE aggregate: |rank(v_q) − q| ≤ 0.01 (tdigest_tolerance pattern).
+    cost at 10¹² rows). Each column's merged global sketch is rank-checked
+    in ONE aggregate: |rank(v_q) − q| ≤ 0.01 (tdigest_tolerance pattern;
+    measured max 7.0e-4 over 3 runs at sf0.01: a 14x margin).
     Oracle expects every boolean TRUE."""
     ensure_shipped(spark)
     import pandas as pd
@@ -1712,17 +1713,14 @@ def q_multi_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi = sketch_columns_by_partition(li, cols, "l_returnflag")
     # ONE action over the multi-sketch frame: per-column .filter().collect()
     # would re-run the sketch scan k times — the exact cost this operator
-    # exists to avoid
-    from lyra_spark.sketch.tdigest import TDigest, merge_all
+    # exists to avoid; each column's partitions merge in the same aggregate
+    from lyra_spark.drift import collect_quantiles
 
-    by_col: dict[str, list] = {}
-    for r in multi.collect():
-        by_col.setdefault(r["column"], []).append(TDigest.from_bytes(r["sketch"]))
+    by_col, _ = collect_quantiles(multi, key="column")
     qs = [0.05, 0.25, 0.5, 0.75, 0.95]
     checks = []  # (column, quantile, value)
     for c in cols:
-        gd = merge_all(by_col[c])
-        for q, v in zip(qs, gd.quantile(qs)):
+        for q, v in zip(qs, by_col[c].quantile(qs)):
             checks.append((c, q, float(v)))
     ranks_row = li.agg(
         *[
@@ -1769,13 +1767,15 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_numeric_trailing_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-window NUMERIC drift (drift.numeric_drift_trailing): each
-    ship-year's price t-digest KS-compared against the pooled digest of the
-    previous 3 years — ONE distributed sketch pass, O(P·k) driver pooling —
-    plus a planted partition '9999' (prices ×1.3) that must flag. Gates per
-    partition: |digest KS − exact trailing KS| ≤ 0.015 (measured ≤ 0.0013:
-    >10× margin) AND the sample-size-aware cut classifies exactly the
-    planted partition as drift (organic years ≤ 0.017 vs cut 0.10, planted
-    0.23). Oracle expects every boolean TRUE (tolerance pattern)."""
+    ship-year's price KLL sketch KS-compared against the pooled sketch of
+    the previous 3 years — ONE distributed sketch pass, the pooling a
+    kll_merge_agg_double window over the per-year sketches — plus a planted
+    partition '9999' (prices ×1.3) that must flag. Gates per partition:
+    |sketch KS − exact trailing KS| ≤ 0.015 (measured ≤ 0.0014 over 3 runs
+    at sf0.01: >10× margin) AND the sample-size-aware cut classifies
+    exactly the planted partition as drift (organic years ≤ 0.018 vs cut
+    0.10, planted 0.233). Oracle expects every boolean TRUE (tolerance
+    pattern)."""
     ensure_shipped(spark)
     import pandas as pd
 
@@ -2151,24 +2151,24 @@ def q_json_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ORDERING CONTRACT: the correctness driver samples the FIRST 50 entries.
-    # Round-4 checked the (then) first 50; round-5 therefore leads with
-    #   (a) the 5 queries whose oracle SQL was fixed this round (HUGEINT
-    #       SUM -> BIGINT casts) so their red CORRECTNESS rows re-check green,
+    # The window leads with
+    #   (a) the drift queries: the four whose quantile sketch moved from a
+    #       t-digest to Spark's KLL aggregates (never driver-sampled before)
+    #       and the categorical one,
     #   (b) a small representative core that stays pinned every round,
-    #   (c) the block of queries the driver has NEVER checked (r4 registry
-    #       positions 51-100), including the four latent HUGEINT fixes
-    #       (domain_blocklist, hash_split, mixture_sample, leakage_safe_split).
-    # The back half holds queries already driver-verified green in r4 plus the
-    # few never-checked ones with literal-VALUES or tolerance-boolean oracles
-    # (multi_sketch, numeric_trailing_drift, cms/tdigest/ks tolerance, ...)
-    # whose hash risk is structurally lowest.
+    #   (c) the block of queries the driver first checked in round 5 (r4
+    #       registry positions 51-100).
+    # The back half holds queries already driver-verified green (benford,
+    # sessionize, domain_cap and unigram_quality in round 5, the rest in r4)
+    # plus the few never-checked ones with literal-VALUES or tolerance-boolean
+    # oracles (cms_tolerance, ...) whose hash risk is structurally lowest.
     return {
-        # -- (a) round-4 red rows, oracle casts fixed this round --
-        "benford": q_benford,
+        # -- (a) drift: KLL sketch queries + categorical PSI --
+        "tdigest_tolerance": q_tdigest_tolerance,
+        "ks_tolerance": q_ks_tolerance,
+        "multi_sketch": q_multi_sketch,
+        "numeric_trailing_drift": q_numeric_trailing_drift,
         "categorical_drift": q_categorical_drift,
-        "sessionize": q_sessionize,
-        "domain_cap": q_domain_cap,
-        "unigram_quality": q_unigram_quality,
         # -- (b) pinned representative core (r4-green) --
         "validate_events": q_validate_events,
         "custom_rule": q_custom_rule,
@@ -2220,14 +2220,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "abort_messages": q_abort_messages,
         # ---------------- position 51+ (driver-checked green in r4, or
         # never-checked with structurally-safest oracles) ----------------
+        "benford": q_benford,
+        "sessionize": q_sessionize,
+        "domain_cap": q_domain_cap,
+        "unigram_quality": q_unigram_quality,
         "violation_samples": q_violation_samples,
         "profile_findings": q_profile_findings,
         "json_keys": q_json_keys,
-        "multi_sketch": q_multi_sketch,
-        "numeric_trailing_drift": q_numeric_trailing_drift,
         "cms_tolerance": q_cms_tolerance,
-        "tdigest_tolerance": q_tdigest_tolerance,
-        "ks_tolerance": q_ks_tolerance,
         "dup_samples": q_dup_samples,
         "chunk_docs": q_chunk_docs,
         "top_ngrams": q_top_ngrams,

@@ -12,7 +12,7 @@ suite pass, each conversation checked within its own partition → the batch's
 partition dirs of every output replaced → one manifest save, recording each
 partition with lineage and the batch wall split evenly. Resume: re-run with
 the same --run-id skips completed partitions whose rule fingerprint matches.
-A final drift pass merges per-partition t-digests tree-wise.
+A final drift pass merges per-partition KLL sketches tree-wise.
 """
 
 from __future__ import annotations
@@ -61,9 +61,9 @@ def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = Non
     ap.add_argument("--master", default=None)
     ap.add_argument("--drift-col", default="cast(length(text) as double)")
     ap.add_argument("--reference", default=None,
-                    help="saved drift baseline (from --save-reference); default: this run's global digest")
+                    help="saved drift baseline (from --save-reference); default: this run's global sketch")
     ap.add_argument("--save-reference", default=None,
-                    help="persist this run's global drift digest here (tomorrow's --reference)")
+                    help="persist this run's global drift sketch here (tomorrow's --reference)")
     ap.add_argument("--limit-partitions", type=int, default=None, help="validate at most N pending partitions")
     ap.add_argument("--hll-cols", default=None,
                     help="comma-separated columns: persist per-partition DataSketches HLL "

@@ -14,7 +14,7 @@ public lyra API shape (builder rules + validate() → {value, errors}).
 
 Design stance (SURVEY.md §7): every check is a Catalyst Column expression or a
 built-in aggregate; pandas/Arrow UDFs only where the contract demands extensibility
-(custom predicates) or Spark lacks the primitive (t-digest). Never per-row Python.
+(custom predicates). Never per-row Python.
 """
 
 from lyra_spark.rules import (  # noqa: F401

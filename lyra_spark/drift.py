@@ -1,167 +1,208 @@
-"""Distribution-drift checks: KS statistic + PSI on per-partition t-digest
+"""Distribution-drift checks: KS statistic + PSI on per-partition KLL quantile
 sketches merged tree-wise (BASELINE.json:6).
 
-Scale architecture — raw rows NEVER shuffle for drift:
-  stage 1 (map-side): ``mapInPandas`` folds each Arrow batch into a t-digest →
-    one (partition_key, blob) row per batch; only ~O(δ) floats leave the scan;
-  stage 2: ``applyInPandas`` per partition_key merges batch blobs → one digest
-    per Iceberg partition (this IS the combiner tree's middle layer);
-  stage 3 (driver): the per-partition digests (hundreds of rows) merge
-    pairwise-tree into the global/reference digest; KS and PSI evaluate on the
-    digests' CDFs — pure numpy on tiny data.
+Scale architecture — raw rows NEVER shuffle for drift, and no row crosses
+into a Python worker:
+  stage 1 (map-side): Spark's native ``kll_sketch_agg_double`` partial
+    aggregate folds each task's rows into one KLL sketch per partition key;
+    only the sketches (O(k) doubles each) cross the exchange;
+  stage 2: the final aggregate merges them → one sketch per Iceberg
+    partition; ``kll_merge_agg_double`` merges those again for the global,
+    leave-one-out and trailing references (a rollup / window over P rows);
+  stage 3 (driver): each sketch arrives as its quantiles at a fixed grid of
+    1,001 inclusive ranks (:data:`RANKS`); KS and PSI evaluate step CDFs on
+    those arrays — pure numpy on tiny data. Spark's rank/quantile getters
+    only take literal points, so the grid, not a data-dependent point set, is
+    what crosses to the driver.
 """
 
 from __future__ import annotations
 
+import json
 import math
-from collections.abc import Iterator
+import os
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from lyra_spark.sketch.tdigest import TDigest, merge_all
-
 SKETCH_SCHEMA = "part_key string, sketch binary, n long"
+MULTI_SKETCH_SCHEMA = "part_key string, column string, sketch binary, n long"
+# KLL accuracy parameter (larger k, smaller rank error, bigger sketch); a
+# sketch of fewer than k values holds every value, so it is exact
+K = 1000
+# the driver-side form of a sketch: its quantiles at these inclusive ranks
+# (resolution 0.001)
+RANKS = np.linspace(0.0, 1.0, 1001)
+_RANKS_SQL = "cast(split('" + ",".join(f"{float(r)!r}" for r in RANKS) + "', ',') as array<double>)"
+REFERENCE_FORMAT = {"format": "lyra-kll-ref", "version": 2}
+# ks_exact's distinct-value grid is walked by ONE task; past this many
+# distinct values it refuses instead of running an unbounded single-task sort
+KS_EXACT_MAX_DISTINCT = 2_000_000
+
+
+def _part_key(partition_col: str) -> Column:
+    # NULL partitions sentinel to "None" (the same key partition_scope owns),
+    # so the NULL partition is one ordinary key in every sketch consumer
+    return F.coalesce(F.col(partition_col).cast("string"), F.lit("None")).alias("part_key")
 
 
 def sketch_by_partition(
     df: DataFrame,
     value_col,
     partition_col: str = "part_date",
-    delta: int = 200,
+    k: int = K,
 ) -> DataFrame:
-    """Per-partition t-digest blobs of ``value_col`` (an expression string or
-    Column). Two-stage: per-Arrow-batch sketch (no raw-row shuffle), then a
-    tiny per-partition blob merge."""
-    # NULL partitions sentinel to "None" (the same key partition_scope
-    # owns): pandas groupby drops NULL keys by default, which would silently
-    # exclude the NULL partition's rows from every digest
-    # cast("double") like sketch_columns_by_partition: a timestamp/decimal
-    # value_col otherwise reaches the pandas worker as a dtype numpy cannot
-    # coerce and crashes mid-job where the multi-column sibling succeeds
-    val = (F.expr(value_col) if isinstance(value_col, str) else value_col).cast("double")
-    src = df.select(
-        F.coalesce(F.col(partition_col).cast("string"), F.lit("None")).alias("part_key"),
-        val.alias("v"),
-    ).filter(F.col("v").isNotNull())
-
-    def batch_sketch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for key, g in pdf.groupby("part_key", sort=False):
-                d = TDigest.from_values(g["v"].to_numpy(dtype=np.float64), delta)
-                rows.append((key, d.to_bytes(), len(g)))
-            if rows:
-                yield pd.DataFrame(rows, columns=["part_key", "sketch", "n"])
-
-    batch_blobs = src.mapInPandas(batch_sketch, schema=SKETCH_SCHEMA)
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = merge_all([TDigest.from_bytes(b) for b in pdf["sketch"]])
-        return pd.DataFrame(
-            {"part_key": [pdf["part_key"].iloc[0]], "sketch": [merged.to_bytes()], "n": [int(pdf["n"].sum())]}
-        )
-
-    return batch_blobs.groupBy("part_key").applyInPandas(merge_group, schema=SKETCH_SCHEMA)
-
-
-MULTI_SKETCH_SCHEMA = "part_key string, column string, sketch binary, n long"
+    """Per-partition KLL sketches of ``value_col`` (an expression string or
+    Column) as SKETCH_SCHEMA rows: one native aggregate, partial sketches
+    map-side, no raw-row shuffle. The value casts to double, so timestamp and
+    decimal columns sketch like numbers; NULL values are skipped."""
+    v = (F.expr(value_col) if isinstance(value_col, str) else value_col).cast("double")
+    return (
+        df.select(_part_key(partition_col), v.alias("v"))
+        .filter(F.col("v").isNotNull())
+        .groupBy("part_key")
+        .agg(F.kll_sketch_agg_double("v", k).alias("sketch"), F.count(F.lit(1)).alias("n"))
+    )
 
 
 def sketch_columns_by_partition(
     df: DataFrame,
     value_cols: list,
     partition_col: str = "part_date",
-    delta: int = 200,
+    k: int = K,
 ) -> DataFrame:
-    """Per-(partition, column) t-digest blobs for SEVERAL columns from ONE
+    """Per-(partition, column) KLL sketches for SEVERAL columns from ONE
     scan. At 10¹²-row scale the scan IS the cost of drift monitoring —
     sketch_by_partition per column re-reads the table k times for a k-column
-    dashboard; this builds all k digests per Arrow batch in a single pass
-    (k× less IO, identical digests up to merge order).
+    dashboard; this builds all of them in one aggregate (one sketch and one
+    non-NULL count per column per partition) and unpivots the result.
 
     ``value_cols``: list of column names or expression strings; each names
     its output slice (the expression string itself for expressions).
-    Output rows are (part_key, column, sketch, n); slice one column with
+    Output rows are (part_key, column, sketch, n), one per (partition,
+    column) with at least one non-NULL value; slice one column with
     ``.filter(col==c).drop("column")`` and every SKETCH_SCHEMA consumer
-    (collect_digests, drift_verdicts, save_reference) works unchanged.
+    (collect_quantiles, drift_verdicts, save_reference) works unchanged.
     """
-    exprs = [(c, F.expr(c).cast("double").alias(f"v{i}")) for i, c in enumerate(value_cols)]
-    src = df.select(
-        F.coalesce(F.col(partition_col).cast("string"), F.lit("None")).alias("part_key"),
-        *[e for _, e in exprs],
+    vals = [F.expr(c).cast("double") for c in value_cols]
+    aggs = [F.kll_sketch_agg_double(v, k).alias(f"s{i}") for i, v in enumerate(vals)]
+    aggs += [F.count(v).alias(f"n{i}") for i, v in enumerate(vals)]
+    cells = F.inline(F.array(*[
+        F.struct(F.lit(c).alias("column"), F.col(f"s{i}").alias("sketch"), F.col(f"n{i}").alias("n"))
+        for i, c in enumerate(value_cols)
+    ]))
+    return (
+        df.groupBy(_part_key(partition_col))
+        .agg(*aggs)
+        .select("part_key", cells)
+        .filter(F.col("n") > 0)
     )
-    names = [c for c, _ in exprs]
 
-    def batch_sketch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for key, g in pdf.groupby("part_key", sort=False):
-                for i, name in enumerate(names):
-                    v = g[f"v{i}"].dropna()
-                    if len(v):
-                        d = TDigest.from_values(v.to_numpy(dtype=np.float64), delta)
-                        rows.append((key, name, d.to_bytes(), len(v)))
-            if rows:
-                yield pd.DataFrame(rows, columns=["part_key", "column", "sketch", "n"])
 
-    blobs = src.mapInPandas(batch_sketch, schema=MULTI_SKETCH_SCHEMA)
+# --- driver-side form -------------------------------------------------------
+class Quantiles(NamedTuple):
+    """A sketch on the driver: its item count and its inclusive quantiles at
+    :data:`RANKS` (``q[i]`` = the smallest sketched value whose fraction of
+    values ≤ it reaches ``RANKS[i]``; q[0] is the minimum, q[-1] the max)."""
 
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = merge_all([TDigest.from_bytes(b) for b in pdf["sketch"]])
-        return pd.DataFrame(
-            {
-                "part_key": [pdf["part_key"].iloc[0]],
-                "column": [pdf["column"].iloc[0]],
-                "sketch": [merged.to_bytes()],
-                "n": [int(pdf["n"].sum())],
-            }
+    n: int
+    q: np.ndarray
+
+    def cdf(self, x) -> np.ndarray:
+        """Weak-inequality step CDF P(X ≤ x) to the grid's resolution: the
+        largest grid rank whose quantile is ≤ x (0 below the minimum, 1 from
+        the maximum on)."""
+        j = np.searchsorted(self.q, np.asarray(x, dtype=np.float64), side="right")
+        return np.maximum(j - 1, 0) / (len(self.q) - 1)
+
+    def quantile(self, r) -> np.ndarray:
+        """Quantile at the grid rank nearest to each ``r``."""
+        return self.q[np.rint(np.asarray(r, dtype=np.float64) * (len(self.q) - 1)).astype(int)]
+
+
+def _quantiles(sketch: str, n: str) -> Column:
+    # the getter rejects an empty sketch (an n=0 trailing frame), so it is
+    # guarded; the ranks must be foldable (NON_FOLDABLE_INPUT otherwise). One
+    # string literal split and cast in the JVM: 1,001 F.lit calls cost ~0.5 s
+    # of Python→JVM round trips, and a 1,001-child array(...) ~40 ms of
+    # planning, per query
+    return F.when(F.col(n) > 0, F.kll_sketch_get_quantile_double(sketch, F.expr(_RANKS_SQL)))
+
+
+def _to_quantiles(row, q: str = "q", n: str = "n") -> Quantiles:
+    return Quantiles(int(row[n] or 0), np.asarray(row[q] if row[q] is not None else [], dtype=np.float64))
+
+
+def collect_quantiles(
+    sketches: DataFrame, key: str = "part_key", reference: bytes | None = None
+) -> tuple[dict[str, Quantiles], Quantiles | None]:
+    """ONE collect: every ``key`` value's merged sketch plus a reference, all
+    as :class:`Quantiles`. The reference is the stored blob when given
+    (fed back as a binary literal), else the merge of every row — a
+    ``rollup(key)``, so the global merge runs in the same Spark aggregate as
+    the per-key merges. Returns ({key: Quantiles}, reference or None when
+    there are no rows)."""
+    merged = [F.kll_merge_agg_double("sketch").alias("sketch"), F.sum("n").alias("n")]
+    if reference is None:
+        rows = sketches.rollup(key).agg(*merged, F.grouping_id().alias("ref"))
+    else:
+        blob = F.lit(bytes(reference))
+        stored = sketches.sparkSession.range(1).select(
+            F.lit(None).cast("string").alias(key), blob.alias("sketch"),
+            F.kll_sketch_get_n_double(blob).alias("n"), F.lit(1).alias("ref"),
         )
-
-    return blobs.groupBy("part_key", "column").applyInPandas(
-        merge_group, schema=MULTI_SKETCH_SCHEMA
-    )
-
-
-def collect_digests(sketches: DataFrame) -> dict[str, TDigest]:
-    """Driver-side: part_key → TDigest. Input is one small row per partition."""
-    return {r["part_key"]: TDigest.from_bytes(r["sketch"]) for r in sketches.collect()}
-
-
-def global_digest(digests: dict[str, TDigest]) -> TDigest:
-    return merge_all([digests[k] for k in sorted(digests)])
+        rows = sketches.groupBy(key).agg(*merged, F.lit(0).alias("ref")).unionByName(stored)
+    parts, ref = {}, None
+    for r in rows.select(key, "ref", "n", _quantiles("sketch", "n").alias("q")).collect():
+        if r["ref"]:
+            ref = _to_quantiles(r)
+        else:
+            parts[r[key]] = _to_quantiles(r)
+    return parts, ref
 
 
 # --- reference persistence (run-over-run drift) ---------------------------
-def save_reference(sketches: DataFrame, path: str) -> TDigest:
-    """Persist the merged global digest of a run as the drift baseline.
+def save_reference(sketches: DataFrame, path: str) -> bytes:
+    """Persist the merged global sketch of a run as the drift baseline and
+    return its blob.
 
     The file is the production run-over-run contract: today's validation run
     compares each partition against YESTERDAY's saved reference instead of
-    this run's own global digest. Atomic write (tmp + replace); the blob is
-    the t-digest's own serialization plus a 1-line JSON header."""
-    import json
-    import os
-
-    digs = collect_digests(sketches)
-    if not digs:
+    this run's own global merge. Atomic write (tmp + replace); the blob is
+    the KLL sketch's own compact serialization after a 1-line JSON header."""
+    row = sketches.agg(
+        F.kll_merge_agg_double("sketch").alias("sketch"), F.sum("n").alias("n")
+    ).collect()[0]
+    if not row["n"]:
         raise ValueError("save_reference: no sketches — an empty reference would "
                          "NaN every KS/PSI and silently pass all drift checks")
-    ref = global_digest(digs)
+    blob = bytes(row["sketch"])
+    header = json.dumps({**REFERENCE_FORMAT, "n": int(row["n"])}).encode()
     tmp = path + ".tmp"
-    header = json.dumps({"format": "lyra-tdigest-ref", "version": 1, "n": ref.size}).encode()
     with open(tmp, "wb") as f:
-        f.write(header + b"\n" + ref.to_bytes())
+        f.write(header + b"\n" + blob)
     os.replace(tmp, path)
-    return ref
+    return blob
 
 
-def load_reference(path: str) -> TDigest:
+def load_reference(path: str) -> bytes:
+    """The KLL blob of a reference file written by :func:`save_reference`.
+    Any other format (a t-digest reference from before the KLL sketches)
+    raises ValueError naming it: its blob is not a KLL sketch."""
     with open(path, "rb") as f:
-        _header, blob = f.read().split(b"\n", 1)
-    return TDigest.from_bytes(blob)
+        header, blob = f.read().split(b"\n", 1)
+    meta = json.loads(header)
+    found = {k: meta.get(k) for k in REFERENCE_FORMAT}
+    if found != REFERENCE_FORMAT:
+        raise ValueError(
+            f"{path}: drift reference format {found['format']!r} version {found['version']} "
+            f"is not {REFERENCE_FORMAT['format']!r} version {REFERENCE_FORMAT['version']}; "
+            "rebuild it with save_reference"
+        )
+    return blob
 
 
 # --- categorical drift (distributed, pure Catalyst) -------------------------
@@ -173,7 +214,7 @@ def categorical_psi(
     null_token: str = "<NULL>",
 ) -> DataFrame:
     """Per-partition PSI of a CATEGORICAL column's value distribution vs the
-    whole table (role/tool/lang drift — the t-digest path covers numeric
+    whole table (role/tool/lang drift — the KLL path covers numeric
     columns only, and quantile sketches are meaningless on nominal values).
 
     Returns (partition, psi, js, n_rows, n_categories) — PSI plus the
@@ -312,11 +353,11 @@ def categorical_psi_trailing(
     )
 
 
-# --- drift metrics (numpy on digests) -------------------------------------
-def ks_statistic(a: TDigest, b: TDigest, grid_points: int = 256) -> float:
-    """max |CDF_a − CDF_b| on a shared quantile-union grid."""
-    qs = np.linspace(0.0, 1.0, grid_points)
-    grid = np.unique(np.concatenate([a.quantile(qs), b.quantile(qs)]))
+# --- drift metrics (numpy on quantile grids) --------------------------------
+def ks_statistic(a: Quantiles, b: Quantiles) -> float:
+    """max |CDF_a − CDF_b| over the union of both quantile grids — the
+    points where either step CDF jumps."""
+    grid = np.union1d(a.q, b.q)
     return float(np.max(np.abs(a.cdf(grid) - b.cdf(grid))))
 
 
@@ -325,16 +366,19 @@ def ks_exact(
 ) -> float:
     """EXACT two-sample Kolmogorov–Smirnov statistic between two groups'
     value distributions: max over the distinct-value grid of |ECDF_a −
-    ECDF_b|. This is the ground-truth gate the digest-based
+    ECDF_b|. This is the ground-truth gate the sketch-based
     :func:`ks_statistic` is tolerance-checked against (driver query
-    `ks_tolerance`); the digests (rows 30-31) are the 10¹²-row path.
+    `ks_tolerance`); the sketches (rows 30-31) are the 10¹²-row path.
 
     Shape: one hash-agg collapses the data to the distinct-value grid
     (per-value counts for each side — constant buffers), then ONE
     unpartitioned window walks the grid for the running counts. The global
     window is a single task over DISTINCT VALUES — honest for a gate/sample
     mode (same stance as percentile_stats, row 60), and exactly the part the
-    sketch path exists to avoid at full scale.
+    sketch path exists to avoid at full scale. The grid is counted first
+    (and kept, so the input is scanned once); above
+    :data:`KS_EXACT_MAX_DISTINCT` distinct values it raises ValueError
+    instead of starting that single task.
     """
     from pyspark.sql import Window
 
@@ -344,10 +388,16 @@ def ks_exact(
     grid = v.groupBy("x").agg(
         F.count(F.when(F.col("g") == group_a, 1)).alias("ca"),
         F.count(F.when(F.col("g") == group_b, 1)).alias("cb"),
-    )
+    ).localCheckpoint(eager=False)
+    distinct = grid.count()
+    if distinct > KS_EXACT_MAX_DISTINCT:
+        raise ValueError(
+            f"ks_exact: {distinct} distinct values exceed KS_EXACT_MAX_DISTINCT="
+            f"{KS_EXACT_MAX_DISTINCT} (the grid is walked by one task); compare "
+            "sketches with ks_statistic instead"
+        )
     # totals come from a full-frame window over the SAME sort as the running
-    # counts — one scan of the input, one sort of the distinct grid, one job
-    # (a separate groupBy-collect for the totals would re-scan the table)
+    # counts — one sort of the distinct grid, one job
     wcum = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     wtot = Window.orderBy("x").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
@@ -370,14 +420,11 @@ def ks_exact(
     return float(row["ks"])
 
 
-def psi(reference: TDigest, current: TDigest, bins: int = 10, eps: float = 1e-6) -> float:
+def psi(reference: Quantiles, current: Quantiles, bins: int = 10, eps: float = 1e-6) -> float:
     """Population Stability Index over equi-probable bins from the reference."""
-    edges = reference.quantile(np.linspace(0.0, 1.0, bins + 1))
-    edges[0], edges[-1] = -np.inf, np.inf
-    # interior edges must be strictly increasing for cdf differencing
-    interior = np.maximum.accumulate(edges[1:-1])
-    ref_cdf = np.concatenate([[0.0], reference.cdf(interior), [1.0]])
-    cur_cdf = np.concatenate([[0.0], current.cdf(interior), [1.0]])
+    edges = reference.quantile(np.linspace(0.0, 1.0, bins + 1))[1:-1]
+    ref_cdf = np.concatenate([[0.0], reference.cdf(edges), [1.0]])
+    cur_cdf = np.concatenate([[0.0], current.cdf(edges), [1.0]])
     p = np.clip(np.diff(ref_cdf), eps, None)
     q = np.clip(np.diff(cur_cdf), eps, None)
     p, q = p / p.sum(), q / q.sum()
@@ -392,8 +439,8 @@ def numeric_drift_trailing(
     ks_threshold: float = 0.10,
     ks_alpha_c: float = 1.95,
 ) -> pd.DataFrame:
-    """Trailing-window NUMERIC drift: each partition's t-digest KS-compared
-    against the POOLED digest of the previous ``k`` partitions (in sorted
+    """Trailing-window NUMERIC drift: each partition's sketch KS-compared
+    against the POOLED sketch of the previous ``k`` partitions (in sorted
     partition-key order — dates sort chronologically). The numeric
     counterpart of :func:`categorical_psi_trailing`, and the run-over-run
     monitor shape: a whole-table reference (drift_verdicts) dilutes a regime
@@ -401,47 +448,51 @@ def numeric_drift_trailing(
     it lands.
 
     Scale shape: the data is touched by ONE distributed sketch pass
-    (sketch_by_partition — mapInPandas partial digests, per-partition merge);
-    pooling and KS run on the driver over P bounded-size digests with an
-    incremental window (append + drop, each a centroid-array merge), so
-    driver work is O(P·k·centroids) with zero further jobs — at 10⁵ Iceberg
-    partitions this is milliseconds per partition.
+    (sketch_by_partition); the pooled sketch is ``kll_merge_agg_double``
+    over a ``ROWS BETWEEN k PRECEDING AND 1 PRECEDING`` window on the P
+    per-partition sketch rows (one task over P rows — the same rows the
+    driver collects), and both sketches reach the driver as quantile grids
+    in the same collect.
 
     The KS gate is sample-size aware exactly like drift_verdicts: the cut is
     max(ks_threshold, c·√((n+m)/(n·m))) — a fixed threshold on a small
     partition fires on pure sampling noise. The first partition has no
     trailing history and reports ks=NaN, pass=True.
     """
+    from pyspark.sql import Window
+
     if k <= 0:
         raise ValueError("k must be positive")
-    digests = collect_digests(sketch_by_partition(df, value_col, partition_col))
-    keys = sorted(digests)
-    rows = []
-    window: list[TDigest] = []
-    for p in keys:
-        if window:
-            pooled = merge_all(window)
-            ks = ks_statistic(digests[p], pooled)
-            n, m = digests[p].size, pooled.size
+    w = Window.orderBy("part_key").rowsBetween(-int(k), -1)
+    rows = (
+        sketch_by_partition(df, value_col, partition_col)
+        .select(
+            "part_key", "n", _quantiles("sketch", "n").alias("q"),
+            F.count(F.lit(1)).over(w).alias("n_ref_parts"),
+            F.coalesce(F.sum("n").over(w), F.lit(0)).alias("m"),
+            F.kll_merge_agg_double("sketch").over(w).alias("pooled"),
+        )
+        .select("part_key", "n", "q", "n_ref_parts", "m", _quantiles("pooled", "m").alias("ref_q"))
+        .collect()
+    )
+    out = []
+    for r in sorted(rows, key=lambda r: r["part_key"]):
+        if r["n_ref_parts"]:
+            cur, pooled = _to_quantiles(r), _to_quantiles(r, q="ref_q", n="m")
+            n, m = cur.n, pooled.n
             cut = max(ks_threshold, ks_alpha_c * math.sqrt((n + m) / (n * m)))
-            rows.append(
-                {"part_key": p, "ks": ks, "n_ref_parts": len(window),
-                 "threshold": cut, "pass": ks < cut}
-            )
+            ks = ks_statistic(cur, pooled)
+            out.append({"part_key": r["part_key"], "ks": ks, "n_ref_parts": r["n_ref_parts"],
+                        "threshold": cut, "pass": ks < cut})
         else:
-            rows.append(
-                {"part_key": p, "ks": float("nan"), "n_ref_parts": 0,
-                 "threshold": ks_threshold, "pass": True}
-            )
-        window.append(digests[p])
-        if len(window) > k:
-            window.pop(0)
-    return pd.DataFrame(rows)
+            out.append({"part_key": r["part_key"], "ks": float("nan"), "n_ref_parts": 0,
+                        "threshold": ks_threshold, "pass": True})
+    return pd.DataFrame(out)
 
 
 def drift_verdicts(
     sketches: DataFrame,
-    reference: TDigest | None = None,
+    reference: bytes | None = None,
     ks_threshold: float = 0.10,
     psi_threshold: float = 0.25,
     psi_min_n: int = 500,
@@ -449,20 +500,20 @@ def drift_verdicts(
     rule_id: str = "text_len_drift",
     loo_max_partitions: int = 10,
 ) -> pd.DataFrame:
-    """Per-partition KS/PSI vs a reference digest → pass/fail frame.
+    """Per-partition KS/PSI vs a reference sketch → pass/fail frame.
 
-    If ``reference`` is None, each partition is compared against the merged
-    GLOBAL digest of all partitions (self-inclusion reference) — the
-    cold-start mode when no historical baseline exists. The global digest is
-    merged ONCE, so driver work is O(P) in the partition count (the round-1
-    leave-one-out variant re-merged all other digests per partition: O(P²),
-    melting the driver at 10⁵ Iceberg partitions). Self-inclusion bias: a
-    drifted partition contributes ~n_k/N of the reference mass, diluting its
-    own KS/PSI by that factor — negligible for P ≫ 1, but at small P (2-3
-    partitions) the dilution can mask real drift, so for
-    P < ``loo_max_partitions`` the reference falls back to per-partition
-    LEAVE-ONE-OUT merges (O(P²) is free at that size). Production runs should
-    pass a persisted baseline (save_reference/load_reference) anyway.
+    ``reference`` is a stored KLL blob (load_reference). If it is None, each
+    partition is compared against the merged GLOBAL sketch of all partitions
+    (self-inclusion reference) — the cold-start mode when no historical
+    baseline exists. The global sketch is merged ONCE, in the same Spark
+    aggregate and collect as the per-partition quantiles, so driver work is
+    O(P) in the partition count. Self-inclusion bias: a drifted partition
+    contributes ~n_k/N of the reference mass, diluting its own KS/PSI by that
+    factor — negligible for P ≫ 1, but at small P (2-3 partitions) the
+    dilution can mask real drift, so for P < ``loo_max_partitions`` the
+    reference falls back to per-partition LEAVE-ONE-OUT merges (one more
+    small Spark aggregate over copies of the P sketches). Production runs
+    should pass a persisted baseline (save_reference/load_reference) anyway.
 
     Thresholds are SAMPLE-SIZE AWARE: a fixed KS cut is statistically wrong
     for small partitions (pure sampling noise gives KS ≈ c/√n), so the KS gate
@@ -471,12 +522,10 @@ def drift_verdicts(
     (binned PSI on tiny samples is dominated by empty-bin noise); it is always
     reported.
     """
-    digests = collect_digests(sketches)
-    keys = sorted(digests)
-    # cold-start reference: leave-one-out below loo_max_partitions (dilution
-    # would be material), single self-inclusive global merge above it
-    if reference is not None and reference.size == 0:
-        raise ValueError("drift_verdicts: empty reference digest — every KS/PSI "
+    parts, ref = collect_quantiles(sketches, reference=reference)
+    keys = sorted(parts)
+    if reference is not None and ref.n == 0:
+        raise ValueError("drift_verdicts: empty reference sketch — every KS/PSI "
                          "would be NaN and silently pass")
     if not keys:
         # a columns-less pd.DataFrame([]) would KeyError (or silently
@@ -492,22 +541,26 @@ def drift_verdicts(
         # drift, decision 49) exactly like numeric_drift_trailing's first row
         k = keys[0]
         return pd.DataFrame([
-            {"part_key": k, "rule_id": rule_id, "n": int(max(digests[k].size, 1.0)),
+            {"part_key": k, "rule_id": rule_id, "n": max(parts[k].n, 1),
              "ks": float("nan"), "ks_crit": float("nan"), "psi": float("nan"),
              "pass": True}
         ])
-    loo = reference is None and 1 < len(keys) < loo_max_partitions
-    # the global merge is only needed when NOT leave-one-out (loo rebuilds
-    # ref per partition anyway — merging it here would be wasted O(P) work)
-    ref = reference if reference is not None else (None if loo else global_digest(digests))
+    # cold-start reference: leave-one-out below loo_max_partitions (dilution
+    # would be material), the single self-inclusive global merge above it.
+    # Each sketch row is copied to every OTHER key, so grouping by key merges
+    # the rest — P·(P−1) sketch rows, only ever for small P
+    loo = None
+    if reference is None and len(keys) < loo_max_partitions:
+        others = F.array_remove(F.array(*[F.lit(k) for k in keys]), F.col("part_key"))
+        loo, _ = collect_quantiles(sketches.select(F.explode(others).alias("part_key"), "sketch", "n"))
     rows = []
     for k in keys:
-        cur = digests[k]
-        if loo:
-            ref = merge_all([digests[j] for j in keys if j != k])
+        cur = parts[k]
+        if loo is not None:
+            ref = loo[k]
         ks = ks_statistic(ref, cur)
         p = psi(ref, cur)
-        n, m = max(cur.size, 1.0), max(ref.size, 1.0)
+        n, m = max(cur.n, 1), max(ref.n, 1)
         ks_crit = max(ks_threshold, ks_alpha_c * np.sqrt((n + m) / (n * m)))
         ks_fail = ks > ks_crit
         psi_fail = n >= psi_min_n and p > psi_threshold

@@ -406,9 +406,11 @@ def violation_samples(
     # otherwise leave the sampled subset to shuffle arbitration — the report
     # must be byte-stable like the sink it summarizes
     w = Window.partitionBy(*group_cols).orderBy(*key_cols, "observed_value")
+    # the rank casts to bigint AFTER the filter: row_number is int32, and a
+    # cast inside the predicate would hide it from the WindowGroupLimit rule
     samples = violations.withColumn("sample_rank", F.row_number().over(w)).filter(
         F.col("sample_rank") <= k
-    )
+    ).withColumn("sample_rank", F.col("sample_rank").cast("long"))
     totals = violations.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("group_total"))
     # no broadcast hint: totals is one row per group, usually tiny, but
     # group_cols=(partition, rule) at 10⁵ partitions is 10⁶+ rows — let AQE

@@ -19,7 +19,7 @@ _SHIPPED: set[int] = set()
 def ensure_shipped(spark: SparkSession) -> None:
     """Ship the lyra_spark package to executor Python workers.
 
-    pandas-UDF closures (custom predicates, t-digest sketching) pickle
+    pandas-UDF closures (custom predicates) pickle
     references to lyra_spark modules; executors must be able to import them.
     Under ``spark-submit --py-files dist/lyra_spark.zip`` (the production
     launch shape, BASELINE.json:14) this is a no-op; for ad-hoc sessions we

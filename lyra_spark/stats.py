@@ -424,7 +424,7 @@ def percentile_stats(
     partition_col: str | None = None,
 ) -> DataFrame:
     """Exact interpolated percentiles of a numeric column, long format
-    (percentile, value) — the oracle-checkable counterpart of the t-digest
+    (percentile, value) — the oracle-checkable counterpart of the KLL
     drift path (drift.py sketches approximate quantiles at scale; this pins
     the exact definition both implement: linear interpolation between order
     statistics, the Hyndman-Fan type-7 / SQL PERCENTILE_CONT rule).
@@ -433,7 +433,7 @@ def percentile_stats(
     partition's values, partials merge tree-wise, and the final interpolation
     happens once. That makes it O(column bytes) in executor memory per group
     at the FINAL step — honest for per-partition groups and profile samples;
-    at full 10¹²-row scale use the t-digest path and treat this as the
+    at full 10¹²-row scale use the KLL sketch path and treat this as the
     ground-truth gate run on samples/partitions.
     """
     group = [partition_col] if partition_col else []
@@ -470,7 +470,7 @@ def key_skew_profile(
     key grid, whose cost is key cardinality, never row count. The percentile
     over per-key counts is exact interpolated (same PERCENTILE_CONT rule as
     percentile_stats, and the same honesty note: at 10^9+ distinct keys feed
-    the grid to the t-digest path instead).
+    the grid to the KLL sketch path instead).
 
     recommended_buckets = clamp(ceil(max/mean), 1, max_buckets): enough salt
     that the hottest key's expected per-bucket share matches the average
@@ -727,7 +727,7 @@ def robust_outlier_rows(
     statistic — its aggregation buffer holds EVERY non-NULL value of a
     cohort, ~8 bytes × rows-per-partition on one executor. Fine to ~10⁸
     values/cohort; a 10^12-row table with few partitions must either pass
-    ``exact=False`` (t-digest-style ``percentile_approx``: constant
+    ``exact=False`` (sketch-based ``percentile_approx``: constant
     ~``approx_accuracy``-sized buffers, rank error ≤ 1/accuracy — at the
     default 10⁴ the median of any real cohort moves well under the 3.5σ
     decision margin) or pre-slice cohorts finer. ``exact=True`` stays the

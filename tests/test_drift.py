@@ -1,7 +1,9 @@
-"""t-digest accuracy, merge associativity, and end-to-end drift detection
+"""KLL sketch accuracy, merge associativity, and end-to-end drift detection
 (SURVEY.md §5.5, M4; tolerances from BASELINE.md)."""
 
+import json
 import os
+import time
 
 import numpy as np
 import pandas as pd
@@ -10,8 +12,13 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from lyra_spark.drift import drift_verdicts, ks_statistic, psi, sketch_by_partition
-from lyra_spark.sketch.tdigest import TDigest, merge_all
+from lyra_spark.drift import (
+    collect_quantiles,
+    drift_verdicts,
+    ks_statistic,
+    psi,
+    sketch_by_partition,
+)
 
 
 def exact_ks(a: np.ndarray, b: np.ndarray) -> float:
@@ -21,58 +28,85 @@ def exact_ks(a: np.ndarray, b: np.ndarray) -> float:
     return float(np.max(np.abs(ca - cb)))
 
 
-def test_tdigest_quantile_accuracy():
+def sketch_groups(spark, groups: dict, tasks: int = 4):
+    """{group: values} → ({group: Quantiles}, merged Quantiles), sketched by
+    Spark over ``tasks`` input partitions (so partial sketches merge)."""
+    pdf = pd.concat(
+        [pd.DataFrame({"part_date": g, "v": np.asarray(v, dtype=np.float64)}) for g, v in groups.items()]
+    )
+    df = spark.createDataFrame(pdf).repartition(tasks)
+    return collect_quantiles(sketch_by_partition(df, "v"))
+
+
+def test_kll_quantile_accuracy_vs_numpy(spark):
+    """Every quantile of the sketch grid sits within 0.01 in rank of the
+    exact distribution, and the step CDF agrees at the exact quantiles."""
     rng = np.random.default_rng(0)
     v = rng.lognormal(4.0, 0.6, 200_000)
-    d = TDigest.from_values(v, delta=200)
+    parts, _ = sketch_groups(spark, {"p": v})
+    d = parts["p"]
+    assert d.n == len(v)
+    sv = np.sort(v)
+    ranks = np.searchsorted(sv, d.q, side="right") / len(v)
+    assert np.max(np.abs(ranks - np.linspace(0.0, 1.0, len(d.q)))) < 0.01
+    assert d.q[0] == sv[0] and d.q[-1] == sv[-1]
     for q in [0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99]:
         exact = np.quantile(v, q)
-        got = float(d.quantile(q)[0])
-        assert abs(d.cdf(exact)[0] - q) < 0.01, (q, exact, got)
-
-
-def test_tdigest_roundtrip_bytes():
-    d = TDigest.from_values(np.arange(1000.0))
-    d2 = TDigest.from_bytes(d.to_bytes())
-    assert np.allclose(d.means, d2.means) and np.allclose(d.weights, d2.weights)
-    assert d2.delta == d.delta and d2.size == d.size
+        assert abs(d.cdf(exact) - q) < 0.01, (q, exact, d.quantile(q))
 
 
 @settings(max_examples=20, deadline=None)
 @given(st.lists(st.floats(-1e6, 1e6), min_size=10, max_size=500), st.integers(2, 5))
-def test_merge_associativity_vs_direct(values, splits):
-    """Merging chunked digests ≈ digest of everything (order must not matter)."""
+def test_merge_associativity_vs_direct(spark, values, splits):
+    """Merging chunked sketches ≈ sketch of everything (order must not
+    matter). Below k values a KLL sketch holds every value, so the merged
+    grid equals the direct one exactly."""
     v = np.asarray(values)
-    chunks = np.array_split(v, splits)
-    merged = merge_all([TDigest.from_values(c, 100) for c in chunks if len(c)])
-    direct = TDigest.from_values(v, 100)
-    assert merged.size == direct.size
-    for q in [0.1, 0.5, 0.9]:
-        lo, hi = v.min(), v.max()
-        scale = max(hi - lo, 1e-9)
-        assert abs(merged.quantile(q)[0] - direct.quantile(q)[0]) / scale < 0.15
+    chunks = {f"c{i}": c for i, c in enumerate(np.array_split(v, splits)) if len(c)}
+    _, merged = sketch_groups(spark, chunks)
+    direct, _ = sketch_groups(spark, {"all": v}, tasks=1)
+    assert merged.n == direct["all"].n == len(v)
+    assert np.array_equal(merged.q, direct["all"].q)
 
 
-def test_ks_between_digests_close_to_exact():
+def test_kll_merged_chunks_match_direct_sketch(spark):
+    """Above k values compaction is randomized: 8 merged partition sketches
+    and one direct sketch of the same 200k values must still agree to 0.01
+    in rank, and each must stay within 0.01 of the exact distribution."""
+    rng = np.random.default_rng(3)
+    v = rng.lognormal(4.0, 0.6, 200_000)
+    _, merged = sketch_groups(spark, {f"c{i}": c for i, c in enumerate(np.array_split(v, 8))})
+    direct, _ = sketch_groups(spark, {"all": v})
+    assert merged.n == direct["all"].n == len(v)
+    assert ks_statistic(merged, direct["all"]) <= 0.01
+    sv = np.sort(v)
+    for d in (merged, direct["all"]):
+        ranks = np.searchsorted(sv, d.q, side="right") / len(v)
+        assert np.max(np.abs(ranks - np.linspace(0.0, 1.0, len(d.q)))) < 0.01
+
+
+def test_ks_between_digests_close_to_exact(spark):
     rng = np.random.default_rng(1)
     a = rng.normal(0, 1, 100_000)
     b = rng.normal(0.3, 1, 100_000)  # true KS ≈ 0.119
-    ks_d = ks_statistic(TDigest.from_values(a, 200), TDigest.from_values(b, 200))
-    assert abs(ks_d - exact_ks(a, b)) < 0.01
+    parts, _ = sketch_groups(spark, {"a": a, "b": b})
+    assert abs(ks_statistic(parts["a"], parts["b"]) - exact_ks(a, b)) < 0.01
 
 
-def test_psi_detects_shift_and_passes_same():
+def test_psi_detects_shift_and_passes_same(spark):
     rng = np.random.default_rng(2)
-    base = TDigest.from_values(rng.lognormal(4, 0.6, 100_000), 200)
-    same = TDigest.from_values(rng.lognormal(4, 0.6, 100_000), 200)
-    shifted = TDigest.from_values(rng.lognormal(4, 0.6, 100_000) * 3, 200)
-    assert psi(base, same) < 0.05
-    assert psi(base, shifted) > 0.5
+    parts, _ = sketch_groups(spark, {
+        "base": rng.lognormal(4, 0.6, 100_000),
+        "same": rng.lognormal(4, 0.6, 100_000),
+        "shifted": rng.lognormal(4, 0.6, 100_000) * 3,
+    })
+    assert psi(parts["base"], parts["same"]) < 0.05
+    assert psi(parts["base"], parts["shifted"]) > 0.5
 
 
 def test_drift_end_to_end_flags_drifted_partition(spark, fixtures_sf0001):
     """The fixture multiplies text length ×3 in the DRIFT_DATE partition —
-    global-digest cold-start drift must fail exactly that partition region."""
+    global-sketch cold-start drift must fail exactly that partition region."""
     from lyra_spark.fixtures import DRIFT_DATE
 
     tdf = spark.read.parquet(os.path.join(fixtures_sf0001, "transcripts"))
@@ -85,7 +119,7 @@ def test_drift_end_to_end_flags_drifted_partition(spark, fixtures_sf0001):
 
 
 def test_reference_roundtrip_and_run_over_run(tmp_path, spark, fixtures_sf0001):
-    """save_reference → load_reference preserves the digest; drift against a
+    """save_reference → load_reference preserves the sketch; drift against a
     STORED baseline (the production run-over-run mode) flags the drifted
     partition and passes the steady ones."""
     from lyra_spark.drift import load_reference, save_reference
@@ -96,17 +130,66 @@ def test_reference_roundtrip_and_run_over_run(tmp_path, spark, fixtures_sf0001):
     # baseline from the steady region only (exclude the drifted date)
     steady = tdf.filter(F.col("part_date") != F.lit(DRIFT_DATE))
     sk_ref = sketch_by_partition(steady, "cast(length(text) as double)", "part_date")
-    path = str(tmp_path / "ref.tdigest")
+    path = str(tmp_path / "ref.kll")
     saved = save_reference(sk_ref, path)
     loaded = load_reference(path)
-    assert np.allclose(saved.means, loaded.means) and np.allclose(saved.weights, loaded.weights)
-    assert loaded.size == saved.size
+    assert loaded == saved
 
     sk_all = sketch_by_partition(tdf, "cast(length(text) as double)", "part_date")
     verdicts = drift_verdicts(sk_all, reference=loaded)
     by_key = verdicts.set_index("part_key")["pass"]
     assert not by_key[str(DRIFT_DATE)], "drifted partition must fail vs stored baseline"
     assert by_key.mean() > 0.9
+
+
+def test_kll_reference_file_roundtrip(tmp_path, spark):
+    """The reference file is a versioned JSON header line + the merged KLL
+    blob; loading it back yields the same blob, whose quantile grid equals
+    the in-run global merge (below k values both hold every value)."""
+    from lyra_spark.drift import load_reference, save_reference
+
+    rng = np.random.default_rng(5)
+    pdf = pd.DataFrame({"part_date": ["a"] * 300 + ["b"] * 400, "v": rng.normal(size=700)})
+    sk = sketch_by_partition(spark.createDataFrame(pdf), "v")
+    path = str(tmp_path / "ref.kll")
+    blob = save_reference(sk, path)
+    with open(path, "rb") as f:
+        header = json.loads(f.readline())
+    assert header == {"format": "lyra-kll-ref", "version": 2, "n": 700}
+    assert load_reference(path) == blob
+    _, stored = collect_quantiles(sk, reference=load_reference(path))
+    _, merged = collect_quantiles(sk)
+    assert stored.n == merged.n == 700
+    assert np.array_equal(stored.q, merged.q)
+
+
+def test_load_reference_rejects_legacy_tdigest_file(tmp_path):
+    """A t-digest reference (format lyra-tdigest-ref, version 1) holds no KLL
+    sketch: loading it must fail loudly, naming the format."""
+    from lyra_spark.drift import load_reference
+
+    path = tmp_path / "ref.tdigest"
+    header = json.dumps({"format": "lyra-tdigest-ref", "version": 1, "n": 10}).encode()
+    path.write_bytes(header + b"\n" + b"TD01" + bytes(36))
+    with pytest.raises(ValueError, match="lyra-tdigest-ref"):
+        load_reference(str(path))
+
+
+def test_drift_verdicts_leave_one_out_matches_exact(spark):
+    """Below loo_max_partitions each partition is judged against the merge
+    of the OTHER partitions: every KS matches the exact leave-one-out pool's,
+    the shifted partition fails and the steady ones pass."""
+    rng = np.random.default_rng(9)
+    vals = {f"p{i}": rng.normal(0, 1, 2000) for i in range(8)}
+    vals["p8"] = rng.normal(1.0, 1, 2000)
+    pdf = pd.concat([pd.DataFrame({"part_date": k, "v": v}) for k, v in vals.items()])
+    out = drift_verdicts(sketch_by_partition(spark.createDataFrame(pdf).repartition(4), "v"))
+    got = out.set_index("part_key")
+    assert list(got["pass"]) == [True] * 8 + [False]
+    for k in vals:
+        pool = np.concatenate([v for j, v in vals.items() if j != k])
+        assert abs(got.loc[k, "ks"] - exact_ks(vals[k], pool)) <= 0.01, k
+        assert got.loc[k, "n"] == 2000
 
 
 def test_categorical_psi_matches_numpy_reference(spark):
@@ -290,19 +373,14 @@ def test_sketch_columns_single_scan_matches_per_column(spark, fixtures_sf0001):
     """One-scan multi-column sketching agrees with the per-column path
     (CDF gap ≤ 0.005 — merge order may shuffle centroids, distributions
     must not move) and its plan reads the table ONCE."""
-    from lyra_spark.drift import (
-        collect_digests,
-        ks_statistic,
-        sketch_by_partition,
-        sketch_columns_by_partition,
-    )
+    from lyra_spark.drift import sketch_columns_by_partition
 
     tdf = spark.read.parquet(os.path.join(fixtures_sf0001, "transcripts"))
     cols = ["cast(length(text) as double)", "cast(turn_idx as double)"]
     multi = sketch_columns_by_partition(tdf, cols, "part_date")
     for c in cols:
-        single = collect_digests(sketch_by_partition(tdf, c, "part_date"))
-        sliced = collect_digests(multi.filter(F.col("column") == c).drop("column"))
+        single, _ = collect_quantiles(sketch_by_partition(tdf, c, "part_date"))
+        sliced, _ = collect_quantiles(multi.filter(F.col("column") == c).drop("column"))
         assert set(single) == set(sliced)
         for k in single:
             assert ks_statistic(single[k], sliced[k]) <= 0.005
@@ -359,14 +437,72 @@ def test_drift_verdicts_empty_input_has_contract_columns(spark):
 
 def test_sketch_by_partition_accepts_timestamp_column(spark):
     """A timestamp value_col must sketch (cast to double like the
-    multi-column sibling), not crash in the pandas worker."""
-    from lyra_spark.drift import collect_digests, sketch_by_partition
-    from pyspark.sql import functions as F
-
+    multi-column sibling), not fail the aggregate's type check."""
     df = spark.range(100).select(
         F.lit("p1").alias("part_date"),
         F.timestamp_micros((F.col("id") * 1_000_000).cast("long")).alias("ts"),
     )
-    sk = sketch_by_partition(df, F.col("ts"))
-    d = collect_digests(sk)["p1"]
-    assert d.size == 100
+    parts, _ = collect_quantiles(sketch_by_partition(df, F.col("ts")))
+    assert parts["p1"].n == 100
+    assert parts["p1"].q[0] == 0.0 and parts["p1"].q[-1] == 99.0
+
+
+def _plan(df) -> str:
+    import contextlib
+    import io as _io
+
+    buf = _io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def test_sketch_plans_have_no_python_worker(spark, fixtures_sf0001):
+    """Both sketch builders are native JVM aggregates: no plan node hands
+    rows to a Python worker, and their rows keep the sketch schemas."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from lyra_spark.drift import MULTI_SKETCH_SCHEMA, SKETCH_SCHEMA, sketch_columns_by_partition
+
+    tdf = spark.read.parquet(os.path.join(fixtures_sf0001, "transcripts"))
+    for df, schema in (
+        (sketch_by_partition(tdf, "cast(length(text) as double)", "part_date"), SKETCH_SCHEMA),
+        (sketch_columns_by_partition(tdf, ["cast(length(text) as double)", "turn_idx"], "part_date"),
+         MULTI_SKETCH_SCHEMA),
+    ):
+        want = _parse_datatype_string(schema)
+        assert [(f.name, f.dataType) for f in df.schema] == [(f.name, f.dataType) for f in want]
+        plan = _plan(df)
+        assert "kll_sketch_agg_double" in plan
+        for node in ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan, node
+
+
+def test_drift_verdicts_spark_job_count(spark, fixtures_sf0001):
+    """Whole-table cold-start drift is one collect: the sketch aggregate's
+    exchange, the rollup's exchange (the global merge) and the result stage
+    — three Spark jobs under AQE, whatever the partition count."""
+    sc = spark.sparkContext
+    tdf = spark.read.parquet(os.path.join(fixtures_sf0001, "transcripts"))
+    group = f"drift_jobs_{time.time_ns()}"
+    sc.setJobGroup(group, "drift job count")
+    try:
+        out = drift_verdicts(sketch_by_partition(tdf, "cast(length(text) as double)", "part_date"))
+    finally:
+        sc.setJobGroup("", "")
+    assert len(out) >= 10  # above loo_max_partitions: the global-merge path
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+
+
+def test_ks_exact_refuses_unbounded_grid(spark, monkeypatch):
+    """Past KS_EXACT_MAX_DISTINCT distinct values ks_exact raises with the
+    distinct count instead of starting its single-task window."""
+    from lyra_spark import drift
+
+    pdf = pd.DataFrame({"g": ["a", "b"] * 25, "x": np.arange(50, dtype=np.float64)})
+    df = spark.createDataFrame(pdf)
+    monkeypatch.setattr(drift, "KS_EXACT_MAX_DISTINCT", 49)
+    with pytest.raises(ValueError, match="50 distinct values"):
+        drift.ks_exact(df, "x", "g", "a", "b")
+    monkeypatch.setattr(drift, "KS_EXACT_MAX_DISTINCT", 50)
+    assert drift.ks_exact(df, "x", "g", "a", "b") == pytest.approx(0.04)

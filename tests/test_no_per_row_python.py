@@ -83,6 +83,13 @@ def test_no_row_loops_in_pandas_udfs():
     assert not offenders, f"per-row iteration over Arrow batches: {offenders}"
 
 
+def test_drift_never_crosses_into_python_workers():
+    """Drift sketches are Spark's native KLL aggregates end to end: drift.py
+    builds and merges them without mapInPandas/applyInPandas."""
+    src = open(os.path.join(PKG, "drift.py")).read()
+    assert not re.search(r"\.(mapInPandas|applyInPandas)\(", src)
+
+
 def test_collect_only_on_small_frames():
     offenders = []
     for fn, path in _sources():

@@ -155,6 +155,28 @@ def test_violation_samples_bounded(spark):
     assert by_rule["r2"] == [(1, "c000", 1)]
 
 
+def test_violation_samples_rank_is_bigint(spark):
+    """sample_rank is bigint like its DuckDB oracle's ROW_NUMBER (Spark's
+    row_number is int32), and the cast keeps the WindowGroupLimit pruning."""
+    import contextlib
+    import io
+
+    from pyspark.sql.types import LongType
+
+    from lyra_spark.engine import violation_samples
+
+    viol = spark.createDataFrame(
+        [("c%03d" % i, i, "r1", "v") for i in range(10)],
+        "conv_id string, turn_idx int, rule_id string, observed_value string",
+    )
+    out = violation_samples(viol, k=3)
+    assert out.schema["sample_rank"].dataType == LongType()
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        out.explain()
+    assert "WindowGroupLimit" in buf.getvalue()
+
+
 def test_outlier_rows_zscore(spark):
     from lyra_spark.stats import outlier_rows
 

@@ -91,17 +91,15 @@ def main(argv: list[str] | None = None) -> int:
                        messages=args.messages, abort_early=args.abort_early)
         if args.out:
             res.violations.write.mode("overwrite").parquet(args.out)
-            viol = spark.read.schema(res.violations.schema).parquet(args.out)
-        else:
-            viol = res.violations
+        # one collect of the lazy grid (one row per rule, or per cohort and
+        # rule); each cohort gates on its own rows
+        grid = res.verdicts.collect()
+        n_viol = sum(r["violation_count"] for r in grid)
         if part_col:
-            # one collect of the lazy grid; each cohort gates on its own rows
-            grid = res.verdicts.collect()
             cohorts: dict[str, list] = {}
             for r in grid:
                 cohorts.setdefault(str(r[part_col]), []).append(r)
             failing = sorted(k for k, rows in cohorts.items() if not verdict_gate(rows))
-            n_viol = sum(r["violation_count"] for r in grid)
             report["rule_verdicts"] = [
                 {"cohort": str(r[part_col]), "rule_id": r["rule_id"],
                  "pass": bool(r["pass"]), "violations": r["violation_count"],
@@ -109,27 +107,18 @@ def main(argv: list[str] | None = None) -> int:
                 for r in grid
             ]
             report["rule_failing_cohorts"] = failing
-            failed = failed or bool(failing)
             print(f"[lyra] rules: {len(ruleset.rules)} over {len(cohorts)} cohort(s), "
                   f"{n_viol} violation row(s), failing={failing[:10]}")
         else:
-            n_viol = viol.count()
-            from lyra_spark.engine import ruleset_severities, ruleset_tolerances
-
-            tols = ruleset_tolerances(ruleset) or {}
-            sevs = ruleset_severities(ruleset) or {}
-            n_rows = df.count()
-            per_rule = {r["rule_id"]: r["cnt"] for r in
-                        viol.groupBy("rule_id").count().withColumnRenamed("count", "cnt").collect()}
-            bad = [rid for rid, c in per_rule.items()
-                   if not verdict_gate([{"violation_count": c, "row_count": n_rows,
-                                         "severity": sevs.get(rid),
-                                         "tolerance": tols.get(rid)}])]
-            report["rule_violations"] = per_rule
-            report["rule_failing"] = sorted(bad)
-            failed = failed or bool(bad)
+            failing = sorted(r["rule_id"] for r in grid if not verdict_gate([r]))
+            report["rule_violations"] = {
+                r["rule_id"]: r["violation_count"] for r in grid if r["violation_count"] > 0
+            }
+            report["rule_failing"] = failing
+            n_rows = max((r["row_count"] for r in grid), default=0)
             print(f"[lyra] rules: {len(ruleset.rules)} over {n_rows} row(s), "
-                  f"{n_viol} violation row(s), failing rules={sorted(bad)[:10]}")
+                  f"{n_viol} violation row(s), failing rules={failing[:10]}")
+        failed = failed or bool(failing)
 
     if args.metric_rules:
         from lyra_spark.metrics import (

@@ -377,26 +377,25 @@ def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = Non
             # Row rules (the inlined referential check included) filter
             # map-only on the scan; rows keyed by dataset-check violations —
             # from the written sink when there is one, else recomputed from
-            # the result frame — are subtracted or marked via a broadcast
-            # join on (conv_id, turn_idx, part), so the batch never shuffles
+            # the result frame — are marked via a broadcast join on
+            # (conv_id, turn_idx, part), so the batch never shuffles. Both
+            # outputs filter the same marked frame on the same fail
+            # condition, one negated: complements by construction.
             ds_keys = (
                 viol.filter(F.col("rule_id").isin(*ds_rule_ids))
                 .select("conv_id", "turn_idx", part_key.alias("part"))
                 .distinct()
+                .withColumn("__ds_fail", F.lit(True))
             )
-            keyed = scoped.withColumn("part", part_key)
-            join_cols = ["conv_id", "turn_idx", "part"]
+            marked = scoped.withColumn("part", part_key).join(
+                F.broadcast(ds_keys), ["conv_id", "turn_idx", "part"], "left"
+            )
+            ds_fail = [F.col("__ds_fail")]
             if args.clean_out:
-                clean = clean_rows(keyed, suite_rules).join(F.broadcast(ds_keys), join_cols, "left_anti")
-                write_parts(clean, args.clean_out, batch)
+                clean = clean_rows(marked, suite_rules, extra_fail=ds_fail)
+                write_parts(clean.drop("__ds_fail"), args.clean_out, batch)
             if args.quarantine_out:
-                # full failing rows: rule failures via the negated map-only
-                # predicate, dataset-check keys OR'd in as a broadcast marker
-                # — together the exact complement of the clean side
-                marked = keyed.join(
-                    F.broadcast(ds_keys.withColumn("__ds_fail", F.lit(True))), join_cols, "left"
-                )
-                quar = quarantine_rows(marked, suite_rules, extra_fail=[F.col("__ds_fail")])
+                quar = quarantine_rows(marked, suite_rules, extra_fail=ds_fail)
                 write_parts(quar.drop("__ds_fail"), args.quarantine_out, batch)
         if hll_cols:
             from lyra_spark.stats import hll_sketches

@@ -33,8 +33,10 @@ over the interval-join construction (every shuffle key well-spread); only
 the unbounded-lookback case, which no bucketing can express, needs this
 window plan.
 
-Determinism: ties on right ts are broken by ``right_order_cols`` (greatest
-wins, both directions); callers pass the right table's unique id. NULL-key or
+Determinism: ties on right ts are broken by ``right_order_cols`` with
+pandas ``merge_asof``'s rule: backward takes the LAST tied row in
+right_order_cols order (the greatest), forward the FIRST (the smallest),
+in every operator here; callers pass the right table's unique id. NULL-key or
 NULL-ts right rows are dropped (a NULL key matches nothing — SQL join
 semantics, unlike Spark windows where NULL partition keys group together);
 NULL-key/NULL-ts LEFT rows are kept with a NULL match (left-join semantics).
@@ -109,15 +111,9 @@ def asof_join(
     )
     unioned = lsel.unionByName(rsel, allowMissingColumns=True)
 
-    # Tie-break: among right rows with equal ts the GREATEST right_order_cols
-    # wins in both directions. last() picks the final frame row with a
-    # non-NULL payload, so ascending order on the tie-break columns yields
-    # the max. src orders right (0) before left (1) at equal ts — that is
-    # what makes the bound inclusive (ts <= / >=).
-    tie = [
-        (F.col(_PAY)[f"__ord_{c}"] if c not in payload_cols else F.col(_PAY)[c]).asc_nulls_first()
-        for c in order_cols
-    ]
+    # src orders right (0) before left (1) at equal ts — that is what makes
+    # the bound inclusive (ts <= / >=); _tie_order breaks equal right ts.
+    tie = _tie_order(order_cols, payload_cols, forward=direction == "forward")
     if direction == "backward":
         order = [F.col(_TS).asc_nulls_first(), F.col(_SRC).asc(), *tie]
     else:
@@ -173,7 +169,7 @@ def asof_join_bounded(
       1. candidates via :func:`lyra_spark.ranges.interval_join` — right rows
          become tolerance-wide intervals, the equi-join runs on (key, time
          bucket), so even a hot key spreads across its time buckets;
-      2. per-left-row argmax with ``max_by`` over (right ts, tie-break) —
+      2. per-left-row pick with ``max_by``/``min_by`` over (right ts, tie-break) —
          grouped on ``left_id_cols`` (the left table's unique key), which is
          well-spread by definition;
       3. one final left join on ``left_id_cols`` restores unmatched rows —
@@ -182,7 +178,8 @@ def asof_join_bounded(
     Unbounded lookback cannot be expressed this way (no bucket width covers
     it) — that is exactly what :func:`asof_join` is for. Requires
     ``left_id_cols`` to uniquely identify left rows; ties on right ts break
-    to the GREATEST ``right_order_cols`` like asof_join.
+    on ``right_order_cols`` like asof_join (greatest backward, smallest
+    forward).
     """
     reserved = {_MATCHED, _PAY, "__lts__", "__w_start__", "__w_end__"} & set(left.columns)
     if reserved:
@@ -230,18 +227,18 @@ def asof_join_bounded(
         end_ts="__w_end__",
         bucket_width_sec=tol if tol > 0 else 1.0,
     )
-    # argmax per left row: nearest right ts wins (max rts backward, min rts
-    # forward — negate via the sort struct), ties to greatest order cols
-    sign = 1 if direction == "backward" else -1
+    # nearest right ts per left row, ties on the order cols: backward takes
+    # the greatest (ts, order cols), forward the smallest — pandas' rule
     rank = F.struct(
-        (epoch_us(F.col(_MATCHED)) * sign).alias("t"),
+        epoch_us(F.col(_MATCHED)).alias("t"),
         *[
             (F.col(f"__pay_{c}") if c in payload_cols else F.col(f"__ord_{c}")).alias(f"o_{c}")
             for c in order_cols
         ],
     )
+    pick = F.max_by if direction == "backward" else F.min_by
     best = cand.groupBy(*left_id_cols).agg(
-        F.max_by(
+        pick(
             F.struct(
                 F.col(_MATCHED).alias(_MATCHED),
                 *[F.col(f"__pay_{c}").alias(c) for c in payload_cols],
@@ -269,6 +266,18 @@ def asof_join_bounded(
         *[F.col(_PAY)[c].alias(outn) for c, outn in payload_cols.items()],
     )
     return out
+
+
+def _tie_order(order_cols: list[str], payload_cols: dict[str, str], forward: bool) -> list[Column]:
+    """Window sort keys that break equal right timestamps the pandas way.
+    F.last carries the row nearest the current row in traversal order, so
+    the backward window (ties ascending) carries the LAST tied row in
+    right_order_cols order, while the forward window must carry the FIRST
+    (a >= search is a lower bound in pandas): under its descending
+    traversal the ties sort descending, and nulls last mirrors
+    asc_nulls_first exactly."""
+    keys = [F.col(_PAY)[c] if c in payload_cols else F.col(_PAY)[f"__ord_{c}"] for c in order_cols]
+    return [k.desc_nulls_last() if forward else k.asc_nulls_first() for k in keys]
 
 
 def _check_payload_outputs(payload_cols: dict[str, str], left: DataFrame) -> None:
@@ -334,29 +343,16 @@ def asof_join_nearest(
     )
     unioned = lsel.unionByName(rsel, allowMissingColumns=True)
 
-    tie = [
-        (F.col(_PAY)[f"__ord_{c}"] if c not in payload_cols else F.col(_PAY)[c]).asc_nulls_first()
-        for c in order_cols
-    ]
-    # Forward-direction ties REVERSE the order: F.last carries the row
-    # nearest the current row in traversal order, so with equal right
-    # timestamps the backward window (tie asc) carries the LAST row in
-    # right_order_cols order — pandas' backward rule — while the forward
-    # window must carry the FIRST row (a >= search is a lower bound in
-    # pandas), which under a descending traversal means sorting ties
-    # descending (nulls last mirrors asc_nulls_first exactly).
-    tie_rev = [
-        (F.col(_PAY)[f"__ord_{c}"] if c not in payload_cols else F.col(_PAY)[c]).desc_nulls_last()
-        for c in order_cols
-    ]
     wb = (
         Window.partitionBy(*on)
-        .orderBy(F.col(_TS).asc_nulls_first(), F.col(_SRC).asc(), *tie)
+        .orderBy(F.col(_TS).asc_nulls_first(), F.col(_SRC).asc(),
+                 *_tie_order(order_cols, payload_cols, forward=False))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     wf = (
         Window.partitionBy(*on)
-        .orderBy(F.col(_TS).desc_nulls_first(), F.col(_SRC).asc(), *tie_rev)
+        .orderBy(F.col(_TS).desc_nulls_first(), F.col(_SRC).asc(),
+                 *_tie_order(order_cols, payload_cols, forward=True))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     null_guard = lambda m: F.when(F.col(_TS).isNull(), F.lit(None)).otherwise(m)  # noqa: E731

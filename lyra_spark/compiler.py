@@ -189,7 +189,11 @@ def _check_predicate(spec: RuleSpec, col: Column) -> Column:
                 out.loc[mask] = pd.Series(fn(s[mask]), index=s[mask].index, dtype="boolean")
             return out.fillna(False)
 
-        return F.coalesce(_pred(col), F.lit(True))
+        # nondeterministic only to the optimizer: it then cannot copy the UDF
+        # out of the projection that evaluates it (engine.row_violations), so
+        # rows cross into Python once. The user predicate itself must still
+        # be deterministic, since a retried task re-runs it.
+        return F.coalesce(_pred.asNondeterministic()(col), F.lit(True))
     raise ValueError(f"unknown rule kind {spec.kind!r}")
 
 

@@ -15,7 +15,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from lyra_spark.compiler import apply_coercions, compile_checks
 from lyra_spark.rules import RuleSet
@@ -46,16 +45,13 @@ def ruleset_tolerances(ruleset: RuleSet) -> dict[str, float] | None:
 @dataclass
 class ValidationResult:
     violations: DataFrame  # (*key_cols, [partition_col], rule_id, observed_value)
-    verdicts: DataFrame  # (partition_col, rule_id, pass, violation_count, row_count)
+    verdicts: DataFrame  # ([partition_col], rule_id, pass, violation_count, row_count)
     key_cols: list[str]
     partition_col: str | None
 
     def violations_sorted(self) -> DataFrame:
         """Stable (conv_id, turn_idx, rule_id) ordering — the byte-match contract."""
         return self.violations.orderBy(*self.key_cols, "rule_id", "observed_value")
-
-    def unpersist(self) -> None:
-        self.violations.unpersist()
 
 
 def row_violations(
@@ -83,18 +79,22 @@ def row_violations(
     pass. ``passes`` must be a never-NULL boolean Column; both columns are
     evaluated on the COERCED frame (after the ruleset's cast/trim rules).
 
-    Rule predicates MUST be deterministic (pandas-UDF rules included — Spark
-    assumes it too): the emit pre-filter below evaluates each rule's
-    ``passes`` in the WHERE and again inside the struct-array projection.
-    Catalyst dedupes plain column expressions in codegen, but a UDF rule runs
-    twice per SURVIVING row (the pre-filter keeps that a win: ~99% of rows
-    never reach the second evaluation), and a non-deterministic predicate
-    could pass the filter yet emit nothing — silently dropping violations."""
+    Each rule's ``passes`` is evaluated once per row, pandas-UDF rules
+    included (one ArrowEvalPython node, pinned by a plan test), so the
+    pre-filter and the emitted array can never disagree about a row."""
     coerced = apply_coercions(df, ruleset)
     checks = compile_checks(coerced, ruleset)
     if not checks:
         raise ValueError("ruleset has no checking rules")
     triples = [(c.spec.rule_id, c.passes, c.observed) for c in checks] + list(extra_checks or [])
+    # Each rule's verdict is projected ONCE into its own column, which both
+    # the pre-filter and the struct array below read. Plain predicates cost
+    # the same either way (Catalyst inlines them back), but a custom rule's
+    # pandas UDF is marked nondeterministic by the compiler, so it stays in
+    # this projection: one Python crossing per row, not one in the WHERE
+    # plus another in the array.
+    oks = [f"__ok{i}__" for i in range(len(triples))]
+    evaluated = coerced.select("*", *[ok.alias(name) for (_, ok, _), name in zip(triples, oks)])
     if messages:
         from lyra_spark.compiler import message_column
 
@@ -104,29 +104,17 @@ def row_violations(
         msgs = [message_column(c.spec, c.observed) for c in checks] + [
             F.lit(f'"{rid}" failed') for rid, _, _ in (extra_checks or [])
         ]
-        fields = [(rid, ok, obs, msg) for (rid, ok, obs), msg in zip(triples, msgs)]
-        arr = F.array(
-            *[
-                F.struct(
-                    F.lit(rid).alias("rule_id"),
-                    ok.alias("ok"),
-                    obs.alias("observed_value"),
-                    msg.alias("message"),
-                )
-                for rid, ok, obs, msg in fields
-            ]
-        )
-    else:
-        arr = F.array(
-            *[
-                F.struct(
-                    F.lit(rid).alias("rule_id"),
-                    ok.alias("ok"),
-                    obs.alias("observed_value"),
-                )
-                for rid, ok, obs in triples
-            ]
-        )
+    arr = F.array(
+        *[
+            F.struct(
+                F.lit(rid).alias("rule_id"),
+                F.col(name).alias("ok"),
+                obs.alias("observed_value"),
+                *([msgs[i].alias("message")] if messages else []),
+            )
+            for i, ((rid, _, obs), name) in enumerate(zip(triples, oks))
+        ]
+    )
     # Violation pre-filter: rows pass a rule unless ok is literally False
     # (NULL ok is dropped by the array filter below), so `ok == False` for ANY
     # rule is exactly the emit condition. Evaluating this cheap boolean OR
@@ -135,8 +123,8 @@ def row_violations(
     # scan's CPU at 10^12 rows — and the filter prunes them in the same
     # codegen stage (no extra pass).
     any_fail = None
-    for _, ok, _ in triples:
-        cond = ok.eqNullSafe(F.lit(False))
+    for name in oks:
+        cond = F.col(name).eqNullSafe(F.lit(False))
         any_fail = cond if any_fail is None else (any_fail | cond)
     keep = list(key_cols) + ([partition_col] if partition_col else [])
     out_cols = [F.col("v.rule_id").alias("rule_id"), F.col("v.observed_value").alias("observed_value")]
@@ -145,9 +133,9 @@ def row_violations(
     failed = F.filter(arr, lambda x: ~x["ok"])
     if abort_early:
         # the any_fail pre-filter guarantees the array is non-empty here
-        picked = coerced.where(any_fail).select(*keep, F.element_at(failed, 1).alias("v"))
+        picked = evaluated.where(any_fail).select(*keep, F.element_at(failed, 1).alias("v"))
     else:
-        picked = coerced.where(any_fail).select(*keep, F.explode(failed).alias("v"))
+        picked = evaluated.where(any_fail).select(*keep, F.explode(failed).alias("v"))
     return picked.select(*keep, *out_cols)
 
 
@@ -215,13 +203,14 @@ def compute_verdicts(
     df: DataFrame,
     violations: DataFrame,
     rule_ids: list[str],
-    partition_col: str = "part_date",
+    partition_col: str | None = "part_date",
     severities: dict[str, str] | None = None,
     tolerances: dict[str, float] | None = None,
     row_counts: DataFrame | None = None,
 ) -> DataFrame:
     """Per (partition, rule) pass/fail with counts (BASELINE.json:6,14) — the
-    one verdict-grid builder.
+    one verdict-grid builder. ``partition_col=None`` builds the whole-table
+    grid, one row per rule: the same plan over an empty grouping key.
 
     The (partitions × rules) grid is tiny (dates × ~dozen rules) — each
     partition's count row expands into one row per rule in the projection
@@ -245,10 +234,11 @@ def compute_verdicts(
     presets.verdicts_from_metadata), so ``df`` is never scanned for
     counting. Omitted, one count aggregate over ``df`` supplies them.
     """
+    keys = [partition_col] if partition_col else []
     rows = (
         row_counts
         if row_counts is not None
-        else df.groupBy(partition_col).agg(F.count(F.lit(1)).alias("row_count"))
+        else df.groupBy(*keys).agg(F.count(F.lit(1)).alias("row_count"))
     )
     cells = []
     for rid in rule_ids:
@@ -258,22 +248,23 @@ def compute_verdicts(
         if tolerances is not None:
             cell.append(F.lit(float(tolerances.get(rid, 0.0))).alias("tolerance"))
         cells.append(F.struct(*cell))
-    grid = rows.select(partition_col, "row_count", F.inline(F.array(*cells)))
-    vc = violations.groupBy(partition_col, "rule_id").agg(F.count(F.lit(1)).alias("violation_count"))
+    grid = rows.select(*keys, "row_count", F.inline(F.array(*cells)))
+    vc = violations.groupBy(*keys, "rule_id").agg(F.count(F.lit(1)).alias("violation_count"))
     # NULL-sentineled join key: an equi-join never matches NULL = NULL, so
     # the NULL partition's violation counts would never reach its grid row
     # and it would verdict pass=True with real violations outstanding —
     # a silent false pass on exactly the stray rows partition_scope fights
-    # to keep in the loop
-    pk = F.coalesce(F.col(partition_col).cast("string"), F.lit("\x00NULL"))
-    out_cols = [partition_col, "rule_id", "pass", "violation_count", "row_count"]
+    # to keep in the loop. Without a partition column the key is the
+    # constant sentinel, and the join matches on rule_id alone.
+    pk = F.coalesce(*[F.col(k).cast("string") for k in keys], F.lit("\x00NULL"))
+    out_cols = [*keys, "rule_id", "pass", "violation_count", "row_count"]
     if severities is not None:
         out_cols.append("severity")
     if tolerances is not None:
         out_cols.append("tolerance")
     joined = (
         grid.withColumn("__pk", pk)
-        .join(vc.withColumn("__pk", pk).drop(partition_col), ["__pk", "rule_id"], "left")
+        .join(vc.withColumn("__pk", pk).drop(*keys), ["__pk", "rule_id"], "left")
         .drop("__pk")
         .withColumn("violation_count", F.coalesce(F.col("violation_count"), F.lit(0)))
     )
@@ -341,12 +332,12 @@ def validate(
     partition_col: str | None = "part_date",
     extra_violations: list[DataFrame] | None = None,
     extra_rule_ids: list[str] | None = None,
-    persist: bool = False,
     messages: bool = False,
     abort_early: bool = False,
 ) -> ValidationResult:
     """Run the row-rule family (+ optional dataset-check violation frames) and
-    roll up per-partition verdicts.
+    roll up per-partition verdicts (one row per rule when ``partition_col``
+    is None).
 
     ``extra_violations`` lets dataset-level checks (uniqueness, referential,
     monotone — lyra_spark.checks) merge into the same violations output and
@@ -370,16 +361,10 @@ def validate(
         if messages and "message" not in ev.columns:
             ev = ev.withColumn("message", F.concat(F.lit('"'), F.col("rule_id"), F.lit('" failed')))
         viol = viol.unionByName(ev)
-    if persist:
-        viol = viol.persist(StorageLevel.MEMORY_AND_DISK)
     rule_ids = [r.rule_id for r in ruleset.checks] + list(extra_rule_ids or [])
-    verd = (
-        compute_verdicts(df, viol, rule_ids, partition_col,
-                         severities=ruleset_severities(ruleset),
-                         tolerances=ruleset_tolerances(ruleset))
-        if partition_col
-        else None
-    )
+    verd = compute_verdicts(df, viol, rule_ids, partition_col,
+                            severities=ruleset_severities(ruleset),
+                            tolerances=ruleset_tolerances(ruleset))
     return ValidationResult(violations=viol, verdicts=verd, key_cols=list(key_cols), partition_col=partition_col)
 
 

@@ -313,7 +313,6 @@ def validate_transcripts_fused(
     ruleset: RuleSet,
     partition_col: str = PARTITION_COLUMN,
     key_cols: list[str] = KEY_COLUMNS,
-    persist: bool = False,
     bucket_turns: int = 4096,
     partition_from_ts: bool = True,
     transitions: set | None = None,
@@ -336,8 +335,6 @@ def validate_transcripts_fused(
     ONE sort (see conv_scoped_violations). Pass False when part_date does not
     derive from ts — equal-turn_idx ties then order by (turn_idx, ts) exactly
     as the composable monotone check does."""
-    from pyspark.storagelevel import StorageLevel
-
     if any(r.rule_id == REF_RULE for r in ruleset.rules):
         fused_rules = ruleset  # caller pre-compiled the referential rule
     else:
@@ -366,8 +363,6 @@ def validate_transcripts_fused(
     # column order must match for union
     cols = [*key_cols, partition_col, "rule_id", "observed_value"]
     viol = row_v.select(*cols).unionByName(conv_v.select(*cols))
-    if persist:
-        viol = viol.persist(StorageLevel.MEMORY_AND_DISK)
     rule_ids = suite_rule_ids(fused_rules, transitions is not None, placement_ts is not None)
     from lyra_spark.engine import ruleset_severities, ruleset_tolerances
 

@@ -15,7 +15,7 @@ import urllib.parse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lyra_spark.schema import PARTITION_COLUMN
+from lyra_spark.schema import KEY_COLUMNS, PARTITION_COLUMN
 
 _AQE_FLOOR_KEY = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
 _AQE_FLOOR_VALUE = "64KB"
@@ -228,8 +228,6 @@ def write_violations(
     violations: DataFrame,
     out_dir: str,
     partition_col: str | list[str] = PARTITION_COLUMN,
-    key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-    buckets_per_partition: int | None = None,
     mode: str = "overwrite",
 ) -> None:
     """Deterministic violation sink (BASELINE.json:6 byte-match contract).
@@ -239,66 +237,44 @@ def write_violations(
     ``out_dir``; "append" adds partition dirs beside existing ones (the
     caller clears the ones it rewrites).
 
-    Parallelism — ``buckets_per_partition``:
-      * ``None`` (default, auto): AQE REBALANCE on the date. Runtime shuffle
-        sizes decide the layout — dates ≫ cores coalesce into shared write
-        tasks (file count stays one per date, the measured optimum), while a
-        HOT date beyond ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
-        splits across tasks (``optimizeSkewsInRebalancePartitions``), so a
-        few hot dates can never serialize the sink and file sizes stay
-        bounded by the advisory size. Nothing to size by hand.
-      * ``1``: exactly one task (and file) per date — optimal when dates ≫
-        cores and no date is hot; a hot date pins one executor.
-      * ``> 1``: rows hash-distribute by (date, key-hash bucket) — a hot date
-        spreads over that many tasks unconditionally (file count grows
-        proportionally even for small dates).
+    Parallelism: AQE REBALANCE on the date. Runtime shuffle sizes decide the
+    layout — dates ≫ cores coalesce into shared write tasks (file count
+    stays one per date, the measured optimum), while a HOT date beyond
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` splits across tasks
+    (``optimizeSkewsInRebalancePartitions``), so a few hot dates can never
+    serialize the sink and file sizes stay bounded by the advisory size.
+    Nothing to size by hand.
 
-    Determinism is preserved end-to-end in every mode: the bucket is a
-    deterministic function of the keys, hash repartitioning / rebalance
-    splits and the in-partition sort are deterministic for a fixed
-    shuffle-partition config and input (AQE decisions derive from map-output
-    statistics, which are reproducible), and each file's row set is a
-    deterministic slice of one (date[, bucket]) group — so every file's
-    CONTENT is byte-stable across runs (pinned by the determinism test)."""
+    Determinism: rebalance splits and the in-partition sort are
+    deterministic for a fixed shuffle-partition config and input (AQE
+    decisions derive from map-output statistics, which are reproducible),
+    and each file's row set is a deterministic slice of one date group — so
+    every file's CONTENT is byte-stable across runs (pinned by the
+    determinism test)."""
     cols = [partition_col] if isinstance(partition_col, str) else list(partition_col)
-    if buckets_per_partition is None:
-        shaped = violations.hint("rebalance", *cols)
-        # Parallelism floor for the write stage: AQE's coalescing normally
-        # stops at minPartitionSize (1 MB), which at small violation volumes
-        # collapses the write into a handful of tasks that then SERIALLY pay
-        # the per-output-file fixed cost (writer init + footer + task commit
-        # — ~tens of ms × one file per date dir). Dropping the floor to 64 KB
-        # lets parallelismFirst spread the write over ~defaultParallelism
-        # tasks; at real scale partitions are ≫ 1 MB and this is a no-op.
-        # Scoped to this write: AQE reads the conf at execution time, and
-        # .parquet() below is eager. The conf is SESSION-GLOBAL: a concurrent
-        # writer on the same session could restore it under this write.
-        conf = violations.sparkSession.conf
-        prev = conf.get(_AQE_FLOOR_KEY, None)
-        conf.set(_AQE_FLOOR_KEY, _AQE_FLOOR_VALUE)
-        try:
-            _write_shaped(shaped, out_dir, cols, key_cols, mode)
-        finally:
-            conf.set(_AQE_FLOOR_KEY, prev) if prev is not None else conf.unset(_AQE_FLOOR_KEY)
-        return
-    elif buckets_per_partition > 1:
-        bkt = F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(int(buckets_per_partition)))
-        shaped = violations.withColumn("__bkt__", bkt).repartition(*cols, "__bkt__")
-    else:
-        shaped = violations.repartition(*cols)
-    _write_shaped(shaped, out_dir, cols, key_cols, mode)
-
-
-def _write_shaped(
-    shaped: DataFrame, out_dir: str, cols: list[str], key_cols: tuple[str, ...], mode: str
-) -> None:
-    (
-        shaped.sortWithinPartitions(*cols, *key_cols, "rule_id", "observed_value")
-        .drop("__bkt__")
-        .write.mode(mode)
-        .partitionBy(*cols)
-        .parquet(out_dir)
-    )
+    # Parallelism floor for the write stage: AQE's coalescing normally stops
+    # at minPartitionSize (1 MB), which at small violation volumes collapses
+    # the write into a handful of tasks that then SERIALLY pay the
+    # per-output-file fixed cost (writer init + footer + task commit — ~tens
+    # of ms × one file per date dir). Dropping the floor to 64 KB lets
+    # parallelismFirst spread the write over ~defaultParallelism tasks; at
+    # real scale partitions are ≫ 1 MB and this is a no-op. Scoped to this
+    # write: AQE reads the conf at execution time, and .parquet() below is
+    # eager. The conf is SESSION-GLOBAL: a concurrent writer on the same
+    # session could restore it under this write.
+    conf = violations.sparkSession.conf
+    prev = conf.get(_AQE_FLOOR_KEY, None)
+    conf.set(_AQE_FLOOR_KEY, _AQE_FLOOR_VALUE)
+    try:
+        (
+            violations.hint("rebalance", *cols)
+            .sortWithinPartitions(*cols, *KEY_COLUMNS, "rule_id", "observed_value")
+            .write.mode(mode)
+            .partitionBy(*cols)
+            .parquet(out_dir)
+        )
+    finally:
+        conf.set(_AQE_FLOOR_KEY, prev) if prev is not None else conf.unset(_AQE_FLOOR_KEY)
 
 
 def write_bucketed(
@@ -545,15 +521,17 @@ def write_zorder(
     space and a selective predicate on ANY of the z-columns intersects only
     ~N^((d-1)/d) of N files' footer min/max ranges instead of all of them.
 
-    Construction (all but one tiny sample pass is the write itself):
+    Construction (two sketch passes, then the write itself):
     per-column quantile edges from ``approxQuantile`` (sampled, driver-side,
     2^bits-1 probes); each row's per-column rank code is a codegen'd
     comparison fold over the literal edge array (O(2^bits) ops/row, paid
-    once at write); ranks bit-interleave into one long z-value; ONE
-    repartitionByRange exchange on z + in-partition sort, identical write
-    shape to ``write_sorted``. NULL ranks as 0 (sorts first, like Spark's
-    NULLS FIRST). Skewed columns are absorbed by the QUANTILE ranking —
-    equal-mass buckets, never equal-width.
+    once at write); ranks bit-interleave into one long z-value; file
+    boundaries are z-value quantiles (one more sketch pass); ONE exchange
+    routes each row to its file + in-partition sort, the same write shape as
+    ``write_sorted``, and the layout is the same on every run. NULL ranks
+    as 0 (sorts first, like Spark's NULLS FIRST). Skewed columns are
+    absorbed by the QUANTILE ranking — equal-mass buckets, never
+    equal-width.
     """
     if not 2 <= len(zorder_cols) <= 4:
         raise ValueError("zorder needs 2-4 columns (one column: use write_sorted)")
@@ -592,9 +570,22 @@ def write_zorder(
                     b * ncols + j,
                 )
             )
+    # File boundaries are z-value quantiles from the same deterministic
+    # sketch as the rank edges, and each row goes to its file by id.
+    # repartitionByRange would sample its own boundaries with a seed taken
+    # from the RDD id, so the layout (and how many files a predicate
+    # touches) would depend on how many RDDs the session built before.
+    n_files = int(target_files or df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    zvals = ranked.withColumn("__zval", z)
+    probes = [(i + 1) / n_files for i in range(n_files - 1)]
+    bounds = zvals.stat.approxQuantile("__zval", probes, 1.0 / (64 * n_files)) if probes else []
+    # a row's file = how many boundaries its z-value clears
+    file_id = (
+        F.size(F.filter(F.array(*[F.lit(int(b)) for b in bounds]), lambda b: F.col("__zval") >= b))
+        if bounds else F.lit(0)
+    )
     shaped = (
-        ranked.withColumn("__zval", z)
-        .repartitionByRange(*([target_files] if target_files else []), F.col("__zval"))
+        zvals.repartitionById(n_files, file_id)
         .sortWithinPartitions("__zval")
         .drop("__zval", *[f"__zr{i}" for i in range(ncols)])
     )

@@ -32,7 +32,6 @@ def validate_transcripts(
     partition_col: str | None = "part_date",
     ruleset: RuleSet | None = None,
     fused: bool = True,
-    persist: bool = False,
     partition_from_ts: bool = True,
     transitions: set | None = None,
     allowed_first: set | None = None,
@@ -59,13 +58,10 @@ def validate_transcripts(
     partition_from_ts (fused path only): set False when the table layout does
     NOT guarantee part_date = date(ts); the fused conv checks then order
     equal-turn_idx ties by (turn_idx, ts), identical to the composable path,
-    at the cost of one extra sort.
-
-    persist defaults to False: caching the violation union forces the cached
-    plan to materialize WITHOUT adaptive execution (no exchange reuse, no
-    coalescing), which measured ~2x slower than simply recomputing — prefer
-    run_suite(), which writes violations to their real sink once and
-    aggregates verdicts from the written files."""
+    at the cost of one extra sort."""
+    # The violation union is never cached: a cached plan materializes without
+    # adaptive execution (no exchange reuse, no coalescing), measured ~2x
+    # slower than recomputing; run_suite() writes the sink once instead.
     ruleset = ruleset or transcript_ruleset()
     # placement compares event time AGAINST the partition value — without a
     # partition column the check has no referent on either path; raise the
@@ -83,7 +79,7 @@ def validate_transcripts(
         from lyra_spark.fused import validate_transcripts_fused
 
         return validate_transcripts_fused(
-            df, tools_dim, ruleset, partition_col=partition_col, persist=persist,
+            df, tools_dim, ruleset, partition_col=partition_col,
             partition_from_ts=partition_from_ts, transitions=transitions,
             allowed_first=allowed_first, placement_ts=placement_ts,
             convs_per_partition=convs_per_partition,
@@ -113,7 +109,6 @@ def validate_transcripts(
         partition_col=partition_col,
         extra_violations=extra,
         extra_rule_ids=extra_ids,
-        persist=persist,
     )
 
 
@@ -155,7 +150,7 @@ def run_suite(
 
     ruleset = ruleset or transcript_ruleset()
     res = validate_transcripts_fused(
-        df, tools_dim, ruleset, partition_col=partition_col, persist=False,
+        df, tools_dim, ruleset, partition_col=partition_col,
         transitions=transitions, allowed_first=allowed_first,
         placement_ts=placement_ts if check_placement else None,
     )

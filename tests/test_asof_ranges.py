@@ -85,8 +85,9 @@ def test_asof_forward_and_tolerance(spark, asof_frames):
         payload_cols={"rid": "asof_rid"}, right_order_cols=["rid"],
         direction="forward",
     )
+    # lid 3: rid 10 and 15 tie at :03 → forward takes the smallest rid
     assert {r.lid: r.asof_rid for r in fwd.collect()} == {
-        1: 11, 2: None, 3: 15, 4: 13, 5: 12, 6: 14, 7: None, 8: None
+        1: 11, 2: None, 3: 10, 4: 13, 5: 12, 6: 14, 7: None, 8: None
     }
     tol = asof_join(
         left, right, on=["k"], left_ts="lts", right_ts="rts",
@@ -359,6 +360,53 @@ def test_asof_bounded_parity_with_timestamp_ties(spark):
             ).collect()
         }
         assert got == ref, direction
+
+
+def test_asof_ties_follow_pandas_both_directions(spark):
+    """Equal right timestamps resolve like pandas merge_asof in every as-of
+    operator: backward carries the LAST tied row in right_order_cols order,
+    forward the FIRST — the rule asof_join_nearest already follows, so a
+    nearest match and a one-direction match never disagree on a tie."""
+    from lyra_spark.asof import asof_join_bounded
+
+    rng = np.random.default_rng(41)
+    n_l, n_r = 250, 240
+    lpd = pd.DataFrame({
+        "k": rng.integers(0, 4, n_l).astype(str),
+        "lts": pd.to_datetime("2024-01-01")
+        + pd.to_timedelta(rng.integers(0, 120, n_l), unit="s"),
+        "lid": np.arange(n_l),
+    })
+    rpd = pd.DataFrame({
+        "k": rng.integers(0, 4, n_r).astype(str),
+        "rts": pd.to_datetime("2024-01-01")
+        + pd.to_timedelta(rng.integers(0, 120, n_r), unit="s"),
+        "rid": np.arange(n_r),
+    })
+    assert rpd.duplicated(["k", "rts"]).any()
+    # sorting by (rts, rid) makes pandas' frame order the rid order
+    rpd_sorted = rpd.sort_values(["rts", "rid"], kind="mergesort").reset_index(drop=True)
+    ldf, rdf = spark.createDataFrame(lpd), spark.createDataFrame(rpd)
+    for direction in ("backward", "forward"):
+        exp = pd.merge_asof(
+            lpd.sort_values(["lts", "lid"], kind="mergesort"),
+            rpd_sorted.rename(columns={"rid": "m_rid"}),
+            left_on="lts", right_on="rts", by="k", direction=direction,
+            tolerance=pd.Timedelta(seconds=20),
+        )
+        exp = dict(zip(exp["lid"], exp["m_rid"].astype("float")))
+        for got_df in (
+            asof_join(ldf, rdf, on=["k"], left_ts="lts", right_ts="rts",
+                      payload_cols={"rid": "m_rid"}, right_order_cols=["rid"],
+                      direction=direction, tolerance_sec=20),
+            asof_join_bounded(ldf, rdf, on=["k"], left_id_cols=["lid"], left_ts="lts",
+                              right_ts="rts", payload_cols={"rid": "m_rid"},
+                              tolerance_sec=20, right_order_cols=["rid"],
+                              direction=direction),
+        ):
+            got = {r.lid: float("nan") if r.m_rid is None else float(r.m_rid)
+                   for r in got_df.collect()}
+            assert pd.Series(got).sort_index().equals(pd.Series(exp).sort_index()), direction
 
 
 def test_asof_bounded_accepts_numeric_epoch_ts(spark):

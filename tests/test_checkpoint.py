@@ -100,7 +100,6 @@ def test_violation_sink_deterministic(tmp_path, spark, fixtures_sf0001):
         res = validate_transcripts(tdf, dim)
         out = str(tmp_path / f"v{i}")
         lio.write_violations(res.violations_sorted(), out)
-        res.unpersist()
         pdf = pd.read_parquet(out).reset_index(drop=True)
         outs.append(pdf)
     pd.testing.assert_frame_equal(outs[0], outs[1])
@@ -135,7 +134,7 @@ def test_run_suite_clean_dataset_empty_sink(tmp_path, spark):
 
 
 def test_violation_sink_auto_splits_hot_date(tmp_path, spark):
-    """Default (auto) sink mode: nothing configured, yet a hot date must
+    """The sink's one layout: nothing configured, yet a hot date must
     spread over multiple write tasks (AQE rebalance skew split) while writes
     stay byte-identical — the 'a few hot dates cannot serialize the sink'
     contract at scale, observable at test size via a small advisory size."""
@@ -162,7 +161,7 @@ def test_violation_sink_auto_splits_hot_date(tmp_path, spark):
         outs = []
         for i in (1, 2):
             out = str(tmp_path / f"auto{i}")
-            lio.write_violations(viol, out)  # default: auto
+            lio.write_violations(viol, out)
             hot_files = glob.glob(os.path.join(out, "part_date=2024-06-01", "*.parquet"))
             cold_files = glob.glob(os.path.join(out, "part_date=2024-06-02", "*.parquet"))
             assert len(hot_files) > 1, "hot date must split across sink tasks"
@@ -243,47 +242,6 @@ def test_cli_hll_blobs_persist_and_merge(tmp_path, spark, fixtures_sf0001, capsy
     out2 = capsys.readouterr().out
     assert "this_run=0" in out2
     assert "hll_distinct column=conv_id" in out2
-
-
-def test_violation_sink_parallelism_scales(tmp_path, spark):
-    """The sink must not cap at one task per date: with key-hash bucketing a
-    hot date's violations spread over multiple files (= multiple tasks at
-    scale), while two writes stay byte-identical."""
-    import datetime
-    import glob
-
-    from lyra_spark.schema import VIOLATIONS_SCHEMA
-    from pyspark.sql import types as T
-
-    schema = T.StructType(list(VIOLATIONS_SCHEMA) + [T.StructField("part_date", T.DateType(), True)])
-    d = datetime.date(2024, 6, 1)
-    rows = [(f"c{i % 997}", i, "rule_x", str(i), d) for i in range(20_000)]
-    viol = spark.createDataFrame(rows, schema)
-
-    # test data is tiny — drop AQE's coalescing floors so the partitioning
-    # behavior at scale (many sink tasks) is observable at 20k rows
-    tuned = {
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16kb",
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1kb",
-    }
-    old = {k: spark.conf.get(k, None) for k in tuned}
-    for k, v in tuned.items():
-        spark.conf.set(k, v)
-    try:
-        outs = []
-        for i in (1, 2):
-            out = str(tmp_path / f"v{i}")
-            lio.write_violations(viol, out, buckets_per_partition=8)
-            files = sorted(glob.glob(os.path.join(out, "part_date=2024-06-01", "*.parquet")))
-            assert len(files) > 1, "hot date must spread over multiple sink tasks"
-            outs.append(pd.read_parquet(out).reset_index(drop=True))
-        pd.testing.assert_frame_equal(outs[0], outs[1])
-    finally:
-        for k, v in old.items():
-            if v is not None:
-                spark.conf.set(k, v)
-            else:
-                spark.conf.unset(k)
 
 
 def test_cli_batches_match_run_suite(tmp_path, spark, fixtures_sf0001, capsys):

@@ -44,7 +44,6 @@ def test_violations_match_oracle(spark, loaded):
 
     assert len(engine) > 0, "fixtures inject violations; engine found none"
     assert normalize_violations(engine) == normalize_violations(oracle)
-    result.unpersist()
 
 
 def test_injected_subset_detected(spark, loaded, fixtures_sf0001):
@@ -78,7 +77,6 @@ def test_verdicts_match_oracle(spark, loaded):
     e["row_count"] = e["row_count"].astype(int)
     pd.testing.assert_frame_equal(e, o, check_dtype=False)
     assert (~e["pass"]).any(), "fixtures must produce at least one failing verdict"
-    result.unpersist()
 
 
 def test_determinism_two_runs_identical(spark, loaded):

@@ -17,8 +17,6 @@ def test_fused_equals_composable(spark, fixtures_sf0001):
     fv = {(str(r["part_date"]), r["rule_id"]): (r["pass"], r["violation_count"], r["row_count"]) for r in fused.verdicts.collect()}
     cv = {(str(r["part_date"]), r["rule_id"]): (r["pass"], r["violation_count"], r["row_count"]) for r in comp.verdicts.collect()}
     assert fv == cv
-    fused.unpersist()
-    comp.unpersist()
 
 
 def test_fused_plan_shape_conv_checks(spark, fixtures_sf0001):

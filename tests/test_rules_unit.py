@@ -127,6 +127,27 @@ def test_custom_pandas_predicate(spark):
     assert got == {(2, "even_len", "abc")}
 
 
+def test_custom_rule_crosses_into_python_once(spark):
+    """A custom rule's pandas UDF runs in ONE ArrowEvalPython node: the
+    pre-filter and the emitted struct array read the same projected verdict
+    (the filter still prunes clean rows before the array is built), and the
+    output matches the per-rule semantics, with abort-early and messages."""
+    from test_plan_shapes import plan_str
+
+    rs = RuleSet([
+        R.custom("s", lambda s: s.str.len() % 2 == 0, rule_id="even_len"),
+        R.required("s", rule_id="s_req"),
+    ])
+    df = spark.createDataFrame([(1, "ab"), (2, "abc"), (3, None)], "id int, s string")
+    for kw in ({}, {"abort_early": True}, {"messages": True}):
+        v = row_violations(df, rs, key_cols=["id"], partition_col=None, **kw)
+        plan = plan_str(v, "simple")
+        assert plan.count("ArrowEvalPython") == 1, plan
+        assert "Filter" in plan, plan
+        got = {(r.id, r.rule_id) for r in v.collect()}
+        assert got == {(2, "even_len"), (3, "s_req")}
+
+
 def test_duplicate_rule_id_rejected():
     with pytest.raises(ValueError):
         RuleSet([R.required("a", rule_id="x"), R.required("b", rule_id="x")])

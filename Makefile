@@ -1,4 +1,4 @@
-.PHONY: dist test bench oracle
+.PHONY: dist test bench oracle perfbench-smoke
 
 dist:
 	mkdir -p dist && python -c "import shutil; shutil.make_archive('dist/lyra_spark', 'zip', root_dir='.', base_dir='lyra_spark')"
@@ -9,6 +9,9 @@ test:
 
 bench:
 	python bench.py
+
+perfbench-smoke:
+	python3 -m pytest perfbench/tests
 
 oracle:
 	python tools/check_oracle.py

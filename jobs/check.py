@@ -79,7 +79,13 @@ def main(argv: list[str] | None = None) -> int:
     failed = False
 
     if args.rules:
-        from lyra_spark.engine import validate, verdict_gate
+        from lyra_spark.engine import (
+            compute_verdicts,
+            ruleset_severities,
+            ruleset_tolerances,
+            validate,
+            verdict_gate,
+        )
         from lyra_spark.rules import ruleset_from_json
 
         ruleset = ruleset_from_json(args.rules)
@@ -89,11 +95,18 @@ def main(argv: list[str] | None = None) -> int:
         )
         res = validate(df, ruleset, key_cols=key_cols, partition_col=part_col,
                        messages=args.messages, abort_early=args.abort_early)
+        verd = res.verdicts
         if args.out:
             res.violations.write.mode("overwrite").parquet(args.out)
+            # the grid counts the WRITTEN violations (explicit schema: an
+            # empty sink still reads), so the row rules run once
+            written = spark.read.schema(res.violations.schema).parquet(args.out)
+            verd = compute_verdicts(df, written, [r.rule_id for r in ruleset.checks], part_col,
+                                    severities=ruleset_severities(ruleset),
+                                    tolerances=ruleset_tolerances(ruleset))
         # one collect of the lazy grid (one row per rule, or per cohort and
         # rule); each cohort gates on its own rows
-        grid = res.verdicts.collect()
+        grid = verd.collect()
         n_viol = sum(r["violation_count"] for r in grid)
         if part_col:
             cohorts: dict[str, list] = {}

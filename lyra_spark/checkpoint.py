@@ -1,9 +1,18 @@
 """Checkpoint manifest: per-partition lineage, rule versions, timing metrics —
 resumable runs (BASELINE.json:6,14).
 
-The manifest is driver-side JSON (small: one record per Iceberg partition),
-written atomically (tmp + os.replace) so a killed run never leaves a torn
-file. Resume = set-difference of partition keys whose recorded rule-version
+The manifest is an append-only journal, ``<checkpoint>/<run_id>/manifest.jsonl``:
+one JSON ``PartitionRecord`` per line, the last line of a partition wins. A
+save appends only the records changed since the last load or save and
+fsyncs once, so its cost is O(new records), not O(history). Load drops a
+torn final line (no trailing newline: a crash mid-append) and truncates it
+away before anything is appended; any other malformed line means start
+clean. A journal holding more than twice as many lines as live records is
+compacted on load (tmp + fsync + os.replace), so each record costs O(1)
+amortised. A legacy ``manifest.json`` is read when no journal exists; the
+first save writes the full journal and removes it.
+
+Resume = set-difference of partition keys whose recorded rule-version
 fingerprint matches the current ruleset; bumping any rule's version or params
 invalidates exactly the partitions validated under the old fingerprint.
 """
@@ -17,7 +26,10 @@ from dataclasses import asdict, dataclass, field
 
 from lyra_spark.rules import RuleSet
 
-MANIFEST_NAME = "manifest.json"
+MANIFEST_NAME = "manifest.jsonl"
+LEGACY_MANIFEST_NAME = "manifest.json"
+# compact on load once the journal holds more than this many lines per live record
+COMPACT_RATIO = 2
 
 
 @dataclass
@@ -36,6 +48,10 @@ class PartitionRecord:
 class Manifest:
     run_id: str
     records: dict[str, PartitionRecord] = field(default_factory=dict)
+    # partitions record() changed since the last load or save. None: the
+    # journal does not hold this manifest (built in memory, started clean,
+    # or read from a legacy file), so the next save writes every record.
+    dirty: set[str] | None = field(default=None, repr=False, compare=False)
 
     def completed(self, ruleset: RuleSet) -> set[str]:
         fp = ruleset.fingerprint()
@@ -114,16 +130,31 @@ class Manifest:
             snapshot_id=snapshot_id,
             rule_versions=ruleset.versions(),
         )
+        if self.dirty is not None:
+            self.dirty.add(partition)
 
 
 def manifest_path(checkpoint_dir: str, run_id: str) -> str:
     return os.path.join(checkpoint_dir, run_id, MANIFEST_NAME)
 
 
-def load_manifest(checkpoint_dir: str, run_id: str) -> Manifest:
-    path = manifest_path(checkpoint_dir, run_id)
-    if not os.path.exists(path):
-        return Manifest(run_id=run_id)
+def _line(rec: PartitionRecord) -> bytes:
+    return (json.dumps(asdict(rec), sort_keys=True) + "\n").encode()
+
+
+def _rewrite(path: str, records: dict[str, PartitionRecord]) -> None:
+    """The whole journal, one line per live record: tmp + fsync + os.replace
+    (POSIX-atomic within a filesystem), so a crash leaves the old file or
+    the new one, never a mix."""
+    tmp = path + ".tmp"
+    with open(tmp, "wb") as f:
+        f.write(b"".join(_line(r) for r in records.values()))
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
+def _load_legacy(path: str, run_id: str) -> Manifest:
     try:
         with open(path) as f:
             raw = json.load(f)
@@ -138,14 +169,57 @@ def load_manifest(checkpoint_dir: str, run_id: str) -> Manifest:
         return Manifest(run_id=run_id)
 
 
+def load_manifest(checkpoint_dir: str, run_id: str) -> Manifest:
+    path = manifest_path(checkpoint_dir, run_id)
+    if not os.path.exists(path):
+        legacy = os.path.join(checkpoint_dir, run_id, LEGACY_MANIFEST_NAME)
+        return _load_legacy(legacy, run_id) if os.path.exists(legacy) else Manifest(run_id=run_id)
+    try:
+        with open(path, "rb") as f:
+            data = f.read()
+        end = data.rfind(b"\n") + 1
+        if end < len(data):
+            # torn final line (a crash mid-append): cut it off now, or the
+            # next append would join the torn bytes into a corrupt middle line
+            with open(path, "r+b") as f:
+                f.truncate(end)
+                f.flush()
+                os.fsync(f.fileno())
+        lines = data[:end].splitlines()
+        # one parse of the lines as a JSON array (faster than one per line);
+        # a line holding two values shows as a count mismatch
+        raw = json.loads(b"[" + b",".join(lines) + b"]")
+        if len(raw) != len(lines):
+            raise ValueError("a journal line holds more than one value")
+        records: dict[str, PartitionRecord] = {}
+        for v in raw:
+            # a non-object line or a drifted field set raises TypeError
+            rec = PartitionRecord(**v)
+            records[rec.partition] = rec
+    except (OSError, TypeError, ValueError):  # JSONDecodeError is a ValueError
+        # corrupt journal ⇒ start clean (forces full re-validation, never a
+        # crash); the next save rewrites the whole journal
+        return Manifest(run_id=run_id)
+    if len(lines) > COMPACT_RATIO * len(records):
+        _rewrite(path, records)
+    return Manifest(run_id=run_id, records=records, dirty=set())
+
+
 def save_manifest(checkpoint_dir: str, m: Manifest) -> str:
-    """Atomic write: tmp file + os.replace (POSIX-atomic within a filesystem)."""
+    """Append the records changed since the last load or save, fsync once.
+    A manifest the journal does not hold yet is written whole instead."""
     d = os.path.join(checkpoint_dir, m.run_id)
     os.makedirs(d, exist_ok=True)
     path = os.path.join(d, MANIFEST_NAME)
-    tmp = path + ".tmp"
-    payload = {"run_id": m.run_id, "records": {k: asdict(v) for k, v in m.records.items()}}
-    with open(tmp, "w") as f:
-        json.dump(payload, f, indent=1, sort_keys=True)
-    os.replace(tmp, path)
+    if m.dirty is None:
+        _rewrite(path, m.records)
+        legacy = os.path.join(d, LEGACY_MANIFEST_NAME)
+        if os.path.exists(legacy):
+            os.remove(legacy)
+    elif m.dirty:
+        with open(path, "ab") as f:
+            f.write(b"".join(_line(m.records[k]) for k in sorted(m.dirty)))
+            f.flush()
+            os.fsync(f.fileno())
+    m.dirty = set()
     return path

@@ -41,13 +41,23 @@ def planned_scan_tasks(df: DataFrame) -> int | None:
     The former guard (``df.rdd.getNumPartitions()``) forced AQE to finalize
     upstream query stages at plan-build time (a surprise job whose probed
     count could also go stale). This walks ``df.inputFiles()`` (file-index
-    listing, no executors) and sums ``ceil(size / maxPartitionBytes)`` per
-    SPLITTABLE file — the same splitting rule FilePartition uses, minus
-    small-file packing. Files whose extension marks a non-splittable
-    compression codec (gzip & friends) count as ONE task regardless of
-    size: a 1 GB .json.gz scans as a single partition, and sizing it as 8
-    would wrongly skip the spread (over-estimation is the UNSAFE direction
-    for an under-parallelism test).
+    listing, no executors) and replays Spark's FilePartition planning:
+
+    - ``maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
+      (Σsize + n·openCostInBytes) / minPartitionNum))``, where
+      ``minPartitionNum`` is ``spark.sql.files.minPartitionNum``, else the
+      leaf-node default parallelism;
+    - each SPLITTABLE file cut into ``maxSplitBytes`` chunks; files whose
+      extension marks a non-splittable compression codec (gzip & friends)
+      stay one chunk regardless of size: a 1 GB .json.gz scans as a single
+      partition, and sizing it as 8 would wrongly skip the spread
+      (over-estimation is the UNSAFE direction for an under-parallelism
+      test);
+    - chunks packed largest first, next fit, a task closed when the next
+      chunk would overflow ``maxSplitBytes``, ``openCostInBytes`` charged per
+      chunk — so a table of many small files gets far fewer tasks than
+      files. ``spark.sql.files.maxPartitionNum`` (unset by default) is not
+      modelled: when set and exceeded, Spark packs fewer tasks.
 
     Known blind spot, documented rather than probed: the estimate describes
     the LEAF SCAN. A plan narrowed after the scan (``coalesce(1)``, a
@@ -60,33 +70,49 @@ def planned_scan_tasks(df: DataFrame) -> int | None:
     unavailable: non-file sources (in-memory test relations are already
     parallelized by createDataFrame), remote URIs we cannot stat (a real
     cluster's tables are well-split by the writer layout contract), or any
-    stat failure, or a ``maxPartitionBytes`` value it cannot parse.
+    stat failure, or a size conf it cannot parse.
     """
     try:
         files = df.inputFiles()
-        mpb = _conf_bytes(df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
+        conf = df.sparkSession.conf
+        mpb = _conf_bytes(conf.get("spark.sql.files.maxPartitionBytes", "128m"))
+        open_cost = _conf_bytes(conf.get("spark.sql.files.openCostInBytes", "4m"))
+        min_parts = conf.get("spark.sql.files.minPartitionNum", None) or conf.get(
+            "spark.sql.leafNodeDefaultParallelism", None)
+        min_parts = int(min_parts) if min_parts else df.sparkSession.sparkContext.defaultParallelism
     except Exception:
         return None
     if not files:
         return None
     non_splittable = (".gz", ".zip", ".deflate", ".zst", ".bz2", ".xz", ".lz4", ".snappy")
-    tasks = 0
+    sizes = []
     for uri in files:
         parsed = urllib.parse.urlparse(uri)
         if parsed.scheme not in ("", "file"):
             return None
         path = urllib.parse.unquote(parsed.path) or uri
         try:
-            size = os.stat(path).st_size
+            sizes.append((os.stat(path).st_size, path.lower().endswith(non_splittable)))
         except OSError:
             return None
+    total = sum(size + open_cost for size, _ in sizes)
+    max_split = max(1, min(mpb, max(open_cost, total // max(min_parts, 1))))
+    chunks = []
+    for size, whole in sizes:
         # .parquet is internally splittable whatever its codec; the
         # extension check targets whole-file-compressed text/json/csv
-        if path.lower().endswith(non_splittable):
-            tasks += 1
+        if whole:
+            chunks.append(size)
         else:
-            tasks += max(1, -(-size // max(mpb, 1)))
-    return tasks
+            chunks += [min(max_split, size - off) for off in range(0, size, max_split)]
+    chunks.sort(reverse=True)
+
+    tasks, current, open_task = 0, 0, False
+    for c in chunks:
+        if open_task and current + c > max_split:
+            tasks, current = tasks + 1, 0
+        current, open_task = current + c + open_cost, True
+    return tasks + open_task
 
 
 def spread_if_narrow(df: DataFrame, spread: bool | None = None) -> DataFrame:

@@ -1,8 +1,9 @@
 """SparkSession factory with the confs the engine requires.
 
 AQE (incl. skew-join), Arrow transport for pandas UDFs, UTC session timezone for
-deterministic timestamp semantics (BASELINE.json:6 byte-match requirement), and
-shuffle partitions sized to the local core count instead of the 200 default.
+deterministic timestamp semantics (BASELINE.json:6 byte-match requirement),
+shuffle partitions sized to the local core count instead of the 200 default,
+and, in local mode, table listing on the driver.
 """
 
 from __future__ import annotations
@@ -95,6 +96,12 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC -XX:+AlwaysPreTouch")
     )
+    if master == "local" or master.startswith("local["):
+        # one JVM hosts the executors too, so a distributed listing job (one
+        # task per partition dir past the default threshold of 32) only adds
+        # job overhead: list every table on the driver. Cluster masters
+        # (local-cluster included) keep Spark's default.
+        builder = builder.config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

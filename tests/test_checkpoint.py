@@ -49,9 +49,148 @@ def test_corrupt_manifest_forces_revalidation(tmp_path, ruleset):
     m.record("a", ruleset, rows=1, violations=0, wall_ms=1.0)
     path = ckpt.save_manifest(str(tmp_path), m)
     with open(path, "w") as f:
-        f.write("{ not json")
+        f.write("{ not json\n")  # a complete line, so not a torn tail
     m2 = ckpt.load_manifest(str(tmp_path), "run1")
     assert m2.pending(["a"], ruleset) == ["a"]
+
+
+def test_corrupt_legacy_manifest_forces_revalidation(tmp_path, ruleset):
+    legacy = tmp_path / "run1" / ckpt.LEGACY_MANIFEST_NAME
+    legacy.parent.mkdir()
+    legacy.write_text("{ not json")
+    m = ckpt.load_manifest(str(tmp_path), "run1")
+    assert m.pending(["a"], ruleset) == ["a"]
+
+
+def _journal_lines(n: int, ruleset) -> bytes:
+    """``n`` journal lines for partitions p0..p{n-1}, as a save writes them."""
+    proto = ckpt.Manifest(run_id="x")
+    proto.record("p", ruleset, rows=3000, violations=1, wall_ms=1500.0)
+    line = json.loads(ckpt._line(proto.records["p"]))
+    return b"".join(
+        (json.dumps({**line, "partition": f"p{i}", "rows": i}, sort_keys=True) + "\n").encode()
+        for i in range(n)
+    )
+
+
+@pytest.mark.parametrize("history", [10**3, 10**5])
+def test_journal_save_appends_only_new_records(tmp_path, ruleset, history):
+    """A save after a load writes exactly the records changed since: the
+    file's prefix stays byte-identical and grows by those two lines, at
+    10^3 and at 10^5 history records alike."""
+    path = ckpt.manifest_path(str(tmp_path), "run1")
+    os.makedirs(os.path.dirname(path))
+    with open(path, "wb") as f:
+        f.write(_journal_lines(history, ruleset))
+    with open(path, "rb") as f:
+        before = f.read()
+    m = ckpt.load_manifest(str(tmp_path), "run1")
+    assert len(m.records) == history
+    m.record("new_a", ruleset, rows=5, violations=0, wall_ms=2.0)
+    m.record("new_b", ruleset, rows=6, violations=1, wall_ms=3.0)
+    assert ckpt.save_manifest(str(tmp_path), m) == path
+    with open(path, "rb") as f:
+        after = f.read()
+    assert after[: len(before)] == before
+    added = after[len(before):].splitlines(keepends=True)
+    assert [json.loads(x)["partition"] for x in added] == ["new_a", "new_b"]
+    assert all(x.endswith(b"\n") for x in added)
+    # a save with nothing recorded since appends nothing
+    ckpt.save_manifest(str(tmp_path), m)
+    assert os.path.getsize(path) == len(after)
+    assert len(ckpt.load_manifest(str(tmp_path), "run1").records) == history + 2
+
+
+def test_journal_torn_tail_dropped_and_cut(tmp_path, ruleset):
+    """A final line without its newline (a crash mid-append) is dropped on
+    load and cut from the file, so the next append starts on a clean line
+    and the journal stays loadable."""
+    m = ckpt.Manifest(run_id="run1")
+    for pk in ("a", "b"):
+        m.record(pk, ruleset, rows=1, violations=0, wall_ms=1.0)
+    path = ckpt.save_manifest(str(tmp_path), m)
+    whole = os.path.getsize(path)
+    with open(path, "ab") as f:
+        f.write(b'{"partition": "c", "rows": 1')
+    m2 = ckpt.load_manifest(str(tmp_path), "run1")
+    assert sorted(m2.records) == ["a", "b"]
+    assert os.path.getsize(path) == whole
+    m2.record("c", ruleset, rows=3, violations=0, wall_ms=1.0)
+    ckpt.save_manifest(str(tmp_path), m2)
+    m3 = ckpt.load_manifest(str(tmp_path), "run1")
+    assert sorted(m3.records) == ["a", "b", "c"] and m3.records["c"].rows == 3
+    assert m3.dirty == set()  # loaded whole: not started clean
+
+
+def test_journal_compacts_past_twice_the_live_records(tmp_path, ruleset):
+    """Lines beyond 2x the live records are compacted away on load; the
+    last line of each partition wins, before and after compaction."""
+    m = ckpt.Manifest(run_id="run1")
+    for pk in ("a", "b"):
+        m.record(pk, ruleset, rows=0, violations=0, wall_ms=1.0)
+    path = ckpt.save_manifest(str(tmp_path), m)
+
+    def lines():
+        with open(path, "rb") as f:
+            return f.read().count(b"\n")
+
+    m = ckpt.load_manifest(str(tmp_path), "run1")
+    for rows in (1, 2):  # re-record both: 6 lines for 2 live records
+        m.record("a", ruleset, rows=rows, violations=0, wall_ms=1.0)
+        m.record("b", ruleset, rows=10 + rows, violations=0, wall_ms=1.0)
+        ckpt.save_manifest(str(tmp_path), m)
+        m = ckpt.load_manifest(str(tmp_path), "run1")
+    # 6 lines > 2 x 2 live: the second load above compacted to 2 lines
+    assert lines() == 2
+    assert (m.records["a"].rows, m.records["b"].rows) == (2, 12)
+    m.record("a", ruleset, rows=3, violations=0, wall_ms=1.0)
+    m.record("b", ruleset, rows=13, violations=0, wall_ms=1.0)
+    ckpt.save_manifest(str(tmp_path), m)
+    m = ckpt.load_manifest(str(tmp_path), "run1")
+    assert lines() == 4  # exactly 2x: kept as is
+    assert (m.records["a"].rows, m.records["b"].rows) == (3, 13)
+    m.record("a", ruleset, rows=4, violations=0, wall_ms=1.0)
+    ckpt.save_manifest(str(tmp_path), m)
+    m = ckpt.load_manifest(str(tmp_path), "run1")
+    assert lines() == 2  # 5 lines > 4: compacted
+    assert (m.records["a"].rows, m.records["b"].rows) == (4, 13)
+    assert not os.path.exists(path + ".tmp")
+
+
+def test_legacy_manifest_read_then_migrated(tmp_path, ruleset):
+    """A run id with only a legacy manifest.json loads from it; the first
+    save writes the whole journal and removes the legacy file."""
+    from dataclasses import asdict
+
+    m = ckpt.Manifest(run_id="run1")
+    for pk in ("a", "b"):
+        m.record(pk, ruleset, rows=7, violations=1, wall_ms=1.0)
+    legacy = tmp_path / "run1" / ckpt.LEGACY_MANIFEST_NAME
+    legacy.parent.mkdir()
+    legacy.write_text(json.dumps(
+        {"run_id": "run1", "records": {k: asdict(v) for k, v in m.records.items()}},
+        indent=1, sort_keys=True))
+    m2 = ckpt.load_manifest(str(tmp_path), "run1")
+    assert m2.records == m.records
+    assert not os.path.exists(ckpt.manifest_path(str(tmp_path), "run1"))
+    m2.record("c", ruleset, rows=9, violations=0, wall_ms=1.0)
+    ckpt.save_manifest(str(tmp_path), m2)
+    assert not legacy.exists()
+    m3 = ckpt.load_manifest(str(tmp_path), "run1")
+    assert sorted(m3.records) == ["a", "b", "c"]
+    assert m3.records["a"] == m.records["a"]
+
+
+def test_in_memory_manifest_replaces_the_journal(tmp_path, ruleset):
+    """A manifest built in memory writes all its records on its first save,
+    replacing whatever journal the run id had."""
+    old = ckpt.Manifest(run_id="run1")
+    old.record("stale", ruleset, rows=1, violations=0, wall_ms=1.0)
+    ckpt.save_manifest(str(tmp_path), old)
+    m = ckpt.Manifest(run_id="run1")
+    m.record("a", ruleset, rows=1, violations=0, wall_ms=1.0)
+    ckpt.save_manifest(str(tmp_path), m)
+    assert sorted(ckpt.load_manifest(str(tmp_path), "run1").records) == ["a"]
 
 
 def test_cli_run_and_resume(tmp_path, spark, fixtures_sf0001, capsys):
@@ -1026,16 +1165,34 @@ def test_structurally_corrupt_manifest_starts_clean(tmp_path, ruleset):
     m.record("a", ruleset, rows=1, violations=0, wall_ms=1.0)
     path = ckpt.save_manifest(str(tmp_path), m)
     with open(path) as f:
-        raw = json.load(f)
-    raw["records"]["a"]["from_the_future"] = True  # newer-version field
+        raw = json.loads(f.readline())
+    raw["from_the_future"] = True  # newer-version field
     with open(path, "w") as f:
-        json.dump(raw, f)
+        f.write(json.dumps(raw) + "\n")
     m2 = ckpt.load_manifest(str(tmp_path), "run1")
     assert m2.pending(["a"], ruleset) == ["a"]
     with open(path, "w") as f:
-        f.write("[1, 2, 3]")  # valid JSON, wrong top-level shape
+        f.write("[1, 2, 3]\n")  # valid JSON, wrong shape
     m3 = ckpt.load_manifest(str(tmp_path), "run1")
     assert m3.pending(["a"], ruleset) == ["a"]
+    # a start-clean manifest rewrites the corrupt journal on its next save
+    m3.record("b", ruleset, rows=1, violations=0, wall_ms=1.0)
+    ckpt.save_manifest(str(tmp_path), m3)
+    assert sorted(ckpt.load_manifest(str(tmp_path), "run1").records) == ["b"]
+
+
+def test_structurally_corrupt_legacy_manifest_starts_clean(tmp_path, ruleset):
+    from dataclasses import asdict
+
+    m = ckpt.Manifest(run_id="run1")
+    m.record("a", ruleset, rows=1, violations=0, wall_ms=1.0)
+    raw = {"run_id": "run1", "records": {"a": {**asdict(m.records["a"]), "from_the_future": True}}}
+    legacy = tmp_path / "run1" / ckpt.LEGACY_MANIFEST_NAME
+    legacy.parent.mkdir()
+    legacy.write_text(json.dumps(raw))
+    assert ckpt.load_manifest(str(tmp_path), "run1").pending(["a"], ruleset) == ["a"]
+    legacy.write_text("[1, 2, 3]")
+    assert ckpt.load_manifest(str(tmp_path), "run1").pending(["a"], ruleset) == ["a"]
 
 
 def test_compute_verdicts_null_partition_counts(spark):

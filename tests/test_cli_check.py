@@ -75,6 +75,39 @@ def test_check_partitioned_out_jobs(tmp_path, spark, events_table):
     assert jobs <= 6, f"{jobs} Spark jobs"
 
 
+def test_check_out_grid_reads_the_written_sink(tmp_path, spark, events_table, monkeypatch):
+    """With --out the verdict grid counts the written violations: its
+    collect plans no row-rule explode (the rules ran once, for the sink
+    write), and the report equals the one built without --out."""
+    DataFrame = type(spark.range(1))  # the session's concrete DataFrame class
+    rules = tmp_path / "rules.json"
+    rules.write_text(json.dumps([
+        {"kind": "enum", "column": "event_type",
+         "values": ["click", "view", "purchase", "signup"], "rule_id": "et_enum"},
+        {"kind": "range", "column": "value", "min": 0.0, "max": 100.0,
+         "rule_id": "v_range", "tolerance": 0.01},
+    ]))
+    base = ["--table", events_table, "--rules", str(rules),
+            "--partition-col", "date_format(ts, 'yyyy-MM-dd')"]
+    plans = []
+    collect = DataFrame.collect
+
+    def recording_collect(self):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", recording_collect)
+    rc_out = run([*base, "--out", str(tmp_path / "viol"), "--report", str(tmp_path / "out.json")])
+    assert len(plans) == 1
+    assert "Generate inline" in plans[0]  # the grid's own rule expansion
+    assert "explode" not in plans[0], plans[0]
+    rc = run([*base, "--report", str(tmp_path / "plain.json")])
+    assert "explode" in plans[1]  # without a sink the grid runs the rules
+    out, plain = (json.loads((tmp_path / n).read_text()) for n in ("out.json", "plain.json"))
+    out.pop("sec"), plain.pop("sec")
+    assert (rc_out, out) == (rc, plain)
+
+
 def test_check_whole_table_jobs_match_partitioned(tmp_path, spark, events_table):
     """A whole-table check builds its verdicts with the same grid builder as
     a partitioned one (an empty grouping key), so it costs no more Spark

@@ -128,3 +128,50 @@ def lio_planned(df):
     from lyra_spark.io import planned_scan_tasks
 
     return planned_scan_tasks(df)
+
+
+def test_planned_scan_tasks_counts_packed_small_files(spark, tmp_path, fixtures_sf0001):
+    """Many small files pack several to a scan task (FilePartition: split
+    size from the total bytes over the default parallelism, openCostInBytes
+    charged per file); the estimate equals the planned task count, also
+    when files split and when the open cost shrinks."""
+    import shutil
+
+    src = os.path.join(fixtures_sf0001, "transcripts")
+    p = str(tmp_path / "t")
+    shutil.copytree(src, p)
+    df = spark.read.parquet(p)
+    assert len(df.inputFiles()) >= 80
+    keys = ("spark.sql.files.openCostInBytes", "spark.sql.files.maxPartitionBytes")
+    old = {k: spark.conf.get(k) for k in keys}
+    try:
+        for open_cost, max_bytes in [(None, None), ("8k", "30000"), ("1k", "100000"), ("64k", "10000")]:
+            if open_cost:
+                spark.conf.set(keys[0], open_cost)
+                spark.conf.set(keys[1], max_bytes)
+            df = spark.read.parquet(p)  # a fresh plan under the current confs
+            est, real = planned_scan_tasks(df), df.rdd.getNumPartitions()
+            assert est == real, (open_cost, max_bytes, est, real)
+            if open_cost is None:
+                assert real < len(df.inputFiles())  # packing happened
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def test_local_table_listing_runs_on_the_driver(spark, tmp_path, fixtures_sf0001):
+    """A local session lists a table's ~90 partition dirs on the driver:
+    reading it submits only the schema-inference job, no parallel listing
+    job with one task per dir."""
+    import shutil
+
+    p = str(tmp_path / "t")
+    shutil.copytree(os.path.join(fixtures_sf0001, "transcripts"), p)  # no cached listing
+    assert len(os.listdir(p)) > 32  # above Spark's parallel-listing threshold
+    sc = spark.sparkContext
+    sc.setJobGroup("listing_jobs", "count jobs")
+    try:
+        spark.read.parquet(p)
+    finally:
+        sc.setJobGroup("", "")
+    assert len(sc.statusTracker().getJobIdsForGroup("listing_jobs")) == 1

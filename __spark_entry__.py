@@ -3053,7 +3053,7 @@ def oracle_sql() -> dict[str, str]:
                    ROUND((e.value - s.mu) / s.sd, 4) AS zscore
             FROM events e JOIN s ON strftime(e.ts, '%Y-%m-%d') = s.day
             WHERE e.value IS NOT NULL AND s.sd IS NOT NULL AND s.sd > 0
-              AND ABS(ROUND((e.value - s.mu) / s.sd, 4)) > 3.0
+              AND ABS((e.value - s.mu) / s.sd) > 3.0
         """,
         "violation_samples": f"""
             WITH viol AS ({EVENTS_ORACLE_VIOLATIONS}),

@@ -38,7 +38,7 @@ def main() -> None:
         sf = "0.1"
 
     from lyra_spark.fixtures import materialize
-    from lyra_spark.session import get_spark
+    from lyra_spark.session import codegen_compiles, get_spark
 
     fx = materialize(sf, os.path.join(REPO, ".fixtures", f"sf{sf}"))
 
@@ -54,6 +54,9 @@ def main() -> None:
     n_turns = tdf.count()
 
     timings: dict[str, float] = {}
+    # generated classes compiled inside each timed phase (all samples): a
+    # phase that still compiles on its second sample is timing recompiles
+    compiles: dict[str, int] = {}
     bench_t0 = time.perf_counter()
     # Total-wall budget: the harness that captures this output may enforce a
     # timeout, and losing the WHOLE record to a neighbor-noise storm is worse
@@ -68,11 +71,13 @@ def main() -> None:
         neighbors instead of the query."""
         n = 1 if (time.perf_counter() - bench_t0) > budget_s else samples
         best = float("inf")
+        c0 = codegen_compiles(spark)
         for _ in range(n):
             t0 = time.perf_counter()
             fn()
             best = min(best, time.perf_counter() - t0)
         timings[name] = round(best, 3)
+        compiles[name] = codegen_compiles(spark) - c0
 
     # warm the JVM/codegen once on a trivial job
     tdf.limit(10).count()
@@ -115,6 +120,7 @@ def main() -> None:
 
     probes = [probe()]
     best = float("inf")
+    c0 = codegen_compiles(spark)
     n_samples = 0
     while True:
         t0 = time.perf_counter()
@@ -132,6 +138,7 @@ def main() -> None:
         if n_samples >= 2 and time.perf_counter() - bench_t0 > budget_s * 0.4:
             break
     timings["transcript_validate_suite"] = round(best, 3)
+    compiles["transcript_validate_suite"] = codegen_compiles(spark) - c0
     headline_gated = probe_clear(probes[-2]) and probe_clear(probes[-1])
     timed("transcript_stats", lambda: force(column_stats(tdf, ["conv_id", "role", "text", "tool", "turn_idx"])))
     timed("transcript_length_hist", lambda: force(length_histogram(tdf, "text")))
@@ -228,6 +235,7 @@ def main() -> None:
                 "value": turns_per_sec,
                 "unit": "turns/sec",
                 "queries": timings,
+                "codegen_compiles": compiles,
                 "sf": float(sf),
                 "turns": n_turns,
                 "cpus": int(cpus),

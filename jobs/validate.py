@@ -27,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from lyra_spark import checkpoint as ckpt
 from lyra_spark import io as lio
 from lyra_spark import presets
-from lyra_spark.session import get_spark
+from lyra_spark.session import codegen_compiles, get_spark
 
 
 # The transcript role grammar: every (prev → cur) pair a well-formed
@@ -133,8 +133,8 @@ def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = Non
                     help="write a machine-readable JSON run report here: "
                          "per-partition rows/violations/wall, failing metric "
                          "rules + anomalies, drift and freshness failures, "
-                         "HLL estimates — the CI-consumption summary of "
-                         "everything this run printed")
+                         "HLL estimates, generated classes compiled — the "
+                         "CI-consumption summary of everything this run printed")
     ap.add_argument("--freshness-hours", type=float, default=None,
                     help="also report per-partition freshness: lag of max(ts) behind "
                          "the freshest partition, stale when above this many hours. "
@@ -152,6 +152,7 @@ def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = Non
                          "metric grid to store without declared metric rules)")
 
     spark = get_spark(master=args.master, app_name=f"lyra_validate_{args.run_id}")
+    compiles0 = codegen_compiles(spark)
     batch_size = spark.sparkContext.defaultParallelism
     # Shuffle partitions sized by DATA, not core count: each batch shuffles
     # its dates' rows on conv_id, so the right granularity is ~100 MB of the
@@ -560,6 +561,12 @@ def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = Non
         if args.save_reference:
             save_reference(sk, args.save_reference)
             print(f"[lyra] drift reference saved to {args.save_reference}")
+
+    # generated classes compiled during this run (a py4j counter read, no
+    # Spark job): a warm re-run that still compiles means the codegen cache
+    # is evicting the run's working set
+    report["codegen_compiles"] = codegen_compiles(spark) - compiles0
+    print(f"[lyra] codegen: {report['codegen_compiles']} classes compiled")
 
     if args.report:
         import json as _json

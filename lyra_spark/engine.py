@@ -11,7 +11,9 @@ only aggregations.
 from __future__ import annotations
 
 import warnings
-from dataclasses import dataclass
+from collections.abc import Callable
+from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -45,9 +47,16 @@ def ruleset_tolerances(ruleset: RuleSet) -> dict[str, float] | None:
 @dataclass
 class ValidationResult:
     violations: DataFrame  # (*key_cols, [partition_col], rule_id, observed_value)
-    verdicts: DataFrame  # ([partition_col], rule_id, pass, violation_count, row_count)
+    build_verdicts: Callable[[], DataFrame] = field(repr=False)
     key_cols: list[str]
     partition_col: str | None
+
+    @cached_property
+    def verdicts(self) -> DataFrame:
+        """([partition_col], rule_id, pass, violation_count, row_count) —
+        planned on first read: a caller that rolls up from a written sink
+        instead never pays to plan this grid."""
+        return self.build_verdicts()
 
     def violations_sorted(self) -> DataFrame:
         """Stable (conv_id, turn_idx, rule_id) ordering — the byte-match contract."""
@@ -362,10 +371,13 @@ def validate(
             ev = ev.withColumn("message", F.concat(F.lit('"'), F.col("rule_id"), F.lit('" failed')))
         viol = viol.unionByName(ev)
     rule_ids = [r.rule_id for r in ruleset.checks] + list(extra_rule_ids or [])
-    verd = compute_verdicts(df, viol, rule_ids, partition_col,
-                            severities=ruleset_severities(ruleset),
-                            tolerances=ruleset_tolerances(ruleset))
-    return ValidationResult(violations=viol, verdicts=verd, key_cols=list(key_cols), partition_col=partition_col)
+    return ValidationResult(
+        violations=viol,
+        build_verdicts=lambda: compute_verdicts(df, viol, rule_ids, partition_col,
+                                                severities=ruleset_severities(ruleset),
+                                                tolerances=ruleset_tolerances(ruleset)),
+        key_cols=list(key_cols), partition_col=partition_col,
+    )
 
 
 def violation_samples(

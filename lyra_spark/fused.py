@@ -366,7 +366,10 @@ def validate_transcripts_fused(
     rule_ids = suite_rule_ids(fused_rules, transitions is not None, placement_ts is not None)
     from lyra_spark.engine import ruleset_severities, ruleset_tolerances
 
-    verd = compute_verdicts(df, viol, rule_ids, partition_col,
-                            severities=ruleset_severities(fused_rules),
-                            tolerances=ruleset_tolerances(fused_rules))
-    return ValidationResult(violations=viol, verdicts=verd, key_cols=list(key_cols), partition_col=partition_col)
+    return ValidationResult(
+        violations=viol,
+        build_verdicts=lambda: compute_verdicts(df, viol, rule_ids, partition_col,
+                                                severities=ruleset_severities(fused_rules),
+                                                tolerances=ruleset_tolerances(fused_rules)),
+        key_cols=list(key_cols), partition_col=partition_col,
+    )

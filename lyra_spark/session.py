@@ -3,7 +3,8 @@
 AQE (incl. skew-join), Arrow transport for pandas UDFs, UTC session timezone for
 deterministic timestamp semantics (BASELINE.json:6 byte-match requirement),
 shuffle partitions sized to the local core count instead of the 200 default,
-and, in local mode, table listing on the driver.
+a generated-code cache sized to hold a validate run's whole working set, and,
+in local mode, table listing on the driver.
 """
 
 from __future__ import annotations
@@ -37,6 +38,16 @@ def ensure_shipped(spark: SparkSession) -> None:
     zip_path = shutil.make_archive(base, "zip", root_dir=os.path.dirname(pkg_dir), base_dir="lyra_spark")
     spark.sparkContext.addPyFile(zip_path)
     _SHIPPED.add(key)
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes this JVM has compiled so far: the sample count of
+    Spark's own ``CodegenMetrics`` compilation-time histogram. A py4j read
+    on the driver, never a Spark job. In local mode the executors share the
+    driver JVM, so the count covers their compiles too; on a cluster it
+    covers the driver's only."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def get_spark(
@@ -95,6 +106,16 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("LYRA_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC -XX:+AlwaysPreTouch")
+        # Spark keeps the Janino-compiled class of each generated plan stage
+        # in an LRU of 100 entries by default. Measured working sets: a cold
+        # 2-partition validate CLI invocation generates 118 distinct classes,
+        # a 2-batch run with every optional output and check 180, and the
+        # stats + drift profiling loop 58. Past 100 the LRU evicts each class
+        # before its reuse, so every warm re-run of the CLI in one process
+        # recompiled ~92 classes. 1000 is over 4x the largest set: Guava
+        # splits the bound across 4 segments that each evict on their own.
+        # A static conf, read once when the session starts.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if master == "local" or master.startswith("local["):
         # one JVM hosts the executors too, so a distributed listing job (one

@@ -297,7 +297,7 @@ def outlier_rows(
     legal but wildly atypical for their cohort).
 
     Returns (*key_cols, [partition_col], value, zscore) with zscore rounded
-    to 4 dp.
+    to 4 dp (the filter compares unrounded, like robust_outlier_rows).
 
     Scale: ONE aggregate produces one (mean, std) row per partition; the
     verdict is then a MAP-ONLY filter over the scan with that tiny frame
@@ -319,16 +319,15 @@ def outlier_rows(
             F.avg(value_col).alias("__mu"), F.stddev_samp(value_col).alias("__sd")
         )
         joined = df.crossJoin(F.broadcast(stats_df))
-    zscore = F.round((F.col(value_col) - F.col("__mu")) / F.col("__sd"), 4)
+    zscore = (F.col(value_col) - F.col("__mu")) / F.col("__sd")
     return (
         joined.filter(
             F.col(value_col).isNotNull()
             & F.col("__sd").isNotNull()
             & (F.col("__sd") > 0)
+            & (F.abs(zscore) > z)
         )
-        .withColumn("zscore", zscore)
-        .filter(F.abs(F.col("zscore")) > z)
-        .select(*key_cols, *group, F.col(value_col).alias("value"), "zscore")
+        .select(*key_cols, *group, F.col(value_col).alias("value"), F.round(zscore, 4).alias("zscore"))
     )
 
 

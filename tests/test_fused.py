@@ -385,3 +385,48 @@ def test_fused_partition_from_ts_false_matches_composable(spark, fixtures_sf0001
     assert normalize_violations(fused.violations_sorted().toPandas()) == normalize_violations(
         comp.violations_sorted().toPandas()
     )
+
+
+def test_verdict_grid_planned_only_when_read(spark, fixtures_sf0001, tmp_path, monkeypatch):
+    """The suite plans its verdict grid on first read of ``verdicts``. A CLI
+    --out batch rolls up from the written sink instead, so it plans one
+    grid, not two; the grid, once read, equals the one compute_verdicts
+    builds over the same violations."""
+    from lyra_spark import engine, fused, presets
+    from lyra_spark.fused import suite_rule_ids, validate_transcripts_fused
+    from lyra_spark.presets import transcript_ruleset
+    from lyra_spark.rules import RuleSet
+
+    real = engine.compute_verdicts
+    calls = []
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    for mod in (engine, fused, presets):
+        monkeypatch.setattr(mod, "compute_verdicts", counting)
+
+    from jobs.validate import main
+
+    assert main([
+        "--table", os.path.join(fixtures_sf0001, "transcripts"),
+        "--tools-dim", os.path.join(fixtures_sf0001, "tools_dim.parquet"),
+        "--checkpoint", str(tmp_path / "ck"), "--run-id", "lazy",
+        "--out", str(tmp_path / "viol"), "--limit-partitions", "2",
+    ]) == 0
+    assert len(calls) == 1
+
+    tdf = spark.read.parquet(os.path.join(fixtures_sf0001, "transcripts"))
+    dim = spark.read.parquet(os.path.join(fixtures_sf0001, "tools_dim.parquet"))
+    rs = transcript_ruleset()
+    res = validate_transcripts_fused(tdf, dim, rs, transitions=TRANSITIONS, placement_ts="ts")
+    calls.clear()
+    res.violations.count()
+    assert calls == []
+    lazy = res.verdicts
+    assert res.verdicts is lazy and len(calls) == 1
+    rule_ids = suite_rule_ids(RuleSet(rs.rules + [fused.inline_referential_rule(dim)]),
+                              transitions=True, placement=True)
+    eager = real(tdf, res.violations, rule_ids, "part_date")
+    assert sorted(map(tuple, lazy.collect())) == sorted(map(tuple, eager.collect()))

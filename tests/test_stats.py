@@ -195,6 +195,23 @@ def test_outlier_rows_zscore(spark):
     assert r.zscore == want
 
 
+def test_outlier_rows_gates_on_unrounded_zscore(spark):
+    """z = 3.00004 at z=3.0 is an outlier even though it rounds to 3.0: the
+    gate compares the unrounded score and only the output rounds, as in
+    robust_outlier_rows."""
+    import statistics
+
+    from lyra_spark.stats import outlier_rows
+
+    vals = [-1.0, 1.0] * 10 + [4.33721]
+    assert 3.00004 < (vals[-1] - statistics.mean(vals)) / statistics.stdev(vals) < 3.00005
+    rows = [("d1", i, v) for i, v in enumerate(vals)]
+    rows += [("d2", 100 + i, 7.0) for i in range(3)]  # sd = 0: no unit, nothing
+    df = spark.createDataFrame(rows, "day string, event_id int, value double")
+    got = outlier_rows(df, "value", ["event_id"], partition_col="day", z=3.0).collect()
+    assert [(r.event_id, r.value, r.zscore) for r in got] == [(20, 4.33721, 3.0)]
+
+
 def test_column_entropy_exact(spark):
     """Entropy/distinctness vs closed-form numpy on a known distribution."""
     import math

@@ -27,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from lyra_spark import checkpoint as ckpt
 from lyra_spark import io as lio
 from lyra_spark import presets
-from lyra_spark.session import codegen_compiles, get_spark
+from lyra_spark.session import codegen_compiles, get_spark, group_jobs
 
 
 # The transcript role grammar: every (prev → cur) pair a well-formed
@@ -133,7 +133,8 @@ def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = Non
                     help="write a machine-readable JSON run report here: "
                          "per-partition rows/violations/wall, failing metric "
                          "rules + anomalies, drift and freshness failures, "
-                         "HLL estimates, generated classes compiled — the "
+                         "HLL estimates, generated classes compiled, Spark "
+                         "jobs run — the "
                          "CI-consumption summary of everything this run printed")
     ap.add_argument("--freshness-hours", type=float, default=None,
                     help="also report per-partition freshness: lag of max(ts) behind "
@@ -152,6 +153,23 @@ def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = Non
                          "metric grid to store without declared metric rules)")
 
     spark = get_spark(master=args.master, app_name=f"lyra_validate_{args.run_id}")
+    # Every job of the run goes to one job group, which --report counts: the
+    # caller's group when it has set one (its own count then still covers
+    # the run), else the run's own, cleared on return.
+    sc = spark.sparkContext
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    if group:
+        return _validate(spark, args, catalog, group)
+    group = f"lyra_validate_{args.run_id}"
+    sc.setJobGroup(group, f"lyra validate {args.run_id}")
+    try:
+        return _validate(spark, args, catalog, group)
+    finally:
+        sc._jsc.clearJobGroup()
+
+
+def _validate(spark, args: argparse.Namespace, catalog: "lio.TableCatalog | None", group: str) -> int:
+    jobs0 = group_jobs(spark, group)
     compiles0 = codegen_compiles(spark)
     batch_size = spark.sparkContext.defaultParallelism
     # Shuffle partitions sized by DATA, not core count: each batch shuffles
@@ -194,7 +212,7 @@ def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = Non
     # computed once, reused by every --out verdict roll-up below so the loop
     # never rescans a batch just to count it.
     if catalog is None:
-        catalog = lio.catalog_for(spark, args.table)
+        catalog = lio.catalog_for(spark, args.table, schema=df.schema)
     meta_counts = catalog.partition_record_counts()
     # snapshot lineage: an explicit --snapshot-id wins; otherwise the catalog
     # supplies it (Iceberg: current snapshot; parquet stand-in: None)
@@ -202,7 +220,8 @@ def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = Non
 
     manifest = ckpt.load_manifest(args.checkpoint, args.run_id)
     # Partition listing: catalog metadata when it serves one (Iceberg's
-    # .partitions is authoritative), else the pruned distinct scan.
+    # .partitions; the parquet stand-in's footer walk above, no Spark job),
+    # else the pruned distinct scan.
     all_parts = catalog.partitions() or lio.list_partitions(spark, df)
     pending = manifest.pending(all_parts, ruleset)
     n_done = len(all_parts) - len(pending)
@@ -329,10 +348,11 @@ def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = Non
                 empty(frame.drop("part").schema).write.parquet(uri)
 
     # Action budget per BATCH: the violation sink write (the one full compute
-    # of the pipeline) when --out is given, one verdict roll-up over the tiny
-    # written sink and its collect (row and violation counts come from the
-    # collected grid, never from a rescan), the no-scan verdict write from
-    # those local rows, and the optional clean/quarantine/HLL writes.
+    # of the pipeline) when --out is given, which also observes the batch's
+    # violation counts; the verdict grid's collect (row and violation counts
+    # come from the collected grid, never from a rescan or a sink re-read);
+    # the no-scan verdict write from those local rows; and the optional
+    # clean/quarantine/HLL writes.
     for start in range(0, len(pending), batch_size):
         batch = pending[start : start + batch_size]
         t0 = time.perf_counter()
@@ -351,25 +371,30 @@ def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = Non
         )
         viol = result.violations
         if args.out:
-            # write-then-reuse: violations compute once into the sink; the
-            # verdict roll-up aggregates the WRITTEN files (never recomputes)
-            lio.write_violations(viol.withColumn("part", part_key), args.out,
-                                 partition_col=["part", "part_date"], mode="append")
-            # a clean partition gets no sink dir: read only the dirs written
-            # (explicit schema), or an empty frame when the batch is clean
-            written = [uri for uri, exists in lio.partition_dirs(spark, args.out, batch, "part") if exists]
-            viol = (spark.read.schema(viol.schema).option("basePath", args.out).parquet(*written)
-                    if written else empty(viol.schema))
+            # write-then-reuse: violations compute once into the sink, and the
+            # write itself observes one count per (partition, rule) cell, so
+            # the roll-up neither recomputes nor re-reads the sink
+            observed = lio.write_violations(
+                viol.withColumn("part", part_key), args.out, partition_col=["part", "part_date"],
+                mode="append", observe=presets.violation_count_aggs(batch, rule_ids, "part_date", "part"),
+            )
+            counted = presets.counted_violations(spark, batch, rule_ids, "part_date", observed)
             if meta_counts is not None and all(pk in meta_counts for pk in batch):
-                # row counts from table metadata + violation counts from the
-                # tiny written sink — no rescan of the batch for counting
+                # row counts from table metadata — no rescan of the batch
                 verd = presets.verdicts_from_metadata(
-                    scoped, viol, rule_ids, "part_date", {pk: meta_counts[pk] for pk in batch},
+                    scoped, counted, rule_ids, "part_date", {pk: meta_counts[pk] for pk in batch},
                     severities=severities, tolerances=tolerances,
                 )
             else:
-                verd = compute_verdicts(scoped, viol, rule_ids, "part_date",
+                verd = compute_verdicts(scoped, counted, rule_ids, "part_date",
                                         severities=severities, tolerances=tolerances)
+            if args.clean_out or args.quarantine_out:
+                # a clean partition gets no sink dir: read only the dirs
+                # written (explicit schema), or an empty frame when the batch
+                # is clean
+                written = [uri for uri, exists in lio.partition_dirs(spark, args.out, batch, "part") if exists]
+                viol = (spark.read.schema(viol.schema).option("basePath", args.out).parquet(*written)
+                        if written else empty(viol.schema))
         else:
             # both dataset checks are fused into the suite, so its verdict
             # grid is already complete — no rebuild pass needed
@@ -567,6 +592,8 @@ def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = Non
     # is evicting the run's working set
     report["codegen_compiles"] = codegen_compiles(spark) - compiles0
     print(f"[lyra] codegen: {report['codegen_compiles']} classes compiled")
+    report["spark_jobs"] = group_jobs(spark, group) - jobs0
+    print(f"[lyra] spark jobs: {report['spark_jobs']}")
 
     if args.report:
         import json as _json

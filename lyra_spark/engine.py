@@ -242,6 +242,12 @@ def compute_verdicts(
     their row counts, e.g. from table metadata (see
     presets.verdicts_from_metadata), so ``df`` is never scanned for
     counting. Omitted, one count aggregate over ``df`` supplies them.
+
+    ``violations`` may also be counted already: (partition_col, rule_id,
+    violation_count) rows, one per cell, e.g. observed on the sink write
+    (presets.counted_violations). A cell matches its grid row on the string
+    form of the partition value, so a string key column serves any
+    partition type.
     """
     keys = [partition_col] if partition_col else []
     rows = (
@@ -258,7 +264,11 @@ def compute_verdicts(
             cell.append(F.lit(float(tolerances.get(rid, 0.0))).alias("tolerance"))
         cells.append(F.struct(*cell))
     grid = rows.select(*keys, "row_count", F.inline(F.array(*cells)))
-    vc = violations.groupBy(*keys, "rule_id").agg(F.count(F.lit(1)).alias("violation_count"))
+    vc = (
+        violations
+        if "violation_count" in violations.columns
+        else violations.groupBy(*keys, "rule_id").agg(F.count(F.lit(1)).alias("violation_count"))
+    )
     # NULL-sentineled join key: an equi-join never matches NULL = NULL, so
     # the NULL partition's violation counts would never reach its grid row
     # and it would verdict pass=True with real violations outstanding —

@@ -11,9 +11,11 @@ from __future__ import annotations
 
 import os
 import urllib.parse
+from functools import cached_property
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from lyra_spark.schema import KEY_COLUMNS, PARTITION_COLUMN
 
@@ -142,8 +144,9 @@ def read_transcripts(spark: SparkSession, uri: str) -> DataFrame:
 
 
 def list_partitions(spark: SparkSession, df: DataFrame, partition_col: str = PARTITION_COLUMN) -> list[str]:
-    """Distinct partition keys (Iceberg: snapshot metadata; parquet: cheap
-    distinct over the partition column, which prunes to directory listing)."""
+    """Distinct partition keys, str(partition value), by a distinct scan over
+    the partition column (Spark jobs, O(table files)): the fallback when the
+    table's catalog serves no listing (TableCatalog.partitions)."""
     return sorted(str(r[0]) for r in df.select(partition_col).distinct().collect())
 
 
@@ -202,12 +205,15 @@ def partition_dirs(spark: SparkSession, base: str, keys: list[str], col: str) ->
 def _partition_dirs(path: str, partition_col: str) -> list[tuple[str, list[str]]] | None:
     """(partition key, parquet files) per Hive partition directory — the
     shared walk under every footer-metadata reader. Returns None when the
-    layout doesn't qualify: not a local dir, no partition dirs, or a NULL
+    layout doesn't qualify: not a local dir, no partition dirs, a NULL
     partition dir (__HIVE_DEFAULT_PARTITION__ — its string key can never
     match str(partition value) downstream, so metadata-backed consumers must
-    fall back to the distributed scan rather than silently report zeros).
-    Hive URL-encodes special characters in dir names; keys are unescaped
-    because downstream matches are against str(partition VALUE)."""
+    fall back to the distributed scan rather than silently report zeros), or
+    a partition dir holding a visible entry that is not a .parquet file (a
+    nested partition level or a differently named data file: Spark reads
+    its rows, the footers would miss them). Hive URL-encodes special
+    characters in dir names; keys are unescaped because downstream matches
+    are against str(partition VALUE)."""
     import glob as _glob
 
     if not os.path.isdir(path):
@@ -218,9 +224,13 @@ def _partition_dirs(path: str, partition_col: str) -> list[tuple[str, list[str]]
     out: list[tuple[str, list[str]]] = []
     for d in dirs:
         raw = os.path.basename(d).split("=", 1)[1]
-        if raw == HIVE_DEFAULT_PARTITION:
+        if raw == HIVE_DEFAULT_PARTITION or not os.path.isdir(d):
             return None
-        out.append((urllib.parse.unquote(raw), _glob.glob(os.path.join(d, "*.parquet"))))
+        # Spark skips names starting with "_" or "." (_SUCCESS, .crc files)
+        names = sorted(n for n in os.listdir(d) if not n.startswith(("_", ".")))
+        if any(not n.endswith(".parquet") for n in names):
+            return None
+        out.append((urllib.parse.unquote(raw), [os.path.join(d, n) for n in names]))
     return out
 
 
@@ -255,13 +265,20 @@ def write_violations(
     out_dir: str,
     partition_col: str | list[str] = PARTITION_COLUMN,
     mode: str = "overwrite",
-) -> None:
+    observe: list[Column] | None = None,
+) -> dict | None:
     """Deterministic violation sink (BASELINE.json:6 byte-match contract).
 
     ``partition_col`` may list several columns, outermost directory level
     first. ``mode`` is the DataFrameWriter save mode: "overwrite" replaces
     ``out_dir``; "append" adds partition dirs beside existing ones (the
     caller clears the ones it rewrites).
+
+    ``observe``: named aggregates over the written rows, computed by the
+    write itself (no extra job) and returned as {name: value}; None when
+    omitted. They are observed after the rebalance and the sort, so they run
+    in the write's result stage, where each task's metrics count once even
+    when a task is retried.
 
     Parallelism: AQE REBALANCE on the date. Runtime shuffle sizes decide the
     layout — dates ≫ cores coalesce into shared write tasks (file count
@@ -291,16 +308,16 @@ def write_violations(
     conf = violations.sparkSession.conf
     prev = conf.get(_AQE_FLOOR_KEY, None)
     conf.set(_AQE_FLOOR_KEY, _AQE_FLOOR_VALUE)
+    shaped = violations.hint("rebalance", *cols).sortWithinPartitions(
+        *cols, *KEY_COLUMNS, "rule_id", "observed_value")
+    observation = Observation() if observe else None
+    if observation is not None:
+        shaped = shaped.observe(observation, *observe)
     try:
-        (
-            violations.hint("rebalance", *cols)
-            .sortWithinPartitions(*cols, *KEY_COLUMNS, "rule_id", "observed_value")
-            .write.mode(mode)
-            .partitionBy(*cols)
-            .parquet(out_dir)
-        )
+        shaped.write.mode(mode).partitionBy(*cols).parquet(out_dir)
     finally:
         conf.set(_AQE_FLOOR_KEY, prev) if prev is not None else conf.unset(_AQE_FLOOR_KEY)
+    return None if observation is None else observation.get
 
 
 def write_bucketed(
@@ -391,7 +408,8 @@ class TableCatalog:
         return None
 
     def partitions(self) -> list[str] | None:
-        """Sorted partition keys (str(partition value))."""
+        """Sorted keys (str(partition value)) of the partitions holding at
+        least one row, as list_partitions' distinct scan returns them."""
         return None
 
     def partition_record_counts(self) -> dict[str, int] | None:
@@ -406,27 +424,56 @@ class TableCatalog:
 class ParquetFooterCatalog(TableCatalog):
     """The local Hive-layout stand-in: footers serve what manifests serve in
     prod. Delegates to the module-level footer readers (shared with callers
-    that use them directly)."""
+    that use them directly). One instance walks the footers once: its record
+    counts and partition list are one view of the table, the way an Iceberg
+    catalog reads one snapshot.
 
-    def __init__(self, path: str, partition_col: str = PARTITION_COLUMN) -> None:
+    ``schema``: the table's Spark schema when the caller has already read
+    the table; without it, listing partitions reads it once, which costs
+    Spark's schema-inference job."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        path: str,
+        partition_col: str = PARTITION_COLUMN,
+        schema: StructType | None = None,
+    ) -> None:
+        self.spark = spark
         self.path = path
         self.partition_col = partition_col
+        self.schema = schema
+
+    @cached_property
+    def _counts(self) -> dict[str, int] | None:
+        return partition_row_counts(self.path, self.partition_col)
 
     def partitions(self) -> list[str] | None:
-        # Deliberately None: Hive DIRECTORY NAMES are not authoritative for
-        # str(partition VALUE) — an int partition column with zero-padded
-        # dirs ('part=05' vs value 5) would hand the validate loop a key
-        # that partition_scope matches ZERO rows on, silently recording a
-        # 0-row pass. The distinct-scan listing (list_partitions) derives
-        # keys from the VALUES themselves and stays the source of truth;
-        # footer COUNTS remain served (a key mismatch there only degrades a
-        # metadata-backed verdict to the scan path — safe). Iceberg's
-        # .partitions metadata serves VALUES, not dir names, so the real
-        # catalog implements this method.
-        return None
+        """The partitions holding at least one row, keyed str(partition
+        VALUE) as list_partitions keys them. Hive DIRECTORY NAMES are not
+        those keys: an int column's dir 'part=05' holds the value 5. Each
+        name is cast to the partition column's Spark type on a local
+        relation (collected without a Spark job); a name the cast rejects
+        returns None, and so does a NULL partition dir (no counts), so the
+        distinct scan stays the fallback."""
+        from pyspark.sql import functions as F
+
+        counts = self.partition_record_counts()
+        if counts is None:
+            return None
+        names = [k for k, n in counts.items() if n > 0]
+        if not names:
+            return []
+        schema = self.schema or self.spark.read.parquet(self.path).schema
+        typed = local_frame(self.spark, {"k": names}, "k string").select(
+            F.col("k").try_cast(schema[self.partition_col].dataType)
+        ).collect()
+        if any(r[0] is None for r in typed):
+            return None
+        return sorted({str(r[0]) for r in typed})
 
     def partition_record_counts(self) -> dict[str, int] | None:
-        return partition_row_counts(self.path, self.partition_col)
+        return None if self._counts is None else dict(self._counts)
 
     def partition_ts_range(self, ts_col: str) -> dict[str, tuple] | None:
         return partition_ts_range(self.path, ts_col, self.partition_col)
@@ -489,13 +536,25 @@ class IcebergTableCatalog(TableCatalog):
         return None
 
 
-def catalog_for(spark: SparkSession, uri: str, partition_col: str = PARTITION_COLUMN) -> TableCatalog:
+def catalog_for(
+    spark: SparkSession, uri: str, partition_col: str = PARTITION_COLUMN, schema: StructType | None = None
+) -> TableCatalog:
     """The one place the table-URI scheme picks a metadata implementation —
     'iceberg:<catalog.table>' gets the metadata-table catalog, anything else
-    the parquet-footer stand-in."""
+    the parquet-footer stand-in (``schema``: the table's, if already read)."""
     if uri.startswith("iceberg:"):
         return IcebergTableCatalog(spark, uri[len("iceberg:") :], partition_col)
-    return ParquetFooterCatalog(uri, partition_col)
+    return ParquetFooterCatalog(spark, uri, partition_col, schema)
+
+
+def local_frame(spark: SparkSession, columns: dict[str, list], schema: str) -> DataFrame:
+    """A driver-built frame from Python columns. pandas in, Arrow across: a
+    plain Python list becomes a pickled RDD whose task launches a Python
+    worker just to unpickle a few rows; the pandas path is a driver-side
+    Arrow conversion into a pure-JVM LocalRelation."""
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame(columns), schema=schema)
 
 
 def write_sorted(

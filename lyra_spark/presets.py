@@ -7,10 +7,11 @@ golden manifests line up.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from lyra_spark import checks
 from lyra_spark.engine import ValidationResult, compute_verdicts, validate
+from lyra_spark.io import local_frame
 from lyra_spark.rules import RuleSet, enum, nonempty, range_rule, required
 from lyra_spark.schema import ROLE_ENUM
 
@@ -186,14 +187,55 @@ def verdicts_from_metadata(
     value) → row count, as io.partition_row_counts and the catalog serve
     them) become the grid's (partition_col, row_count) frame, cast to the
     partition column's type, so ``df`` is never scanned for counting."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
-    # pandas in, Arrow across: a plain Python list becomes a pickled RDD whose
-    # task launches a Python worker just to unpickle a few rows; the pandas
-    # path is a driver-side Arrow conversion into a pure-JVM LocalRelation
-    row_counts = df.sparkSession.createDataFrame(
-        pd.DataFrame({"pk": list(counts), "row_count": list(counts.values())}),
-        schema="pk string, row_count long",
+    row_counts = local_frame(
+        df.sparkSession, {"pk": list(counts), "row_count": list(counts.values())}, "pk string, row_count long"
     ).select(F.col("pk").cast(df.schema[partition_col].dataType).alias(partition_col), "row_count")
     return compute_verdicts(df, viol, rule_ids, partition_col, severities, tolerances, row_counts)
+
+
+def _cells(keys: list[str], rule_ids: list[str]) -> list[tuple[str | None, str]]:
+    """(partition key, rule_id) per verdict cell of a batch. The key "None"
+    (a NULL partition, as list_partitions renders it) adds a NULL cell
+    beside the literal one, as partition_scope scopes both."""
+    parts: list[str | None] = [*keys, None] if "None" in keys else list(keys)
+    return [(pk, rid) for pk in parts for rid in rule_ids]
+
+
+def violation_count_aggs(
+    keys: list[str], rule_ids: list[str], partition_col: str, key_col: str
+) -> list[Column]:
+    """One ``count_if`` per (partition, rule) cell over a violations frame
+    that carries ``key_col`` = io.partition_key(partition_col): the
+    aggregates io.write_violations(observe=...) computes on the sink write.
+    That is |keys| x |rule_ids| cells, so at most defaultParallelism x
+    |rules| for a CLI batch."""
+    from pyspark.sql import functions as F
+
+    # each Column call is a py4j round trip: build each key's and each
+    # rule's condition once and share them across the cells
+    has_value = F.col(partition_col).isNotNull()
+    in_part = {pk: F.col(key_col) == pk for pk in keys}
+    in_part[None] = ~has_value
+    if "None" in keys:
+        in_part["None"] = in_part["None"] & has_value
+    is_rule = {rid: F.col("rule_id") == rid for rid in rule_ids}
+    return [F.count_if(in_part[pk] & is_rule[rid]).alias(f"cell{i}")
+            for i, (pk, rid) in enumerate(_cells(keys, rule_ids))]
+
+
+def counted_violations(
+    spark: SparkSession, keys: list[str], rule_ids: list[str], partition_col: str, observed: dict
+) -> DataFrame:
+    """The observed values of violation_count_aggs(keys, rule_ids, ...) as
+    the pre-counted (partition_col, rule_id, violation_count) rows
+    compute_verdicts takes; the partition column holds str(value), NULL
+    for the NULL partition."""
+    cells = _cells(keys, rule_ids)
+    return local_frame(
+        spark,
+        {partition_col: [pk for pk, _ in cells], "rule_id": [rid for _, rid in cells],
+         "violation_count": [observed[f"cell{i}"] for i in range(len(cells))]},
+        f"{partition_col} string, rule_id string, violation_count long",
+    )

@@ -3,15 +3,17 @@
 AQE (incl. skew-join), Arrow transport for pandas UDFs, UTC session timezone for
 deterministic timestamp semantics (BASELINE.json:6 byte-match requirement),
 shuffle partitions sized to the local core count instead of the 200 default,
-a generated-code cache sized to hold a validate run's whole working set, and,
+a generated-code cache sized to hold a validate run's whole working set, no
+Python call-site capture on Column calls (each costs py4j round trips), and,
 in local mode, table listing on the driver.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
-import shutil
 import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
 
@@ -33,11 +35,37 @@ def ensure_shipped(spark: SparkSession) -> None:
     key = spark.sparkContext.applicationId
     if key in _SHIPPED:
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    base = os.path.join(tempfile.gettempdir(), f"lyra_spark_pyfiles_{os.getpid()}")
-    zip_path = shutil.make_archive(base, "zip", root_dir=os.path.dirname(pkg_dir), base_dir="lyra_spark")
-    spark.sparkContext.addPyFile(zip_path)
+    spark.sparkContext.addPyFile(package_zip(os.path.dirname(os.path.abspath(__file__)), tempfile.gettempdir()))
     _SHIPPED.add(key)
+
+
+def package_zip(pkg_dir: str, dest_dir: str) -> str:
+    """Zip the package at ``pkg_dir`` (sources only, no ``__pycache__``) to
+    ``<dest_dir>/<package>_pyfiles_<content hash>.zip`` and return the path.
+
+    The name is a hash of every file's relative path and bytes, so all
+    processes running the same sources share one zip, reused when present,
+    and an edited source gets a new one. The zip is written under a
+    process-unique temporary name and renamed into place, so a concurrent
+    reader never sees a partial file."""
+    root = os.path.dirname(pkg_dir)
+    files = []
+    for d, subdirs, names in os.walk(pkg_dir):
+        subdirs[:] = sorted(s for s in subdirs if s != "__pycache__")
+        files += [os.path.join(d, n) for n in sorted(names) if not n.endswith(".pyc")]
+    digest = hashlib.sha256()
+    for f in files:
+        digest.update(os.path.relpath(f, root).encode() + b"\0")
+        with open(f, "rb") as fh:
+            digest.update(fh.read() + b"\0")
+    path = os.path.join(dest_dir, f"{os.path.basename(pkg_dir)}_pyfiles_{digest.hexdigest()[:16]}.zip")
+    if not os.path.exists(path):
+        tmp = f"{path}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
+            for f in files:
+                zf.write(f, os.path.relpath(f, root))
+        os.replace(tmp, path)
+    return path
 
 
 def codegen_compiles(spark: SparkSession) -> int:
@@ -48,6 +76,15 @@ def codegen_compiles(spark: SparkSession) -> int:
     covers the driver's only."""
     metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def group_jobs(spark: SparkSession, group: str) -> int:
+    """How many jobs of job group ``group`` Spark's status tracker holds: a
+    py4j read on the driver, never a Spark job. The tracker keeps the last
+    ``spark.ui.retainedJobs`` (1000 by default) jobs. One call: PySpark's
+    ``StatusTracker.getJobIdsForGroup`` copies the id array element by
+    element, one py4j round trip each."""
+    return len(spark.sparkContext._jsc.statusTracker().getJobIdsForGroup(group))
 
 
 def get_spark(
@@ -116,6 +153,16 @@ def get_spark(
         # splits the bound across 4 segments that each evict on their own.
         # A static conf, read once when the session starts.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # PySpark wraps every Column/functions call to capture its Python
+        # call site for error messages: with this on (the default) each call
+        # costs ~4 extra py4j round trips (active-session lookup, origin
+        # lookup, conf read, set + clear). Planning one 2-partition batch of
+        # the fused suite sent 2,600-3,600 py4j commands with it on and
+        # ~1,170 with it off. The trade: an AnalysisException keeps its
+        # message and error class but loses PySpark's "DataFrame" call-site
+        # context. PySpark reads the conf once per process, on the first
+        # wrapped call made under an active session.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if master == "local" or master.startswith("local["):
         # one JVM hosts the executors too, so a distributed listing job (one

@@ -43,18 +43,97 @@ class FakeCatalog(lio.TableCatalog):
         return dict(self.ranges) if self.ranges is not None else None
 
 
-def test_parquet_footer_catalog_matches_module_functions(fixtures_sf0001):
+def test_parquet_footer_catalog_matches_module_functions(spark, fixtures_sf0001):
     table = os.path.join(fixtures_sf0001, "transcripts")
-    cat = lio.ParquetFooterCatalog(table)
+    df = spark.read.parquet(table)
+    cat = lio.ParquetFooterCatalog(spark, table, schema=df.schema)
     counts = cat.partition_record_counts()
     assert counts == lio.partition_row_counts(table)
-    # partition LISTING is deliberately None for the footer stand-in: Hive
-    # dir names are not authoritative for str(partition value) (zero-padded
-    # dirs would feed partition_scope keys matching zero rows) — the
-    # distinct-scan listing stays the source of truth
-    assert counts and cat.partitions() is None
+    # the partition list comes from the same footer walk and equals the
+    # distinct-scan listing, with no Spark job
+    sc = spark.sparkContext
+    sc.setJobGroup("footer_listing", "count jobs")
+    try:
+        parts = cat.partitions()
+    finally:
+        sc.setJobGroup("", "")
+    assert parts == lio.list_partitions(spark, df)
+    assert sc.statusTracker().getJobIdsForGroup("footer_listing") == []
+    # without the caller's schema the catalog reads it itself
+    assert lio.catalog_for(spark, table).partitions() == parts
     assert cat.partition_ts_range("ts") == lio.partition_ts_range(table, "ts")
     assert cat.snapshot_id() is None  # parquet has no snapshot lineage
+
+
+def _footer_listing(spark, path, col):
+    """(footer listing, distinct-scan listing) of a Hive-partitioned dir."""
+    df = spark.read.parquet(path)
+    return lio.ParquetFooterCatalog(spark, path, col, df.schema).partitions(), lio.list_partitions(spark, df, col)
+
+
+def _write_part(path, col, raw, rows):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = os.path.join(path, f"{col}={raw}")
+    os.makedirs(d)
+    pq.write_table(pa.table({"v": pa.array(list(range(rows)), pa.int64())}), os.path.join(d, "part-0.parquet"))
+
+
+def test_footer_listing_normalises_zero_padded_int_dirs(tmp_path, spark):
+    """'pkey=05' holds the int value 5: the listing keys it "5", as the
+    distinct scan does, so partition_scope matches its rows."""
+    path = str(tmp_path / "padded")
+    for raw, rows in (("05", 2), ("12", 1), ("007", 3)):
+        _write_part(path, "pkey", raw, rows)
+    footer, scan = _footer_listing(spark, path, "pkey")
+    assert footer == scan == ["12", "5", "7"]
+
+
+def test_footer_listing_unescapes_string_keys(tmp_path, spark):
+    df = spark.createDataFrame([("a b:c/d", 1), ("a b:c/d", 2), ("plain", 3)], "pkey string, v int")
+    path = str(tmp_path / "esc")
+    df.write.partitionBy("pkey").parquet(path)
+    assert any("%" in n for n in os.listdir(path))  # the dir name is URL-escaped
+    footer, scan = _footer_listing(spark, path, "pkey")
+    assert footer == scan == ["a b:c/d", "plain"]
+
+
+def test_footer_listing_skips_zero_row_dirs(tmp_path, spark):
+    """A dir whose only file holds 0 rows has no value for the scan to
+    return, so the listing leaves it out too (counts still report it)."""
+    path = str(tmp_path / "empty")
+    _write_part(path, "part_date", "2024-01-01", 3)
+    _write_part(path, "part_date", "2024-01-02", 0)
+    footer, scan = _footer_listing(spark, path, "part_date")
+    assert footer == scan == ["2024-01-01"]
+    assert lio.partition_row_counts(path) == {"2024-01-01": 3, "2024-01-02": 0}
+
+
+def test_footer_listing_falls_back_on_null_partition(tmp_path, spark):
+    """A __HIVE_DEFAULT_PARTITION__ dir holds the NULL partition, which no
+    dir name can key: the catalog serves no listing, and the CLI falls back
+    to the distinct scan."""
+    df = spark.createDataFrame([(None, 1), ("x", 2)], "pkey string, v int")
+    path = str(tmp_path / "withnull")
+    df.write.partitionBy("pkey").parquet(path)
+    footer, scan = _footer_listing(spark, path, "pkey")
+    assert footer is None
+    assert scan == ["None", "x"]
+
+
+def test_footer_listing_falls_back_on_nested_or_foreign_files(tmp_path, spark):
+    """Spark reads rows the footer walk cannot see — a nested partition
+    level, a data file not named .parquet — so the catalog serves neither
+    counts nor a listing for such a layout."""
+    nested = str(tmp_path / "nested")
+    spark.createDataFrame([("a", 1, 5)], "pkey string, sub int, v int").write.partitionBy(
+        "pkey", "sub").parquet(nested)
+    assert lio.ParquetFooterCatalog(spark, nested, "pkey").partitions() is None
+    foreign = str(tmp_path / "foreign")
+    _write_part(foreign, "pkey", "a", 2)
+    os.rename(os.path.join(foreign, "pkey=a", "part-0.parquet"), os.path.join(foreign, "pkey=a", "part-0"))
+    assert lio.partition_row_counts(foreign, "pkey") is None
 
 
 def test_catalog_for_dispatches_on_uri(spark):

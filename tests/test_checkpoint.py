@@ -347,11 +347,11 @@ def test_cli_marginal_jobs_per_partition(tmp_path, spark, fixtures_sf0001):
     one = jobs_for("j1", 1)
     two = jobs_for("j2", 2)
     marginal = two - one
-    # measured 2 on this fixed fixture (deterministic: 15 vs 17 jobs). The
-    # batch's actions are shared; the first partition is clean, so the
-    # 1-partition run rolls verdicts up from an empty in-memory sink frame,
-    # while the 2-partition batch aggregates its written sink files. The
-    # former per-partition loop paid every action again — 10 per partition.
+    # measured 0 on this fixed fixture (deterministic: 15 vs 15 jobs). The
+    # batch's actions are shared, and the sink write observes the verdict
+    # counts, so a clean 1-partition batch and a 2-partition batch with a
+    # written sink run the same jobs. The former per-partition loop paid
+    # every action again — 10 per partition.
     assert marginal <= 2, f"marginal jobs per partition = {marginal}"
 
 

@@ -12,7 +12,15 @@ suite pass, each conversation checked within its own partition → the batch's
 partition dirs of every output replaced → one manifest save, recording each
 partition with lineage and the batch wall split evenly. Resume: re-run with
 the same --run-id skips completed partitions whose rule fingerprint matches.
-A final drift pass merges per-partition KLL sketches tree-wise.
+A whole-table drift pass merges per-partition KLL sketches tree-wise.
+
+Two pieces read nothing the batch loop computes, so they run beside it on
+two side threads, in the run's job group: the tools-dim load (read, and
+the referential rule compiled from it) from the moment the ruleset is
+known, and the drift pass from the moment the table read and the pending
+list are final. Their jobs run while the driver plans the batches; their
+results are taken where the loop needs the dim and where the drift tail
+reports, so the output and its order are the same as a sequential run's.
 """
 
 from __future__ import annotations
@@ -21,13 +29,15 @@ import argparse
 import sys
 import time
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lyra_spark import checkpoint as ckpt
 from lyra_spark import io as lio
 from lyra_spark import presets
-from lyra_spark.session import codegen_compiles, get_spark, group_jobs
+from lyra_spark.session import GroupJobs, codegen_compiles, get_spark, group_job_ids
+from pyspark.util import inheritable_thread_target
 
 
 # The transcript role grammar: every (prev → cur) pair a well-formed
@@ -158,18 +168,52 @@ def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = Non
     # the run), else the run's own, cleared on return.
     sc = spark.sparkContext
     group = sc.getLocalProperty("spark.jobGroup.id")
-    if group:
-        return _validate(spark, args, catalog, group)
-    group = f"lyra_validate_{args.run_id}"
-    sc.setJobGroup(group, f"lyra validate {args.run_id}")
+    own = not group
+    if own:
+        group = f"lyra_validate_{args.run_id}"
+        sc.setJobGroup(group, f"lyra validate {args.run_id}")
     try:
-        return _validate(spark, args, catalog, group)
+        # the side threads of the dim load and the drift pass (module
+        # docstring): leaving the with block waits for both, on a raise
+        # too, so no side thread outlives the run
+        with ThreadPoolExecutor(max_workers=2) as side:
+            return _validate(spark, args, catalog, group, side)
     finally:
-        sc._jsc.clearJobGroup()
+        if own:
+            sc._jsc.clearJobGroup()
 
 
-def _validate(spark, args: argparse.Namespace, catalog: "lio.TableCatalog | None", group: str) -> int:
-    jobs0 = group_jobs(spark, group)
+def _load_dim(spark, tools_dim: str, ruleset):
+    """The tools dim and the suite's ruleset: the config ruleset plus the
+    referential rule compiled once from the collected dim, unless the
+    ruleset carries its own (then the dim is only read)."""
+    from lyra_spark.fused import REF_RULE, inline_referential_rule
+    from lyra_spark.rules import RuleSet
+
+    dim = spark.read.parquet(tools_dim)
+    if any(r.rule_id == REF_RULE for r in ruleset.rules):
+        return dim, ruleset
+    return dim, RuleSet(ruleset.rules + [inline_referential_rule(dim)])
+
+
+def _drift_pass(df, drift_col: str, reference: str | None, keep: bool):
+    """The whole-table drift pass: per-partition KLL sketches merged
+    tree-wise against the saved reference, or against this run's global
+    sketch when there is none. Returns (sketches, verdict frame); ``keep``
+    persists the sketches (one row per partition) for a later
+    save_reference."""
+    from lyra_spark.drift import drift_verdicts, load_reference, sketch_by_partition
+
+    sk = sketch_by_partition(df, drift_col, "part_date")
+    if keep:
+        sk = sk.persist()
+    ref = load_reference(reference) if reference else None
+    return sk, drift_verdicts(sk, reference=ref)
+
+
+def _validate(spark, args: argparse.Namespace, catalog: "lio.TableCatalog | None", group: str,
+              side: ThreadPoolExecutor) -> int:
+    jobs = GroupJobs(lambda: group_job_ids(spark, group))
     compiles0 = codegen_compiles(spark)
     batch_size = spark.sparkContext.defaultParallelism
     # Shuffle partitions sized by DATA, not core count: each batch shuffles
@@ -187,15 +231,6 @@ def _validate(spark, args: argparse.Namespace, catalog: "lio.TableCatalog | None
             per_date = sum(os.path.getsize(f) for f in files) // len({os.path.dirname(f) for f in files})
             shuf = max(os.cpu_count() or 8, per_date * batch_size // (100 << 20) + 1)
             spark.conf.set("spark.sql.shuffle.partitions", str(shuf))
-    df = lio.read_transcripts(spark, args.table)
-    if args.check_schema:
-        from lyra_spark.schema import TRANSCRIPTS_SCHEMA, assert_schema, schema_diff
-
-        for d in schema_diff(df.schema, TRANSCRIPTS_SCHEMA):
-            print(f"[lyra] schema: {d['column']} {d['status']} "
-                  f"(expected {d['expected_type']}, got {d['actual_type']})")
-        assert_schema(df.schema, TRANSCRIPTS_SCHEMA)
-    dim = spark.read.parquet(args.tools_dim)
     cfg_checks: list = []
     if args.rules:
         from lyra_spark.rules import suite_config_from_json
@@ -206,6 +241,20 @@ def _validate(spark, args: argparse.Namespace, catalog: "lio.TableCatalog | None
               f"{len(cfg_checks)} declared dataset check(s))")
     else:
         ruleset = presets.transcript_ruleset()
+    # Each side task is wrapped after the job group is set, in its own
+    # wrapper: its thread takes a copy of this thread's local properties, so
+    # its jobs land in the run's group (--report counts them). The dim load
+    # starts after the shuffle sizing above (its distinct collect shuffles)
+    # and overlaps the table read, the footer walk and the manifest load.
+    dim_task = side.submit(inheritable_thread_target(spark)(_load_dim), spark, args.tools_dim, ruleset)
+    df = lio.read_transcripts(spark, args.table)
+    if args.check_schema:
+        from lyra_spark.schema import TRANSCRIPTS_SCHEMA, assert_schema, schema_diff
+
+        for d in schema_diff(df.schema, TRANSCRIPTS_SCHEMA):
+            print(f"[lyra] schema: {d['column']} {d['status']} "
+                  f"(expected {d['expected_type']}, got {d['actual_type']})")
+        assert_schema(df.schema, TRANSCRIPTS_SCHEMA)
     hll_cols = [c.strip() for c in args.hll_cols.split(",") if c.strip()] if args.hll_cols else []
     # Per-partition row counts from table metadata (parquet footers locally,
     # Iceberg manifests in prod — one TableCatalog interface either way):
@@ -301,9 +350,10 @@ def _validate(spark, args: argparse.Namespace, catalog: "lio.TableCatalog | None
             args.check_placement = True
             placement_ts = chk["ts_col"]
 
-    # Referential rule compiled ONCE per run: inline_referential_rule collects
-    # the (tiny) dim, and the suite then reuses the compiled rule instead of
-    # re-collecting per batch. Manifest fingerprints stay the config ruleset's.
+    # df and pending are final: the drift pass runs beside the batch loop
+    drift_task = side.submit(inheritable_thread_target(spark)(_drift_pass), df, args.drift_col,
+                             args.reference, bool(args.save_reference))
+
     from lyra_spark.engine import (
         clean_rows,
         compute_verdicts,
@@ -312,13 +362,12 @@ def _validate(spark, args: argparse.Namespace, catalog: "lio.TableCatalog | None
         ruleset_tolerances,
         verdict_gate,
     )
-    from lyra_spark.fused import REF_RULE, inline_referential_rule, suite_rule_ids
-    from lyra_spark.rules import RuleSet
+    from lyra_spark.fused import suite_rule_ids
 
-    suite_rules = (
-        ruleset if any(r.rule_id == REF_RULE for r in ruleset.rules)
-        else RuleSet(ruleset.rules + [inline_referential_rule(dim)])
-    )
+    # Referential rule compiled ONCE per run (the dim task collects the tiny
+    # dim): the suite reuses it instead of re-collecting per batch. Manifest
+    # fingerprints stay the config ruleset's.
+    dim, suite_rules = dim_task.result()
     rule_ids = suite_rule_ids(suite_rules, args.check_transitions, args.check_placement)
     row_rule_ids = {r.rule_id for r in suite_rules.checks}
     ds_rule_ids = [rid for rid in rule_ids if rid not in row_rule_ids]
@@ -352,7 +401,8 @@ def _validate(spark, args: argparse.Namespace, catalog: "lio.TableCatalog | None
     # violation counts; the verdict grid's collect (row and violation counts
     # come from the collected grid, never from a rescan or a sink re-read);
     # the no-scan verdict write from those local rows; and the optional
-    # clean/quarantine/HLL writes.
+    # clean/quarantine/HLL writes. The drift pass's jobs (and, early on, the
+    # dim load's) run beside the loop on the side threads, not in it.
     for start in range(0, len(pending), batch_size):
         batch = pending[start : start + batch_size]
         t0 = time.perf_counter()
@@ -458,6 +508,7 @@ def _validate(spark, args: argparse.Namespace, catalog: "lio.TableCatalog | None
             print(f"[lyra] partition={pk} rows={n_rows} violations={n_viol} wall_ms={wall_ms:.0f}")
         # recorded only after every output of the batch is written
         ckpt.save_manifest(args.checkpoint, manifest)
+        jobs.poll()
 
     if hll_cols:
         # Global distinct estimates from the STORED blobs — covers completed
@@ -564,14 +615,10 @@ def _validate(spark, args: argparse.Namespace, catalog: "lio.TableCatalog | None
             print(f"[lyra] metric run-anomalies (vs {runs - 1} previous run(s)): "
                   f"{rflag[:10]}{'...' if len(rflag) > 10 else ''}")
 
-    # final drift pass over ALL partitions (cheap: sketches only)
-    from lyra_spark.drift import drift_verdicts, load_reference, save_reference, sketch_by_partition
+    # the drift pass over ALL partitions (cheap: sketches only)
+    from lyra_spark.drift import save_reference
 
-    sk = sketch_by_partition(df, args.drift_col, "part_date")
-    if args.save_reference:
-        sk = sk.persist()  # tiny (one row per partition); reused by verdicts below
-    ref = load_reference(args.reference) if args.reference else None
-    dv = drift_verdicts(sk, reference=ref)
+    sk, dv = drift_task.result()
     if dv.empty:
         # empty table or all-NULL drift column: zero sketches is a
         # reportable state, not a KeyError crash (and nothing to save)
@@ -592,7 +639,7 @@ def _validate(spark, args: argparse.Namespace, catalog: "lio.TableCatalog | None
     # is evicting the run's working set
     report["codegen_compiles"] = codegen_compiles(spark) - compiles0
     print(f"[lyra] codegen: {report['codegen_compiles']} classes compiled")
-    report["spark_jobs"] = group_jobs(spark, group) - jobs0
+    report["spark_jobs"] = jobs.poll()
     print(f"[lyra] spark jobs: {report['spark_jobs']}")
 
     if args.report:

@@ -293,7 +293,14 @@ def write_violations(
     decisions derive from map-output statistics, which are reproducible),
     and each file's row set is a deterministic slice of one date group — so
     every file's CONTENT is byte-stable across runs (pinned by the
-    determinism test)."""
+    determinism test).
+
+    The scoped AQE floor (below) is a session-global conf. A query that
+    another thread runs on the same session meanwhile, such as the validate
+    CLI's drift pass beside its batch loop, may read it. That is harmless:
+    the floor changes only how AQE coalesces shuffle partitions, never what
+    a query returns, and the drift pass's KLL merges are randomized anyway,
+    so no byte-level stability of theirs depends on the partitioning."""
     cols = [partition_col] if isinstance(partition_col, str) else list(partition_col)
     # Parallelism floor for the write stage: AQE's coalescing normally stops
     # at minPartitionSize (1 MB), which at small violation volumes collapses
@@ -304,7 +311,7 @@ def write_violations(
     # real scale partitions are ≫ 1 MB and this is a no-op. Scoped to this
     # write: AQE reads the conf at execution time, and .parquet() below is
     # eager. The conf is SESSION-GLOBAL: a concurrent writer on the same
-    # session could restore it under this write.
+    # session could restore it under this write (see the docstring).
     conf = violations.sparkSession.conf
     prev = conf.get(_AQE_FLOOR_KEY, None)
     conf.set(_AQE_FLOOR_KEY, _AQE_FLOOR_VALUE)

@@ -11,9 +11,11 @@ in local mode, table listing on the driver.
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import tempfile
 import zipfile
+from typing import Callable
 
 from pyspark.sql import SparkSession
 
@@ -78,13 +80,35 @@ def codegen_compiles(spark: SparkSession) -> int:
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
-def group_jobs(spark: SparkSession, group: str) -> int:
-    """How many jobs of job group ``group`` Spark's status tracker holds: a
-    py4j read on the driver, never a Spark job. The tracker keeps the last
-    ``spark.ui.retainedJobs`` (1000 by default) jobs. One call: PySpark's
-    ``StatusTracker.getJobIdsForGroup`` copies the id array element by
-    element, one py4j round trip each."""
-    return len(spark.sparkContext._jsc.statusTracker().getJobIdsForGroup(group))
+def group_job_ids(spark: SparkSession, group: str) -> set[int]:
+    """The ids of the jobs of job group ``group`` that Spark's status tracker
+    holds: a py4j read on the driver, never a Spark job. The tracker keeps
+    the last ``spark.ui.retainedJobs`` (1000 by default) jobs. The id array
+    crosses as one string: PySpark's ``StatusTracker.getJobIdsForGroup``
+    copies it element by element, one py4j round trip each."""
+    ids = spark.sparkContext._jsc.statusTracker().getJobIdsForGroup(group)
+    return set(json.loads(spark.sparkContext._jvm.java.util.Arrays.toString(ids)))
+
+
+class GroupJobs:
+    """Counts the jobs a job group starts from construction on.
+
+    ``job_ids`` returns the group's job ids the status tracker holds now
+    (:func:`group_job_ids`). The tracker forgets all but the last 1,000
+    jobs, so a difference of two counts undercounts once old jobs age out.
+    This keeps the ids seen at the start and adds every unseen id each
+    ``poll`` returns: the count is exact while fewer jobs than the tracker
+    retains start between two polls."""
+
+    def __init__(self, job_ids: Callable[[], set[int]]):
+        self._job_ids = job_ids
+        self._before = job_ids()
+        self._new: set[int] = set()
+
+    def poll(self) -> int:
+        """The jobs started since construction, counted so far."""
+        self._new |= self._job_ids() - self._before
+        return len(self._new)
 
 
 def get_spark(

@@ -867,6 +867,66 @@ def test_cli_revalidate_changed(tmp_path, spark, fixtures_sf0001, capsys):
             assert mf3.records[k].completed_at == mf2.records[k].completed_at
 
 
+def test_cli_drift_pass_reads_the_refreshed_table(tmp_path, spark, fixtures_sf0001, monkeypatch):
+    """Late rows land in a completed partition after the run has read the
+    table but before its metadata walk: --revalidate-changed re-reads the
+    table, and the drift pass judges that re-read table. Its verdicts count
+    every non-NULL text, the late rows included; so does the reference a
+    --save-reference run saves."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from jobs.validate import main
+    from lyra_spark import drift
+
+    table = str(tmp_path / "transcripts")
+    shutil.copytree(os.path.join(fixtures_sf0001, "transcripts"), table)
+    args = [
+        "--table", table,
+        "--tools-dim", os.path.join(fixtures_sf0001, "tools_dim.parquet"),
+        "--checkpoint", str(tmp_path / "ck"),
+        "--run-id", "r1",
+        "--limit-partitions", "2",
+    ]
+    assert main(args) == 0
+    pk = sorted(ckpt.load_manifest(str(tmp_path / "ck"), "r1").records)[0]
+    late = str(tmp_path / "late")
+    spark.read.parquet(table).filter(f"part_date = '{pk}' and text is not null").drop(
+        "part_date").limit(5).coalesce(1).write.parquet(late)
+    (late_file,) = [f for f in os.listdir(late) if f.endswith(".parquet")]
+    catalog_for, drift_verdicts = lio.catalog_for, drift.drift_verdicts
+    verdicts = []
+
+    def late_arrival(*a, **k):
+        # the table DataFrame is built; a late file lands from outside
+        name = f"late{len(verdicts)}.parquet"
+        shutil.copy(os.path.join(late, late_file), os.path.join(table, f"part_date={pk}", name))
+        return catalog_for(*a, **k)
+
+    def kept_verdicts(*a, **k):
+        verdicts.append(drift_verdicts(*a, **k))
+        return verdicts[-1]
+
+    def revalidate(*extra):
+        monkeypatch.setattr(lio, "catalog_for", late_arrival)
+        monkeypatch.setattr(drift, "drift_verdicts", kept_verdicts)
+        assert main(args + ["--revalidate-changed", *extra]) == 0
+        monkeypatch.undo()
+        assert ckpt.load_manifest(str(tmp_path / "ck"), "r1").records[pk].rows == lio.partition_row_counts(table)[pk]
+        return spark.read.parquet(table).filter("text is not null").count()
+
+    texts = revalidate()
+    assert verdicts[-1]["n"].sum() == texts
+    # The persisted sketches of a --save-reference run are refreshed with
+    # the path, so there the verdicts alone would not show a stale read.
+    ref = str(tmp_path / "ref.kll")
+    texts = revalidate("--save-reference", ref)
+    assert verdicts[-1]["n"].sum() == texts
+    blob = drift.load_reference(ref)
+    assert spark.range(1).select(F.kll_sketch_get_n_double(F.lit(blob))).collect()[0][0] == texts
+
+
 def test_cli_check_placement(tmp_path, spark, fixtures_sf0001):
     """--check-placement: rows stored under the wrong part_date dir are
     reported as partition_placement violations in the sink and fail the

@@ -31,11 +31,14 @@ def _cli_args(fx, tmp_path, run_id, *extra):
 
 
 def test_cli_job_budget(tmp_path, spark, fixtures_sf0001, monkeypatch):
-    """A 2-partition --out run: at most 15 jobs (18 when the partitions were
-    listed by a distinct scan and the verdict roll-up re-read the sink).
-    The listing comes from the footer walk and runs no job: the scan
-    fallback must not be reached. --report's spark_jobs is the caller's
-    group count when the caller set a group."""
+    """A 2-partition --out run: exactly 15 jobs, all in the caller's group
+    (18 when the partitions were listed by a distinct scan and the verdict
+    roll-up re-read the sink). The drift pass and the dim load run on side
+    threads, which must inherit the group: a job of theirs outside it would
+    start with no group at all, so the run may start none. The listing
+    comes from the footer walk and runs no job: the scan fallback must not
+    be reached. --report's spark_jobs is the caller's group count when the
+    caller set a group."""
     from jobs.validate import main
 
     def no_scan(*_a, **_k):
@@ -43,13 +46,15 @@ def test_cli_job_budget(tmp_path, spark, fixtures_sf0001, monkeypatch):
 
     monkeypatch.setattr(lio, "list_partitions", no_scan)
     sc = spark.sparkContext
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
     sc.setJobGroup("cli_budget", "count jobs")
     try:
         assert main(_cli_args(fixtures_sf0001, tmp_path, "jb", "--limit-partitions", "2")) == 0
     finally:
         sc.setJobGroup("", "")
     jobs = len(sc.statusTracker().getJobIdsForGroup("cli_budget"))
-    assert jobs <= 15, jobs
+    assert jobs == 15, jobs
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) <= ungrouped
     rep = json.loads((tmp_path / "jb.json").read_text())
     assert rep["spark_jobs"] == jobs
     assert len(rep["partitions"]) == 2
@@ -186,3 +191,67 @@ def test_violation_count_cells_keep_the_null_partition_apart(spark, null_key):
     got = {(r["p"], r["violation_count"]) for r in compute_verdicts(data, counted, ["r1"], "p").collect()}
     want = {(r["p"], r["violation_count"]) for r in compute_verdicts(data, viol, ["r1"], "p").collect()}
     assert got == want == {("None", 2), ("x", 1), (None, 1 if null_key else 0)}
+
+
+def test_batch_failure_waits_for_the_side_tasks(tmp_path, spark, fixtures_sf0001, monkeypatch):
+    """A failing sink write propagates from main only after the side tasks
+    end: no thread outlives the run and no job of its group starts later.
+    The drift pass is held back 1 s so that it is still running when the
+    batch fails."""
+    import threading
+    import time
+
+    from jobs.validate import main
+    from lyra_spark import drift
+    from lyra_spark.session import group_job_ids
+
+    def boom(*_a, **_k):
+        raise RuntimeError("sink write failed")
+
+    sketch = drift.sketch_by_partition
+
+    def slow_sketch(*a, **k):
+        time.sleep(1.0)
+        return sketch(*a, **k)
+
+    monkeypatch.setattr(lio, "write_violations", boom)
+    monkeypatch.setattr(drift, "sketch_by_partition", slow_sketch)
+    threads = threading.active_count()
+    with pytest.raises(RuntimeError, match="sink write failed"):
+        main(_cli_args(fixtures_sf0001, tmp_path, "boom", "--limit-partitions", "2"))
+    assert threading.active_count() == threads
+    ids = group_job_ids(spark, "lyra_validate_boom")
+    assert ids  # the dim load and the drift pass ran
+    time.sleep(1.0)
+    assert group_job_ids(spark, "lyra_validate_boom") == ids
+
+
+def test_bad_drift_column_raises_after_the_batch_is_saved(tmp_path, spark, fixtures_sf0001):
+    """The drift pass fails on a missing column; the error reaches the
+    caller where the drift tail runs, after the batch's manifest save."""
+    from pyspark.errors import AnalysisException
+
+    from jobs.validate import main
+    from lyra_spark import checkpoint as ckpt
+
+    with pytest.raises(AnalysisException):
+        main(_cli_args(fixtures_sf0001, tmp_path, "bad_drift", "--limit-partitions", "2",
+                       "--drift-col", "no_such_column"))
+    assert len(ckpt.load_manifest(str(tmp_path / "ck"), "bad_drift").records) == 2
+
+
+def test_missing_tools_dim_raises_before_any_output(tmp_path, spark, fixtures_sf0001):
+    """A --tools-dim that does not exist fails the run before any output
+    dir is made."""
+    from pyspark.errors import AnalysisException
+
+    from jobs.validate import main
+
+    args = _cli_args(fixtures_sf0001, tmp_path, "no_dim", "--limit-partitions", "2",
+                     "--clean-out", str(tmp_path / "clean"))
+    args[args.index("--tools-dim") + 1] = str(tmp_path / "no_such_dim.parquet")
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        main(args)
+    assert not (tmp_path / "viol").exists()
+    assert not (tmp_path / "clean").exists()
+    assert not (tmp_path / "ck" / "no_dim" / "verdicts").exists()

@@ -17,10 +17,16 @@ A whole-table drift pass merges per-partition KLL sketches tree-wise.
 Two pieces read nothing the batch loop computes, so they run beside it on
 two side threads, in the run's job group: the tools-dim load (read, and
 the referential rule compiled from it) from the moment the ruleset is
-known, and the drift pass from the moment the table read and the pending
-list are final. Their jobs run while the driver plans the batches; their
-results are taken where the loop needs the dim and where the drift tail
-reports, so the output and its order are the same as a sequential run's.
+known, and the drift pass's jobs from the moment the table read and the
+pending list are final. Their jobs run while the driver plans the batches;
+their results are taken where the loop needs the dim and where the drift
+tail reports, so the output and its order are the same as a sequential
+run's. Every lyra_spark entry point the run calls (the drift pass's
+sketch_by_partition and drift_verdicts included) runs on the calling
+thread; the side threads run only Spark actions and file reads. The side
+jobs go to their own fair-scheduler pool, so a long drift scan shares the
+executors with the batches instead of holding them, and a failed run
+cancels them instead of waiting for them.
 """
 
 from __future__ import annotations
@@ -29,7 +35,8 @@ import argparse
 import sys
 import time
 import os
-from concurrent.futures import ThreadPoolExecutor
+import uuid
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -37,8 +44,13 @@ from lyra_spark import checkpoint as ckpt
 from lyra_spark import io as lio
 from lyra_spark import presets
 from lyra_spark.session import GroupJobs, codegen_compiles, get_spark, group_job_ids
+from pyspark.errors import AnalysisException
 from pyspark.util import inheritable_thread_target
 
+
+# The fair-scheduler pool of the side tasks' jobs (fair scheduling is on in
+# get_spark's sessions; under FIFO the pool is ignored).
+SIDE_POOL = "lyra_side"
 
 # The transcript role grammar: every (prev → cur) pair a well-formed
 # conversation can contain (system opens; user/assistant alternate; tool
@@ -172,12 +184,42 @@ def main(argv: list[str] | None = None, catalog: "lio.TableCatalog | None" = Non
     if own:
         group = f"lyra_validate_{args.run_id}"
         sc.setJobGroup(group, f"lyra validate {args.run_id}")
+    # The side tasks (module docstring) run on a pool opened as a with
+    # block: leaving it waits for them, on a raise too, so no side thread
+    # outlives the run. A raise first cancels their jobs, by a tag of the
+    # run's own (the group may be the caller's), rather than waiting out a
+    # whole-table scan.
+    tag = f"lyra_side_{uuid.uuid4().hex}"
+    tasks: list[Future] = []
     try:
-        # the side threads of the dim load and the drift pass (module
-        # docstring): leaving the with block waits for both, on a raise
-        # too, so no side thread outlives the run
-        with ThreadPoolExecutor(max_workers=2) as side:
-            return _validate(spark, args, catalog, group, side)
+        with ThreadPoolExecutor(max_workers=2) as pool:
+
+            def side(label: str, fn, *fn_args) -> Future:
+                def task():
+                    # this thread's jobs only: the run's tag, the side pool
+                    # (under fair scheduling the batch jobs do not queue
+                    # behind a side scan) and a label for the UI and event
+                    # log (PySpark names each action's call site after the
+                    # first frame outside pyspark: here the pool's worker)
+                    sc.addJobTag(tag)
+                    sc.setLocalProperty("spark.scheduler.pool", SIDE_POOL)
+                    sc.setJobDescription(f"lyra validate {args.run_id}: {label}")
+                    return fn(*fn_args)
+
+                # wrapped here, after the job group is set: the thread starts
+                # from a copy of this thread's local properties, so its jobs
+                # land in the run's group (--report counts them)
+                tasks.append(pool.submit(inheritable_thread_target(spark)(task)))
+                return tasks[-1]
+
+            try:
+                return _validate(spark, args, catalog, group, side)
+            except BaseException:
+                # cancel until done: a side job may start after a cancel
+                while not all(t.done() for t in tasks):
+                    sc.cancelJobsWithTag(tag)
+                    wait(tasks, timeout=0.1)
+                raise
     finally:
         if own:
             sc._jsc.clearJobGroup()
@@ -196,23 +238,17 @@ def _load_dim(spark, tools_dim: str, ruleset):
     return dim, RuleSet(ruleset.rules + [inline_referential_rule(dim)])
 
 
-def _drift_pass(df, drift_col: str, reference: str | None, keep: bool):
-    """The whole-table drift pass: per-partition KLL sketches merged
-    tree-wise against the saved reference, or against this run's global
-    sketch when there is none. Returns (sketches, verdict frame); ``keep``
-    persists the sketches (one row per partition) for a later
-    save_reference."""
-    from lyra_spark.drift import drift_verdicts, load_reference, sketch_by_partition
+def _drift_quantiles(sk, reference: str | None):
+    """The jobs of the drift pass: the saved reference (None when there is
+    none) and the drift_quantiles of the sketches against it."""
+    from lyra_spark.drift import drift_quantiles, load_reference
 
-    sk = sketch_by_partition(df, drift_col, "part_date")
-    if keep:
-        sk = sk.persist()
     ref = load_reference(reference) if reference else None
-    return sk, drift_verdicts(sk, reference=ref)
+    return ref, drift_quantiles(sk, ref)
 
 
 def _validate(spark, args: argparse.Namespace, catalog: "lio.TableCatalog | None", group: str,
-              side: ThreadPoolExecutor) -> int:
+              side) -> int:
     jobs = GroupJobs(lambda: group_job_ids(spark, group))
     compiles0 = codegen_compiles(spark)
     batch_size = spark.sparkContext.defaultParallelism
@@ -241,12 +277,10 @@ def _validate(spark, args: argparse.Namespace, catalog: "lio.TableCatalog | None
               f"{len(cfg_checks)} declared dataset check(s))")
     else:
         ruleset = presets.transcript_ruleset()
-    # Each side task is wrapped after the job group is set, in its own
-    # wrapper: its thread takes a copy of this thread's local properties, so
-    # its jobs land in the run's group (--report counts them). The dim load
-    # starts after the shuffle sizing above (its distinct collect shuffles)
-    # and overlaps the table read, the footer walk and the manifest load.
-    dim_task = side.submit(inheritable_thread_target(spark)(_load_dim), spark, args.tools_dim, ruleset)
+    # The dim load starts after the shuffle sizing above (its distinct
+    # collect shuffles) and overlaps the table read, the footer walk and the
+    # manifest load.
+    dim_task = side("tools-dim load", _load_dim, spark, args.tools_dim, ruleset)
     df = lio.read_transcripts(spark, args.table)
     if args.check_schema:
         from lyra_spark.schema import TRANSCRIPTS_SCHEMA, assert_schema, schema_diff
@@ -350,10 +384,7 @@ def _validate(spark, args: argparse.Namespace, catalog: "lio.TableCatalog | None
             args.check_placement = True
             placement_ts = chk["ts_col"]
 
-    # df and pending are final: the drift pass runs beside the batch loop
-    drift_task = side.submit(inheritable_thread_target(spark)(_drift_pass), df, args.drift_col,
-                             args.reference, bool(args.save_reference))
-
+    from lyra_spark.drift import drift_verdicts, save_reference, sketch_by_partition
     from lyra_spark.engine import (
         clean_rows,
         compute_verdicts,
@@ -366,12 +397,30 @@ def _validate(spark, args: argparse.Namespace, catalog: "lio.TableCatalog | None
 
     # Referential rule compiled ONCE per run (the dim task collects the tiny
     # dim): the suite reuses it instead of re-collecting per batch. Manifest
-    # fingerprints stay the config ruleset's.
+    # fingerprints stay the config ruleset's. Taken before the drift pass is
+    # submitted, so a bad --tools-dim fails before any scan of the table.
     dim, suite_rules = dim_task.result()
     rule_ids = suite_rule_ids(suite_rules, args.check_transitions, args.check_placement)
     row_rule_ids = {r.rule_id for r in suite_rules.checks}
     ds_rule_ids = [rid for rid in rule_ids if rid not in row_rule_ids]
     severities, tolerances = ruleset_severities(suite_rules), ruleset_tolerances(suite_rules)
+
+    # df and pending are final: the whole-table drift pass (per-partition
+    # KLL sketches merged tree-wise against the saved reference, or against
+    # this run's global sketch when there is none) is planned here, on this
+    # thread like every other lyra entry point, and its jobs run beside the
+    # batch loop. A plan error (a bad --drift-col) is raised where the drift
+    # tail reports, after the batches are saved, as in a sequential run.
+    try:
+        drift_sk = sketch_by_partition(df, args.drift_col, "part_date")
+    except AnalysisException as e:
+        drift_task = Future()
+        drift_task.set_exception(e)
+    else:
+        if args.save_reference:
+            # one row per partition, kept for save_reference
+            drift_sk = drift_sk.persist()
+        drift_task = side("drift pass", _drift_quantiles, drift_sk, args.reference)
 
     # Every output keeps one dir per partition, <dir>/part=<pk>/. A batch
     # first deletes its own keys' dirs in every output, then appends its rows
@@ -616,9 +665,8 @@ def _validate(spark, args: argparse.Namespace, catalog: "lio.TableCatalog | None
                   f"{rflag[:10]}{'...' if len(rflag) > 10 else ''}")
 
     # the drift pass over ALL partitions (cheap: sketches only)
-    from lyra_spark.drift import save_reference
-
-    sk, dv = drift_task.result()
+    ref, quantiles = drift_task.result()
+    dv = drift_verdicts(drift_sk, reference=ref, quantiles=quantiles)
     if dv.empty:
         # empty table or all-NULL drift column: zero sketches is a
         # reportable state, not a KeyError crash (and nothing to save)
@@ -631,7 +679,7 @@ def _validate(spark, args: argparse.Namespace, catalog: "lio.TableCatalog | None
         report["drift_partitions"] = len(dv)
         print(f"[lyra] drift: {len(dv)} partitions, failing={failing}")
         if args.save_reference:
-            save_reference(sk, args.save_reference)
+            save_reference(drift_sk, args.save_reference)
             print(f"[lyra] drift reference saved to {args.save_reference}")
 
     # generated classes compiled during this run (a py4j counter read, no

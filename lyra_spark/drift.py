@@ -490,6 +490,27 @@ def numeric_drift_trailing(
     return pd.DataFrame(out)
 
 
+def drift_quantiles(
+    sketches: DataFrame, reference: bytes | None = None, loo_max_partitions: int = 10
+) -> tuple[dict[str, Quantiles], Quantiles | None, dict[str, Quantiles] | None]:
+    """The Spark half of :func:`drift_verdicts`, every job it runs: the
+    per-partition quantiles and the reference (:func:`collect_quantiles`),
+    plus the leave-one-out references when there is no stored reference and
+    2 ≤ P < ``loo_max_partitions``, else None."""
+    parts, ref = collect_quantiles(sketches, reference=reference)
+    keys = sorted(parts)
+    loo = None
+    if reference is None and 1 < len(keys) < loo_max_partitions:
+        # cold-start reference: leave-one-out below loo_max_partitions
+        # (dilution would be material), the single self-inclusive global
+        # merge above it. Each sketch row is copied to every OTHER key, so
+        # grouping by key merges the rest — P·(P−1) sketch rows, only ever
+        # for small P
+        others = F.array_remove(F.array(*[F.lit(k) for k in keys]), F.col("part_key"))
+        loo, _ = collect_quantiles(sketches.select(F.explode(others).alias("part_key"), "sketch", "n"))
+    return parts, ref, loo
+
+
 def drift_verdicts(
     sketches: DataFrame,
     reference: bytes | None = None,
@@ -499,6 +520,7 @@ def drift_verdicts(
     ks_alpha_c: float = 1.95,
     rule_id: str = "text_len_drift",
     loo_max_partitions: int = 10,
+    quantiles: tuple | None = None,
 ) -> pd.DataFrame:
     """Per-partition KS/PSI vs a reference sketch → pass/fail frame.
 
@@ -521,8 +543,12 @@ def drift_verdicts(
     at α≈0.001 for c=1.95. PSI only gates partitions with ≥ psi_min_n rows
     (binned PSI on tiny samples is dominated by empty-bin noise); it is always
     reported.
+
+    ``quantiles``: the :func:`drift_quantiles` result for the same sketches,
+    reference and ``loo_max_partitions``, when it was collected ahead (say on
+    another thread); the sketches are then not read again.
     """
-    parts, ref = collect_quantiles(sketches, reference=reference)
+    parts, ref, loo = quantiles or drift_quantiles(sketches, reference, loo_max_partitions)
     keys = sorted(parts)
     if reference is not None and ref.n == 0:
         raise ValueError("drift_verdicts: empty reference sketch — every KS/PSI "
@@ -545,14 +571,6 @@ def drift_verdicts(
              "ks": float("nan"), "ks_crit": float("nan"), "psi": float("nan"),
              "pass": True}
         ])
-    # cold-start reference: leave-one-out below loo_max_partitions (dilution
-    # would be material), the single self-inclusive global merge above it.
-    # Each sketch row is copied to every OTHER key, so grouping by key merges
-    # the rest — P·(P−1) sketch rows, only ever for small P
-    loo = None
-    if reference is None and len(keys) < loo_max_partitions:
-        others = F.array_remove(F.array(*[F.lit(k) for k in keys]), F.col("part_key"))
-        loo, _ = collect_quantiles(sketches.select(F.explode(others).alias("part_key"), "sketch", "n"))
     rows = []
     for k in keys:
         cur = parts[k]

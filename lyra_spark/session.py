@@ -4,8 +4,8 @@ AQE (incl. skew-join), Arrow transport for pandas UDFs, UTC session timezone for
 deterministic timestamp semantics (BASELINE.json:6 byte-match requirement),
 shuffle partitions sized to the local core count instead of the 200 default,
 a generated-code cache sized to hold a validate run's whole working set, no
-Python call-site capture on Column calls (each costs py4j round trips), and,
-in local mode, table listing on the driver.
+Python call-site capture on Column calls (each costs py4j round trips), fair
+scheduling across job pools, and, in local mode, table listing on the driver.
 """
 
 from __future__ import annotations
@@ -187,6 +187,14 @@ def get_spark(
         # context. PySpark reads the conf once per process, on the first
         # wrapped call made under an active session.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Jobs share the executors across fair-scheduler pools. Jobs that
+        # name no pool all go to the default pool, which runs them in FIFO
+        # order as before; the validate CLI puts its side-thread jobs (the
+        # whole-table drift pass) in a pool of their own, so its batch jobs
+        # share the task slots evenly with a full-table scan instead of
+        # queueing behind it. A static conf, read once when the context
+        # starts.
+        .config("spark.scheduler.mode", "FAIR")
     )
     if master == "local" or master.startswith("local["):
         # one JVM hosts the executors too, so a distributed listing job (one

@@ -920,8 +920,10 @@ def test_cli_drift_pass_reads_the_refreshed_table(tmp_path, spark, fixtures_sf00
     assert verdicts[-1]["n"].sum() == texts
     # The persisted sketches of a --save-reference run are refreshed with
     # the path, so there the verdicts alone would not show a stale read.
+    # --hll-cols adds the batches' HLL sketches, which must not stand in for
+    # the drift sketches.
     ref = str(tmp_path / "ref.kll")
-    texts = revalidate("--save-reference", ref)
+    texts = revalidate("--save-reference", ref, "--hll-cols", "conv_id")
     assert verdicts[-1]["n"].sum() == texts
     blob = drift.load_reference(ref)
     assert spark.range(1).select(F.kll_sketch_get_n_double(F.lit(blob))).collect()[0][0] == texts

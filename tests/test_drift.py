@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from lyra_spark.drift import (
     collect_quantiles,
+    drift_quantiles,
     drift_verdicts,
     ks_statistic,
     psi,
@@ -190,6 +191,33 @@ def test_drift_verdicts_leave_one_out_matches_exact(spark):
         pool = np.concatenate([v for j, v in vals.items() if j != k])
         assert abs(got.loc[k, "ks"] - exact_ks(vals[k], pool)) <= 0.01, k
         assert got.loc[k, "n"] == 2000
+
+
+def test_drift_verdicts_from_collected_quantiles_run_no_job(spark):
+    """drift_quantiles runs every Spark job of drift_verdicts: given its
+    result, drift_verdicts starts no job and judges as it does alone. Nine
+    partitions and no reference: the leave-one-out path, with its second
+    collect."""
+    rng = np.random.default_rng(11)
+    vals = {f"p{i}": rng.normal(0, 1, 2000) for i in range(8)}
+    vals["p8"] = rng.normal(1.0, 1, 2000)
+    pdf = pd.concat([pd.DataFrame({"part_date": k, "v": v}) for k, v in vals.items()])
+    sk = sketch_by_partition(spark.createDataFrame(pdf).repartition(4), "v")
+    quantiles = drift_quantiles(sk)
+    assert sorted(quantiles[2]) == sorted(vals)
+    sc = spark.sparkContext
+    group = f"drift_collected_{time.time_ns()}"
+    sc.setJobGroup(group, "no jobs")
+    try:
+        out = drift_verdicts(sk, quantiles=quantiles)
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    got = out.set_index("part_key")
+    assert list(got["pass"]) == [True] * 8 + [False]
+    for k in vals:
+        pool = np.concatenate([v for j, v in vals.items() if j != k])
+        assert abs(got.loc[k, "ks"] - exact_ks(vals[k], pool)) <= 0.01, k
 
 
 def test_categorical_psi_matches_numpy_reference(spark):

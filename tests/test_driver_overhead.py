@@ -193,11 +193,11 @@ def test_violation_count_cells_keep_the_null_partition_apart(spark, null_key):
     assert got == want == {("None", 2), ("x", 1), (None, 1 if null_key else 0)}
 
 
-def test_batch_failure_waits_for_the_side_tasks(tmp_path, spark, fixtures_sf0001, monkeypatch):
-    """A failing sink write propagates from main only after the side tasks
-    end: no thread outlives the run and no job of its group starts later.
-    The drift pass is held back 1 s so that it is still running when the
-    batch fails."""
+def test_batch_failure_cancels_the_drift_pass(tmp_path, spark, fixtures_sf0001, monkeypatch):
+    """A failing sink write propagates from main without waiting out the
+    drift pass: the run cancels its side jobs, no thread outlives the run
+    and no job of its group starts later. The drift pass is a 100 s job
+    (400 tasks of 1 s on 4 slots)."""
     import threading
     import time
 
@@ -208,22 +208,89 @@ def test_batch_failure_waits_for_the_side_tasks(tmp_path, spark, fixtures_sf0001
     def boom(*_a, **_k):
         raise RuntimeError("sink write failed")
 
-    sketch = drift.sketch_by_partition
-
-    def slow_sketch(*a, **k):
-        time.sleep(1.0)
-        return sketch(*a, **k)
+    def slow_quantiles(sk, reference=None, loo_max_partitions=10):
+        sk.sparkSession.range(0, 400, 1, 400).selectExpr(
+            "reflect('java.lang.Thread', 'sleep', cast(1000 as bigint))").collect()
 
     monkeypatch.setattr(lio, "write_violations", boom)
-    monkeypatch.setattr(drift, "sketch_by_partition", slow_sketch)
+    monkeypatch.setattr(drift, "drift_quantiles", slow_quantiles)
     threads = threading.active_count()
+    t0 = time.perf_counter()
     with pytest.raises(RuntimeError, match="sink write failed"):
         main(_cli_args(fixtures_sf0001, tmp_path, "boom", "--limit-partitions", "2"))
+    assert time.perf_counter() - t0 < 30
     assert threading.active_count() == threads
     ids = group_job_ids(spark, "lyra_validate_boom")
-    assert ids  # the dim load and the drift pass ran
+    tracker = spark.sparkContext.statusTracker()
+    assert "FAILED" in {str(tracker.getJobInfo(i).status) for i in ids}  # the cancelled drift job
     time.sleep(1.0)
     assert group_job_ids(spark, "lyra_validate_boom") == ids
+
+
+def test_batch_is_saved_while_a_long_drift_pass_runs(tmp_path, spark, fixtures_sf0001, monkeypatch):
+    """The drift pass's jobs go to the side pool: under fair scheduling the
+    batch's jobs get task slots while a long drift job holds pending tasks,
+    so the batch's manifest save does not wait for the drift pass (under
+    FIFO it would, the drift job being the older). The drift pass is 100
+    tasks of 0.25 s."""
+    import time
+
+    from jobs.validate import main
+    from lyra_spark import checkpoint as ckpt
+    from lyra_spark import drift
+
+    assert spark.conf.get("spark.scheduler.mode") == "FAIR"
+    at = {}
+    save, quantiles = ckpt.save_manifest, drift.drift_quantiles
+
+    def timed_save(*a, **k):
+        save(*a, **k)
+        at.setdefault("saved", time.perf_counter())
+
+    def slow_quantiles(*a, **k):
+        spark.range(0, 100, 1, 100).selectExpr(
+            "reflect('java.lang.Thread', 'sleep', cast(250 as bigint))").collect()
+        at["drift_done"] = time.perf_counter()
+        return quantiles(*a, **k)
+
+    monkeypatch.setattr(ckpt, "save_manifest", timed_save)
+    monkeypatch.setattr(drift, "drift_quantiles", slow_quantiles)
+    assert main(_cli_args(fixtures_sf0001, tmp_path, "fair", "--limit-partitions", "2")) == 0
+    assert at["saved"] < at["drift_done"], at
+
+
+def test_drift_pass_entry_points_run_on_the_calling_thread(tmp_path, spark, fixtures_sf0001, monkeypatch):
+    """sketch_by_partition and drift_verdicts run on main's thread, like
+    every lyra entry point the run calls; only drift_quantiles' jobs run on
+    a side thread, in the side pool, tagged and labelled as the run's."""
+    import threading
+
+    from jobs.validate import SIDE_POOL, main
+    from lyra_spark import drift
+
+    sc = spark.sparkContext
+    seen = {}
+
+    def on_thread(name, fn):
+        def wrapper(*a, **k):
+            seen[name] = threading.current_thread()
+            if name == "drift_quantiles":
+                seen["props"] = (sc.getLocalProperty("spark.scheduler.pool"),
+                                 sc.getLocalProperty("spark.job.description"),
+                                 sc.getJobTags())
+            return fn(*a, **k)
+        return wrapper
+
+    for name in ("sketch_by_partition", "drift_quantiles", "drift_verdicts"):
+        monkeypatch.setattr(drift, name, on_thread(name, getattr(drift, name)))
+    assert main(_cli_args(fixtures_sf0001, tmp_path, "threads", "--limit-partitions", "1")) == 0
+    me = threading.current_thread()
+    assert seen["sketch_by_partition"] is me and seen["drift_verdicts"] is me
+    assert seen["drift_quantiles"] is not me
+    pool, desc, tags = seen["props"]
+    assert pool == SIDE_POOL and desc == "lyra validate threads: drift pass"
+    assert len(tags) == 1 and next(iter(tags)).startswith("lyra_side_")
+    assert sc.getLocalProperty("spark.scheduler.pool") is None and not sc.getJobTags()
 
 
 def test_bad_drift_column_raises_after_the_batch_is_saved(tmp_path, spark, fixtures_sf0001):

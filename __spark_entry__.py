@@ -593,18 +593,19 @@ def q_distinct_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_hll_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.3 row 24, HLL flavor with driver-checked tolerance (SURVEY.md §6).
 
-    Both HLL implementations — Catalyst approx_count_distinct (HLL++) and the
-    DataSketches hll_sketch_agg blob path (stats.hll_sketches) — must land
-    within 4·rsd of the exact distinct count per group. The estimates are
+    Both HLL surfaces — the stats.approx_distinct estimate (rsd 0.05, the one
+    column_stats/profile_findings/suggest_rules/metric rules use) and the
+    stored-blob path (stats.hll_sketches, lg_k 12) — must land within 4·rsd of
+    the exact distinct count per group. The estimates are
     engine-specific, so the oracle-checked signal is the boolean: the oracle
     emits TRUE and the hash only matches if every group is inside tolerance."""
     ensure_shipped(spark)
-    from lyra_spark.stats import hll_sketches
+    from lyra_spark.stats import approx_distinct, hll_sketches
 
     events = _read(spark, sf_dir, "events")
     base = events.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("n_exact"),
-        F.approx_count_distinct("user_id", 0.05).alias("__apx"),
+        approx_distinct("user_id", 0.05).alias("__apx"),
     )
     sk = hll_sketches(events, ["user_id"], partition_col="event_type", lg_k=12)
     return (
@@ -612,7 +613,7 @@ def q_hll_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             "n_exact",
-            # 4·rsd bounds: rsd=0.05 for HLL++, rsd≈1.04/√2¹² ≈ 0.016 for lg_k=12
+            # 4·rsd bounds: rsd=0.05 (lg_k 9), rsd≈1.04/√2¹² ≈ 0.016 for lg_k=12
             (F.abs(F.col("__apx") - F.col("n_exact")) <= 4 * 0.05 * F.col("n_exact")).alias("approx_within_rsd"),
             (F.abs(F.col("__hll") - F.col("n_exact")) <= 4 * 0.016 * F.col("n_exact")).alias("sketch_within_rsd"),
         )

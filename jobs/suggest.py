@@ -31,6 +31,17 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lyra_spark.session import get_spark
+from lyra_spark.stats import hll_lg_k
+
+
+def _rsd(s: str) -> float:
+    """--rsd: a float the HLL sketch can meet (stats.hll_lg_k)."""
+    try:
+        rsd = float(s)
+        hll_lg_k(rsd)
+    except ValueError as e:
+        raise argparse.ArgumentTypeError(str(e)) from None
+    return rsd
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -41,8 +52,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--enum-max-card", type=int, default=20)
     ap.add_argument("--distinct-mode", choices=("approx", "exact"), default="approx",
                     help="approx = HLL (the 10^12-row mode); exact for small profiles")
-    ap.add_argument("--rsd", type=float, default=0.05,
-                    help="HLL relative standard deviation (approx mode)")
+    ap.add_argument("--rsd", type=_rsd, default=0.05,
+                    help="relative standard error of the approx-mode HLL distinct "
+                         "count, in [0.00072, 1)")
     ap.add_argument("--out", default=None,
                     help="write the rules JSON here (default: print to stdout)")
     ap.add_argument("--metrics-out", default=None,

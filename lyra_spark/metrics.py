@@ -14,12 +14,13 @@ Scale: ALL declared metrics evaluate in ONE wide aggregation pass
 (``evaluate_metric_rules`` emits a single groupBy(partition).agg(...) — one
 scan + one exchange for any number of rules). Every metric is a built-in
 Catalyst aggregate with constant-size buffers that partial-aggregate
-map-side and merge tree-wise (avg/sum/min/max/stddev moments;
-approx_count_distinct's HLL++). The one exception is ``distinct`` (exact
-COUNT(DISTINCT)): Spark plans it with an Expand — still one scan, but the
-exchange carries (group, value) pairs, i.e. cost grows with column
-cardinality. That is the oracle/gate mode; at 10⁹+ distinct values declare
-``approx_distinct`` (rsd-bounded HLL, constant buffers) instead.
+map-side and merge tree-wise (avg/sum/min/max/stddev moments; the
+DataSketches HLL sketch of ``stats.approx_distinct``). The one exception is
+``distinct`` (exact COUNT(DISTINCT)): Spark plans it with an Expand — still
+one scan, but the exchange carries (group, value) pairs, i.e. cost grows
+with column cardinality. That is the oracle/gate mode; at 10⁹+ distinct
+values declare ``approx_distinct`` (an HLL sketch sized to ``rsd``,
+constant buffers) instead.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lyra_spark.stats import _anomaly_filter
+from lyra_spark.stats import _anomaly_filter, approx_distinct, hll_lg_k
 
 METRICS = {
     "row_count",
@@ -105,8 +106,7 @@ class MetricRule:
             raise ValueError(f"{self.rule_id}: min {self.min} > max {self.max}")
         if self.severity not in ("error", "warn"):
             raise ValueError(f"unknown severity {self.severity!r} (known: error, warn)")
-        if not (0.0 < self.rsd < 1.0):
-            raise ValueError(f"rsd must be in (0, 1), got {self.rsd!r}")
+        hll_lg_k(self.rsd)  # rsd in (0, 1) and within the finest HLL sketch
         if self.where is not None and (not isinstance(self.where, str) or not self.where.strip()):
             raise ValueError(f"{self.rule_id}: where must be a non-empty SQL boolean expression")
         if self.metric == "compliance":
@@ -180,8 +180,8 @@ def distinct_count(column: str, min: float | None = None, max: float | None = No
                    approx: bool = False, rsd: float = 0.05,
                    where: str | None = None) -> MetricRule:
     """Distinct values within bounds (Deequ hasDistinctCount). approx=True
-    swaps COUNT(DISTINCT) for the HLL++ estimate — the 10⁹-cardinality mode;
-    leave bounds slack by ~3·rsd there."""
+    swaps COUNT(DISTINCT) for the HLL sketch estimate (stats.approx_distinct)
+    — the 10⁹-cardinality mode; leave bounds slack by ~3·rsd there."""
     m = "approx_distinct" if approx else "distinct"
     return _mk(m, column, rule_id, min=min, max=max, severity=severity, rsd=rsd, where=where)
 
@@ -272,7 +272,7 @@ def _agg_expr(r: MetricRule):
     if r.metric == "approx_quantile":
         return F.percentile_approx(c, F.lit(float(r.q)), F.lit(int(r.accuracy))).cast("double")
     if r.metric == "approx_distinct":
-        return F.approx_count_distinct(c, r.rsd).cast("double")
+        return approx_distinct(c, r.rsd).cast("double")
     # a metric in METRICS but without a branch here would otherwise silently
     # compute SOMETHING plausible — fail loudly instead
     raise AssertionError(f"no aggregation defined for metric {r.metric!r}")

@@ -2,16 +2,54 @@
 min/max, length histograms — per partition and global.
 
 All built-in Catalyst aggregates: partial (map-side) + final aggregation is
-automatic, and `approx_count_distinct`'s HLL±± buffers merge tree-wise inside
-the agg, so a 1000-executor run never funnels raw rows to one node. The
-`hll_sketch_agg` variants (Apache DataSketches, Spark ≥3.5) additionally give
-re-usable, mergeable sketch blobs across runs.
+automatic, so a 1000-executor run never funnels raw rows to one node. Every
+approximate distinct count in lyra is one Apache DataSketches HLL sketch
+(`hll_sketch_agg` over the value's string form, SEMANTICS #98): the
+`approx_distinct` estimate a profile reports and the blob `hll_sketches`
+stores for cross-run merging hash the same input, so they agree.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+# DataSketches HLL accepts lg_k in [4, 21]; its relative standard error is
+# 1.04/√2^lg_k, so the finest sketch bounds the rsd an estimate can promise.
+HLL_MAX_LG_K = 21
+HLL_MIN_RSD = 1.04 / math.sqrt(2**HLL_MAX_LG_K)
+
+
+def hll_lg_k(rsd: float) -> int:
+    """The smallest HLL lg_k whose standard error 1.04/√2^lg_k is ≤ ``rsd``
+    (at least 4): rsd 0.05 → 9, i.e. 512 registers. Raises ValueError for an
+    rsd outside (0, 1) or below HLL_MIN_RSD ≈ 0.00072 (lg_k would exceed 21)."""
+    if not 0.0 < rsd < 1.0:
+        raise ValueError(f"rsd must be in (0, 1), got {rsd!r}")
+    # the epsilon keeps rsd = 1.04/√2^k at k when the float log lands a hair above
+    lg_k = max(4, math.ceil(math.log2((1.04 / rsd) ** 2) - 1e-9))
+    if lg_k > HLL_MAX_LG_K:
+        raise ValueError(
+            f"rsd {rsd!r} needs HLL lg_k {lg_k} > {HLL_MAX_LG_K}: the smallest rsd is {HLL_MIN_RSD:.5f}"
+        )
+    return lg_k
+
+
+def _hll_sketch(c: Column, lg_k: int) -> Column:
+    """The one HLL sketch aggregate: NULLs and empty strings skipped, values
+    hashed by their string form."""
+    return F.hll_sketch_agg(c.cast("string"), F.lit(lg_k))
+
+
+def approx_distinct(col: Column | str, rsd: float = 0.05) -> Column:
+    """Approximate distinct count of ``col`` (a name or any Column, e.g. a
+    ``when``-masked one) as a bigint aggregate: the estimate of an HLL sketch
+    at hll_lg_k(rsd). NULLs and empty strings are ignored (DataSketches skips
+    a zero-length input); an empty or all-NULL group gives 0."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.hll_sketch_estimate(_hll_sketch(c, hll_lg_k(rsd)))
 
 
 def column_stats(
@@ -32,8 +70,8 @@ def column_stats(
     aggs = [F.count(F.lit(1)).alias("row_count")]
     for c in columns:
         aggs += [
-            F.avg(F.col(c).isNull().cast("double")).alias(f"__nr_{c}"),
-            F.approx_count_distinct(c, rsd).alias(f"__ad_{c}"),
+            F.count(c).alias(f"__nn_{c}"),
+            approx_distinct(c, rsd).alias(f"__ad_{c}"),
             F.min(c).cast("string").alias(f"__mn_{c}"),
             F.max(c).cast("string").alias(f"__mx_{c}"),
         ]
@@ -42,7 +80,9 @@ def column_stats(
         *[
             F.struct(
                 F.lit(c).alias("column"),
-                F.col(f"__nr_{c}").alias("null_rate"),
+                # (rows − non-null) / rows: the same double as avg(isNull) at
+                # one long buffer per column; NULL on an empty whole table
+                F.try_divide(F.col("row_count") - F.col(f"__nn_{c}"), F.col("row_count")).alias("null_rate"),
                 F.col(f"__ad_{c}").alias("approx_distinct"),
                 F.col(f"__mn_{c}").alias("min_value"),
                 F.col(f"__mx_{c}").alias("max_value"),
@@ -83,13 +123,14 @@ def hll_sketches(
 ) -> DataFrame:
     """Mergeable Apache DataSketches HLL blobs per (partition, column).
 
-    Unlike approx_count_distinct these persist across runs: re-validate only
-    new partitions, `hll_union_agg` the stored blobs, `hll_sketch_estimate`
-    the union — the incremental path at 10^12-turn scale.
+    Unlike an approx_distinct estimate these persist across runs: re-validate
+    only new partitions, `hll_union_agg` the stored blobs, `hll_sketch_estimate`
+    the union — the incremental path at 10^12-turn scale. At lg_k=9 the
+    estimate equals column_stats' approx_distinct (rsd 0.05) for the column.
     """
     group = [partition_col] if partition_col else []
     # one agg pass for all columns, unpivoted after (same shape as column_stats)
-    aggs = [F.hll_sketch_agg(F.col(c).cast("string"), F.lit(lg_k)).alias(f"__sk_{c}") for c in columns]
+    aggs = [_hll_sketch(F.col(c), lg_k).alias(f"__sk_{c}") for c in columns]
     wide = df.groupBy(*group).agg(*aggs)
     per_col = F.array(
         *[F.struct(F.lit(c).alias("column"), F.col(f"__sk_{c}").alias("sketch")) for c in columns]
@@ -247,7 +288,7 @@ def profile_findings(
     a pipeline bug regardless of any per-row rule.
 
     ONE aggregation pass for every column (same shape as column_stats).
-    distinct_mode='approx' (default) uses HLL estimates — the only honest
+    distinct_mode='approx' (default) uses approx_distinct — the only honest
     option at 10¹²-row scale, where candidate_key means "distinct within
     rsd of rows"; 'exact' uses count(DISTINCT) (Spark expands multiple
     distinct aggs over one scan) for small/oracle-checked profiles.
@@ -255,7 +296,7 @@ def profile_findings(
     agg_d = (
         (lambda c: F.count_distinct(F.col(c)))
         if distinct_mode == "exact"
-        else (lambda c: F.approx_count_distinct(c, rsd))
+        else (lambda c: approx_distinct(c, rsd))
     )
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in columns:

@@ -23,9 +23,10 @@ Scale shape (10^12 rows):
 
   pass 1 — ONE wide aggregate over every profiled column (count, non-null
   count, distinct, typed min/max, length min/max). All buffers are constant
-  size except distinct: distinct_mode='approx' (HLL, the default) keeps pass
-  1 constant-memory at any scale; 'exact' (count DISTINCT — Spark expands
-  multi-distinct over one scan) is for small/oracle-checked profiles.
+  size except distinct: distinct_mode='approx' (the default,
+  stats.approx_distinct's HLL sketch) keeps pass 1 constant-memory at any
+  scale; 'exact' (count DISTINCT — Spark expands multi-distinct over one
+  scan) is for small/oracle-checked profiles.
   Suggestions derive from the single result row via array→filter→explode —
   pure Catalyst, no driver round-trip, no createDataFrame(list).
 
@@ -49,6 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lyra_spark import rules as R
+from lyra_spark.stats import approx_distinct
 
 NUMERIC_TYPES = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -109,7 +111,7 @@ def suggest_rules(
     agg_d = (
         (lambda c: F.count_distinct(F.col(c)))
         if distinct_mode == "exact"
-        else (lambda c: F.approx_count_distinct(c, rsd))
+        else (lambda c: approx_distinct(c, rsd))
     )
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in columns:

@@ -11,6 +11,8 @@ of being written as row rules.
 import json
 import os
 
+import pytest
+
 from lyra_spark.engine import row_violations
 from lyra_spark.rules import ruleset_from_json
 
@@ -76,3 +78,12 @@ def test_cli_suggest_metrics_out(spark, fixtures_sf0001, tmp_path, capsys):
     assert summary["metrics_out"] == mout
     mv = evaluate_metric_rules(spark.read.parquet(table), mrules, partition_col=None)
     assert all(r["pass"] for r in mv.collect())
+
+
+def test_cli_suggest_rejects_an_rsd_below_the_finest_sketch(tmp_path, capsys):
+    from jobs.suggest import main
+
+    with pytest.raises(SystemExit) as e:
+        main(["--table", str(tmp_path), "--rsd", "0.0007"])
+    assert e.value.code == 2
+    assert "smallest rsd" in capsys.readouterr().err

@@ -111,6 +111,26 @@ def test_approx_distinct_within_rsd(spark):
     assert row["pass"] is True and abs(row["value"] - 1000) <= 4 * 0.05 * 1000
 
 
+def test_approx_distinct_rsd_range_both_ends(spark):
+    """Any rsd down to the finest HLL sketch (lg_k 21, rsd ≈ 0.00072)
+    evaluates — rsd 0.5 too, which Catalyst's HLL++ rejected only when the
+    query ran; a smaller rsd fails when the rule is built."""
+    df = spark.range(0, 5000).selectExpr("cast(id % 1000 as string) AS k", "'d' AS part_date")
+    rules = [
+        M.distinct_count("k", min=1, approx=True, rsd=0.5, rule_id="coarse"),
+        M.distinct_count("k", min=1, approx=True, rsd=0.00072, rule_id="fine"),
+    ]
+    got = {r["rule_id"]: r["value"] for r in M.evaluate_metric_rules(df, rules, "part_date").collect()}
+    assert abs(got["coarse"] - 1000) <= 4 * 0.5 * 1000
+    assert abs(got["fine"] - 1000) <= 4 * 0.00072 * 1000 + 1
+    with pytest.raises(ValueError, match="smallest rsd"):
+        M.distinct_count("k", min=1, approx=True, rsd=0.0007)
+    with pytest.raises(ValueError, match="smallest rsd"):
+        M.metric_rules_from_json('[{"metric": "approx_distinct", "column": "k", "min": 1, "rsd": 0.0007}]')
+    with pytest.raises(ValueError, match=r"rsd must be in \(0, 1\)"):
+        M.distinct_count("k", min=1, approx=True, rsd=1.0)
+
+
 def test_warn_severity_reports_but_never_gates(spark):
     rules = [
         M.mean("value", min=15.0, max=50.0, rule_id="mean_value", severity="warn"),

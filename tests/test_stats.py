@@ -705,3 +705,130 @@ def test_robust_outlier_rows_approx_mode_agrees_on_separated_data(spark):
     approx = {(r.day, r.event_id)
               for r in robust_outlier_rows(df, exact=False, **kw).collect()}
     assert exact == approx == {("a", 900), ("b", 901)}
+
+
+# --- one distinct-count sketch (stats.approx_distinct, SEMANTICS #98) ---------
+TYPED = ["i", "b", "d", "dt", "ts", "flag", "s"]
+
+
+def _typed_frame(spark):
+    """~1,000 distinct values per typed column (2 for the boolean) over 3
+    partitions, plus an all-NULL and an all-empty-string column."""
+    return spark.range(3000).selectExpr(
+        "cast(id % 3 as string) AS part_date",
+        "cast(id % 997 as int) AS i",
+        "(id % 1013) * 1000000007 AS b",
+        "(id % 991) / 7.0 AS d",
+        "date_add(date'2020-01-01', cast(id % 983 as int)) AS dt",
+        "timestamp_seconds((id % 977) * 3601) AS ts",
+        "id % 2 = 0 AS flag",
+        "concat('s', id % 971) AS s",
+        "cast(NULL as string) AS dead",
+        "'' AS blank",
+    )
+
+
+def test_approx_distinct_within_4rsd_on_every_type(spark):
+    from lyra_spark.stats import approx_distinct
+
+    df = _typed_frame(spark)
+    row = df.agg(
+        *[approx_distinct(c).alias(f"a_{c}") for c in TYPED],
+        *[F.count_distinct(c).alias(f"e_{c}") for c in TYPED],
+    ).collect()[0]
+    for c in TYPED:
+        exact = row[f"e_{c}"]
+        assert abs(row[f"a_{c}"] - exact) <= 4 * 0.05 * exact, c
+
+
+def test_approx_distinct_zero_on_empty_all_null_and_all_blank(spark):
+    from lyra_spark.stats import approx_distinct
+
+    df = _typed_frame(spark)
+    empty = df.limit(0)
+    whole = empty.agg(approx_distinct("i").alias("a"))
+    assert dict(whole.dtypes)["a"] == "bigint"
+    assert whole.collect()[0]["a"] == 0
+    assert empty.groupBy("part_date").agg(approx_distinct("i")).count() == 0
+    [row] = column_stats(empty, ["i"], partition_col=None).collect()
+    assert (row["row_count"], row["null_rate"], row["approx_distinct"]) == (0, None, 0)
+    per_part = df.groupBy("part_date").agg(
+        approx_distinct("dead").alias("dead"),
+        # DataSketches skips a zero-length input: "" counts like NULL
+        approx_distinct("blank").alias("blank"),
+        # a where-masked Column that no row satisfies (metric rules' `where`)
+        approx_distinct(F.when(F.col("i") < 0, F.col("i"))).alias("masked"),
+    ).collect()
+    assert len(per_part) == 3
+    assert all(r["dead"] == 0 and r["blank"] == 0 and r["masked"] == 0 for r in per_part)
+    stats = column_stats(df, ["dead"]).collect()
+    assert [r["approx_distinct"] for r in stats] == [0, 0, 0]
+
+
+def test_hll_lg_k_mapping_and_rsd_range():
+    import math
+
+    from lyra_spark.stats import HLL_MIN_RSD, hll_lg_k
+
+    assert hll_lg_k(0.05) == 9  # 512 registers, HLL++'s default p=9
+    assert hll_lg_k(0.5) == 4 and hll_lg_k(0.99) == 4
+    for k in range(4, 22):
+        assert hll_lg_k(1.04 / math.sqrt(2**k)) == k
+    assert hll_lg_k(0.00072) == 21 and hll_lg_k(HLL_MIN_RSD) == 21
+    for bad in (0.0007, 0.0, -0.1, 1.0, 1.5):
+        with pytest.raises(ValueError, match="rsd"):
+            hll_lg_k(bad)
+
+
+def test_small_rsd_raises_when_the_profile_is_built(spark):
+    from lyra_spark.stats import profile_findings
+    from lyra_spark.suggest import suggest_rules
+
+    df = _typed_frame(spark)
+    with pytest.raises(ValueError, match="smallest rsd"):
+        column_stats(df, ["i"], rsd=0.0007)
+    with pytest.raises(ValueError, match="smallest rsd"):
+        profile_findings(df, ["i"], rsd=0.0007)
+    with pytest.raises(ValueError, match="smallest rsd"):
+        suggest_rules(df, ["i"], rsd=0.0007)
+    # the finest sketch (lg_k 21) runs, and is near-exact at this size
+    got = column_stats(df, ["i"], partition_col=None, rsd=0.00072).collect()[0]
+    assert abs(got["approx_distinct"] - 997) <= 4 * 0.00072 * 997 + 1
+
+
+def test_one_distinct_sketch_stack_in_plans(spark):
+    """Every approximate distinct count plans as the DataSketches HLL sketch;
+    none falls back to Catalyst's HLL++ (approx_count_distinct)."""
+    from lyra_spark import metrics as M
+    from lyra_spark.stats import profile_findings
+    from lyra_spark.suggest import suggest_rules
+
+    df = _typed_frame(spark)
+    frames = {
+        "column_stats": column_stats(df, TYPED),
+        "profile_findings": profile_findings(df, TYPED, distinct_mode="approx"),
+        "suggest_rules": suggest_rules(df, TYPED, distinct_mode="approx"),
+        "metric_rules": M.evaluate_metric_rules(
+            df, [M.distinct_count("s", min=1, approx=True, where="i > 10")], partition_col="part_date"
+        ),
+    }
+    for name, frame in frames.items():
+        # the JSON form names each expression's class (the text form prints
+        # HLL++ as approx_count_distinct)
+        plan = frame._jdf.queryExecution().optimizedPlan().toJSON()
+        assert "HyperLogLogPlusPlus" not in plan, name
+        assert "aggregate.HllSketchAgg" in plan, name
+
+
+def test_column_stats_estimate_equals_stored_sketch(tdf):
+    """column_stats' approx_distinct (rsd 0.05) and the stored lg_k=9 blob's
+    estimate hash the same string form, so they are equal per partition."""
+    cs = {
+        (str(r["part_date"]), r["column"]): r["approx_distinct"]
+        for r in column_stats(tdf, ["conv_id", "turn_idx", "tool"]).collect()
+    }
+    sk = {
+        (str(r["part_date"]), r["column"]): r["estimate"]
+        for r in hll_sketches(tdf, ["conv_id", "turn_idx", "tool"], lg_k=9).collect()
+    }
+    assert cs == sk and len(cs) > 3

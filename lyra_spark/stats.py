@@ -37,19 +37,25 @@ def hll_lg_k(rsd: float) -> int:
     return lg_k
 
 
-def _hll_sketch(c: Column, lg_k: int) -> Column:
-    """The one HLL sketch aggregate: NULLs and empty strings skipped, values
-    hashed by their string form."""
-    return F.hll_sketch_agg(c.cast("string"), F.lit(lg_k))
+def _hll_sketch(c: Column, lg_k: int, count_blank: bool = False) -> Column:
+    """The one HLL sketch aggregate: values hashed by their string form; NULLs
+    skipped. DataSketches skips a zero-length input too, so with
+    ``count_blank`` ``''`` hashes as the byte 0xFF, which no UTF-8 string is
+    (a string hashes as its UTF-8 bytes, so the binary cast keeps every
+    other value's hash)."""
+    s = c.cast("string")
+    if count_blank:
+        s = F.when(s == "", F.lit(bytearray(b"\xff"))).otherwise(s.cast("binary"))
+    return F.hll_sketch_agg(s, F.lit(lg_k))
 
 
 def approx_distinct(col: Column | str, rsd: float = 0.05) -> Column:
     """Approximate distinct count of ``col`` (a name or any Column, e.g. a
     ``when``-masked one) as a bigint aggregate: the estimate of an HLL sketch
-    at hll_lg_k(rsd). NULLs and empty strings are ignored (DataSketches skips
-    a zero-length input); an empty or all-NULL group gives 0."""
+    at hll_lg_k(rsd). ``''`` counts as a value; NULLs are ignored, and an
+    empty or all-NULL group gives 0."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.hll_sketch_estimate(_hll_sketch(c, hll_lg_k(rsd)))
+    return F.hll_sketch_estimate(_hll_sketch(c, hll_lg_k(rsd), count_blank=True))
 
 
 def column_stats(
@@ -70,7 +76,7 @@ def column_stats(
     aggs = [F.count(F.lit(1)).alias("row_count")]
     for c in columns:
         aggs += [
-            F.count(c).alias(f"__nn_{c}"),
+            F.avg(F.col(c).isNull().cast("double")).alias(f"__nr_{c}"),
             approx_distinct(c, rsd).alias(f"__ad_{c}"),
             F.min(c).cast("string").alias(f"__mn_{c}"),
             F.max(c).cast("string").alias(f"__mx_{c}"),
@@ -80,9 +86,7 @@ def column_stats(
         *[
             F.struct(
                 F.lit(c).alias("column"),
-                # (rows − non-null) / rows: the same double as avg(isNull) at
-                # one long buffer per column; NULL on an empty whole table
-                F.try_divide(F.col("row_count") - F.col(f"__nn_{c}"), F.col("row_count")).alias("null_rate"),
+                F.col(f"__nr_{c}").alias("null_rate"),
                 F.col(f"__ad_{c}").alias("approx_distinct"),
                 F.col(f"__mn_{c}").alias("min_value"),
                 F.col(f"__mx_{c}").alias("max_value"),
@@ -126,7 +130,8 @@ def hll_sketches(
     Unlike an approx_distinct estimate these persist across runs: re-validate
     only new partitions, `hll_union_agg` the stored blobs, `hll_sketch_estimate`
     the union — the incremental path at 10^12-turn scale. At lg_k=9 the
-    estimate equals column_stats' approx_distinct (rsd 0.05) for the column.
+    estimate equals column_stats' approx_distinct (rsd 0.05) for a column
+    without ``''``: a stored blob skips ``''``, as blobs always have.
     """
     group = [partition_col] if partition_col else []
     # one agg pass for all columns, unpivoted after (same shape as column_stats)

@@ -741,7 +741,7 @@ def test_approx_distinct_within_4rsd_on_every_type(spark):
         assert abs(row[f"a_{c}"] - exact) <= 4 * 0.05 * exact, c
 
 
-def test_approx_distinct_zero_on_empty_all_null_and_all_blank(spark):
+def test_approx_distinct_zero_on_empty_and_all_null_one_on_all_blank(spark):
     from lyra_spark.stats import approx_distinct
 
     df = _typed_frame(spark)
@@ -754,13 +754,13 @@ def test_approx_distinct_zero_on_empty_all_null_and_all_blank(spark):
     assert (row["row_count"], row["null_rate"], row["approx_distinct"]) == (0, None, 0)
     per_part = df.groupBy("part_date").agg(
         approx_distinct("dead").alias("dead"),
-        # DataSketches skips a zero-length input: "" counts like NULL
+        # DataSketches skips a zero-length input; approx_distinct adds it back
         approx_distinct("blank").alias("blank"),
         # a where-masked Column that no row satisfies (metric rules' `where`)
         approx_distinct(F.when(F.col("i") < 0, F.col("i"))).alias("masked"),
     ).collect()
     assert len(per_part) == 3
-    assert all(r["dead"] == 0 and r["blank"] == 0 and r["masked"] == 0 for r in per_part)
+    assert all(r["dead"] == 0 and r["blank"] == 1 and r["masked"] == 0 for r in per_part)
     stats = column_stats(df, ["dead"]).collect()
     assert [r["approx_distinct"] for r in stats] == [0, 0, 0]
 
@@ -832,3 +832,47 @@ def test_column_stats_estimate_equals_stored_sketch(tdf):
         for r in hll_sketches(tdf, ["conv_id", "turn_idx", "tool"], lg_k=9).collect()
     }
     assert cs == sk and len(cs) > 3
+
+
+def test_stored_sketch_bytes_match_the_string_hashed_sketch(tdf):
+    """hll_sketches' blobs are byte-equal to hll_sketch_agg over the string
+    form, the blobs earlier runs stored, so stored and new blobs merge."""
+    cols = ["conv_id", "turn_idx", "tool"]
+    new = {
+        (str(r["part_date"]), r["column"]): bytes(r["sketch"])
+        for r in hll_sketches(tdf, cols).collect()
+    }
+    [old_row] = tdf.groupBy().agg(
+        *[F.hll_sketch_agg(F.col(c).cast("string"), F.lit(12)).alias(c) for c in cols]
+    ).collect()
+    per_part = tdf.groupBy("part_date").agg(
+        *[F.hll_sketch_agg(F.col(c).cast("string"), F.lit(12)).alias(c) for c in cols]
+    ).collect()
+    old = {(str(r["part_date"]), c): bytes(r[c]) for r in per_part for c in cols}
+    assert new == old and len(new) > 3
+    whole = {r["column"]: bytes(r["sketch"]) for r in hll_sketches(tdf, cols, partition_col=None).collect()}
+    assert whole == {c: bytes(old_row[c]) for c in cols}
+
+def test_approx_distinct_counts_the_empty_string(spark):
+    """'' is a value: profile_findings in approx mode agrees with exact mode
+    on a column holding '' (the sketch alone would read {'', 'x'} as one
+    value and an all-'' column as none)."""
+    from lyra_spark.stats import approx_distinct, profile_findings
+
+    df = spark.range(6).selectExpr(
+        "IF(id % 2 = 0, '', 'x') AS two",
+        "'' AS blank",
+        "IF(id < 3, '', NULL) AS blank_or_null",
+        "IF(id % 2 = 0, '', concat('v', id)) AS key_ish",
+    )
+    cols = df.columns
+    [row] = df.agg(*[approx_distinct(c).alias(c) for c in cols]).collect()
+    assert row.asDict() == {"two": 2, "blank": 1, "blank_or_null": 1, "key_ish": 4}
+
+    def findings(mode):
+        return sorted(tuple(r) for r in profile_findings(df, cols, distinct_mode=mode).collect())
+
+    approx = findings("approx")
+    assert approx == findings("exact")
+    assert ("blank", "constant", "") in approx
+    assert not any(r[:2] == ("two", "constant") for r in approx)

@@ -1,4 +1,4 @@
-.PHONY: dist test bench oracle perfbench-smoke
+.PHONY: dist test bench oracle perfbench-smoke loc
 
 dist:
 	mkdir -p dist && python -c "import shutil; shutil.make_archive('dist/lyra_spark', 'zip', root_dir='.', base_dir='lyra_spark')"
@@ -15,3 +15,7 @@ perfbench-smoke:
 
 oracle:
 	python tools/check_oracle.py
+
+# non-test lines of code, the figure ROADMAP.md tracks
+loc:
+	@cat lyra_spark/*.py lyra_spark/*/*.py jobs/*.py __spark_entry__.py bench.py | wc -l

@@ -229,13 +229,10 @@ def _load_dim(spark, tools_dim: str, ruleset):
     """The tools dim and the suite's ruleset: the config ruleset plus the
     referential rule compiled once from the collected dim, unless the
     ruleset carries its own (then the dim is only read)."""
-    from lyra_spark.fused import REF_RULE, inline_referential_rule
-    from lyra_spark.rules import RuleSet
+    from lyra_spark.fused import with_referential_rule
 
     dim = spark.read.parquet(tools_dim)
-    if any(r.rule_id == REF_RULE for r in ruleset.rules):
-        return dim, ruleset
-    return dim, RuleSet(ruleset.rules + [inline_referential_rule(dim)])
+    return dim, with_referential_rule(ruleset, dim)
 
 
 def _drift_quantiles(sk, reference: str | None):
@@ -393,14 +390,14 @@ def _validate(spark, args: argparse.Namespace, catalog: "lio.TableCatalog | None
         ruleset_tolerances,
         verdict_gate,
     )
-    from lyra_spark.fused import suite_rule_ids
+    from lyra_spark import fused
 
     # Referential rule compiled ONCE per run (the dim task collects the tiny
     # dim): the suite reuses it instead of re-collecting per batch. Manifest
     # fingerprints stay the config ruleset's. Taken before the drift pass is
     # submitted, so a bad --tools-dim fails before any scan of the table.
     dim, suite_rules = dim_task.result()
-    rule_ids = suite_rule_ids(suite_rules, args.check_transitions, args.check_placement)
+    rule_ids = fused.suite_rule_ids(suite_rules, args.check_transitions, args.check_placement)
     row_rule_ids = {r.rule_id for r in suite_rules.checks}
     ds_rule_ids = [rid for rid in rule_ids if rid not in row_rule_ids]
     severities, tolerances = ruleset_severities(suite_rules), ruleset_tolerances(suite_rules)
@@ -460,15 +457,16 @@ def _validate(spark, args: argparse.Namespace, catalog: "lio.TableCatalog | None
         scoped = lio.partition_scope(df, batch)
         # transitions fuse into the suite's single conv exchange and placement
         # into its row-rule scan; conversations are checked per partition so
-        # a partition's result never depends on its batch mates
-        result = presets.validate_transcripts(
-            scoped, dim, ruleset=suite_rules,
+        # a partition's result never depends on its batch mates. Looked up
+        # on the module at call time, so a wrapper patched onto it applies.
+        viol = fused.validate_transcripts_fused(
+            scoped, dim, suite_rules,
             transitions=transitions if args.check_transitions else None,
             allowed_first=allowed_first,
             placement_ts=placement_ts if args.check_placement else None,
             convs_per_partition=True,
-        )
-        viol = result.violations
+        ).violations
+        counted = viol
         if args.out:
             # write-then-reuse: violations compute once into the sink, and the
             # write itself observes one count per (partition, rule) cell, so
@@ -478,15 +476,6 @@ def _validate(spark, args: argparse.Namespace, catalog: "lio.TableCatalog | None
                 mode="append", observe=presets.violation_count_aggs(batch, rule_ids, "part_date", "part"),
             )
             counted = presets.counted_violations(spark, batch, rule_ids, "part_date", observed)
-            if meta_counts is not None and all(pk in meta_counts for pk in batch):
-                # row counts from table metadata — no rescan of the batch
-                verd = presets.verdicts_from_metadata(
-                    scoped, counted, rule_ids, "part_date", {pk: meta_counts[pk] for pk in batch},
-                    severities=severities, tolerances=tolerances,
-                )
-            else:
-                verd = compute_verdicts(scoped, counted, rule_ids, "part_date",
-                                        severities=severities, tolerances=tolerances)
             if args.clean_out or args.quarantine_out:
                 # a clean partition gets no sink dir: read only the dirs
                 # written (explicit schema), or an empty frame when the batch
@@ -494,15 +483,20 @@ def _validate(spark, args: argparse.Namespace, catalog: "lio.TableCatalog | None
                 written = [uri for uri, exists in lio.partition_dirs(spark, args.out, batch, "part") if exists]
                 viol = (spark.read.schema(viol.schema).option("basePath", args.out).parquet(*written)
                         if written else empty(viol.schema))
+        if meta_counts is not None and all(pk in meta_counts for pk in batch):
+            # row counts from table metadata — no rescan of the batch
+            verd = presets.verdicts_from_metadata(
+                scoped, counted, rule_ids, "part_date", {pk: meta_counts[pk] for pk in batch},
+                severities=severities, tolerances=tolerances,
+            )
         else:
-            # both dataset checks are fused into the suite, so its verdict
-            # grid is already complete — no rebuild pass needed
-            verd = result.verdicts
+            verd = compute_verdicts(scoped, counted, rule_ids, "part_date",
+                                    severities=severities, tolerances=tolerances)
         if args.clean_out or args.quarantine_out:
             # Row rules (the inlined referential check included) filter
             # map-only on the scan; rows keyed by dataset-check violations —
             # from the written sink when there is one, else recomputed from
-            # the result frame — are marked via a broadcast join on
+            # the suite's violation frame — are marked via a broadcast join on
             # (conv_id, turn_idx, part), so the batch never shuffles. Both
             # outputs filter the same marked frame on the same fail
             # condition, one negated: complements by construction.

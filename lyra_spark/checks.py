@@ -1,8 +1,9 @@
 """Dataset-level checks (no lyra counterpart — BASELINE.json:6 mandates them).
 
 Each returns a violation-shaped DataFrame (*key_cols, partition_col, rule_id,
-observed_value) so lyra_spark.engine.validate() can union it into the main
-violation stream and verdict grid.
+observed_value), the same shape engine.row_violations emits. They are
+standalone operators (a whole-table run has no other form of them) and the
+reference lyra_spark.fused's single-exchange suite is tested against.
 
 Scale notes (10^12-turn design point):
   * uniqueness uses a two-phase SALTED aggregate — the partial pass groups on
@@ -74,8 +75,8 @@ def uniqueness_violations(
     """
     keep = list(key_cols) + ([partition_col] if partition_col else [])
     # NULL-key rows are schema violations (required rules catch them), not
-    # duplicates — excluded here exactly as in the fused path so
-    # fused=True/False give identical results (SEMANTICS.md §keys).
+    # duplicates — excluded here exactly as in the fused suite, so the two
+    # give identical results (SEMANTICS.md §keys).
     df = df.filter(_non_null_keys(key_cols))
     if salt_buckets <= 1:
         final = df.groupBy(*keep).agg(F.count(F.lit(1)).alias("c")).filter(F.col("c") > 1)

@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lyra_spark.io import partition_key
+
 SKETCH_SCHEMA = "part_key string, sketch binary, n long"
 MULTI_SKETCH_SCHEMA = "part_key string, column string, sketch binary, n long"
 # KLL accuracy parameter (larger k, smaller rank error, bigger sketch); a
@@ -43,12 +45,6 @@ REFERENCE_FORMAT = {"format": "lyra-kll-ref", "version": 2}
 KS_EXACT_MAX_DISTINCT = 2_000_000
 
 
-def _part_key(partition_col: str) -> Column:
-    # NULL partitions sentinel to "None" (the same key partition_scope owns),
-    # so the NULL partition is one ordinary key in every sketch consumer
-    return F.coalesce(F.col(partition_col).cast("string"), F.lit("None")).alias("part_key")
-
-
 def sketch_by_partition(
     df: DataFrame,
     value_col,
@@ -61,7 +57,7 @@ def sketch_by_partition(
     decimal columns sketch like numbers; NULL values are skipped."""
     v = (F.expr(value_col) if isinstance(value_col, str) else value_col).cast("double")
     return (
-        df.select(_part_key(partition_col), v.alias("v"))
+        df.select(partition_key(partition_col).alias("part_key"), v.alias("v"))
         .filter(F.col("v").isNotNull())
         .groupBy("part_key")
         .agg(F.kll_sketch_agg_double("v", k).alias("sketch"), F.count(F.lit(1)).alias("n"))
@@ -95,7 +91,7 @@ def sketch_columns_by_partition(
         for i, c in enumerate(value_cols)
     ]))
     return (
-        df.groupBy(_part_key(partition_col))
+        df.groupBy(partition_key(partition_col).alias("part_key"))
         .agg(*aggs)
         .select("part_key", cells)
         .filter(F.col("n") > 0)

@@ -349,20 +349,13 @@ def validate(
     ruleset: RuleSet,
     key_cols: list[str] = KEY_COLS,
     partition_col: str | None = "part_date",
-    extra_violations: list[DataFrame] | None = None,
-    extra_rule_ids: list[str] | None = None,
     messages: bool = False,
     abort_early: bool = False,
 ) -> ValidationResult:
-    """Run the row-rule family (+ optional dataset-check violation frames) and
-    roll up per-partition verdicts (one row per rule when ``partition_col``
-    is None).
-
-    ``extra_violations`` lets dataset-level checks (uniqueness, referential,
-    monotone — lyra_spark.checks) merge into the same violations output and
-    verdict grid; each frame must share the violation schema (when
-    ``messages=True`` they gain a generic '<rule_id> failed' message so the
-    union stays schema-equal).
+    """Run the row-rule family and roll up per-partition verdicts (one row
+    per rule when ``partition_col`` is None). The dataset-level checks join
+    the suite in fused.validate_transcripts_fused, or run as the standalone
+    lyra_spark.checks operators.
 
     ``abort_early=True`` warns: each failing row then counts toward its
     first failing rule only, so every later rule's verdict count, and any
@@ -376,11 +369,7 @@ def validate(
         )
     viol = row_violations(df, ruleset, key_cols, partition_col,
                           messages=messages, abort_early=abort_early)
-    for ev in extra_violations or []:
-        if messages and "message" not in ev.columns:
-            ev = ev.withColumn("message", F.concat(F.lit('"'), F.col("rule_id"), F.lit('" failed')))
-        viol = viol.unionByName(ev)
-    rule_ids = [r.rule_id for r in ruleset.checks] + list(extra_rule_ids or [])
+    rule_ids = [r.rule_id for r in ruleset.checks]
     return ValidationResult(
         violations=viol,
         build_verdicts=lambda: compute_verdicts(df, viol, rule_ids, partition_col,

@@ -14,7 +14,9 @@ The composable operators in checks.py each scan the table; correct, but at
                          via lag over (conv_id; turn_idx, ts) — one exchange
                          instead of two.
 
-Caveats vs the composable variants (kept, documented):
+This is the one suite planner; it needs a partition column. The checks.py
+operators stay as standalone operators (and the reference the fused plan is
+tested against), not as a second suite mode:
   * checks.uniqueness_violations (salted two-phase agg) is the right shape
     when duplicate multiplicity itself is skewed; the window variant puts one
     conversation in one task, which the BASELINE accepts for monotone anyway
@@ -51,6 +53,14 @@ def inline_referential_rule(df_dim: DataFrame, fk_col: str = "tool", dim_col: st
     broadcast join would ship, minus the join machinery."""
     values = [r[0] for r in df_dim.select(dim_col).distinct().collect()]
     return enum(fk_col, values, rule_id=rule_id)
+
+
+def with_referential_rule(ruleset: RuleSet, tools_dim: DataFrame) -> RuleSet:
+    """``ruleset`` plus the referential rule inlined from ``tools_dim``,
+    unless the ruleset already carries REF_RULE (then the dim is not read)."""
+    if any(r.rule_id == REF_RULE for r in ruleset.rules):
+        return ruleset
+    return RuleSet(ruleset.rules + [inline_referential_rule(tools_dim)])
 
 
 def suite_rule_ids(ruleset: RuleSet, transitions: bool = False, placement: bool = False) -> list[str]:
@@ -334,11 +344,19 @@ def validate_transcripts_fused(
     (the standard Iceberg days(ts) layout), which lets the conv checks share
     ONE sort (see conv_scoped_violations). Pass False when part_date does not
     derive from ts — equal-turn_idx ties then order by (turn_idx, ts) exactly
-    as the composable monotone check does."""
-    if any(r.rule_id == REF_RULE for r in ruleset.rules):
-        fused_rules = ruleset  # caller pre-compiled the referential rule
-    else:
-        fused_rules = RuleSet(ruleset.rules + [inline_referential_rule(tools_dim)])
+    as the composable monotone check does.
+
+    There is no whole-table form: the conv exchange and the verdict grid key
+    on the partition column, so ``partition_col=None`` raises before any
+    Spark job."""
+    if partition_col is None:
+        raise ValueError(
+            "the transcript suite needs a partition column (partition_col=None); for a "
+            "whole-table run use engine.validate for the row rules and the standalone "
+            "checks.uniqueness_violations / referential_violations / monotone_violations / "
+            "transition_violations operators"
+        )
+    fused_rules = with_referential_rule(ruleset, tools_dim)
     extra_checks = None
     if placement_ts is not None:
         # Placement is a STORAGE-integrity check: it must judge the value as

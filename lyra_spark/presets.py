@@ -1,16 +1,16 @@
 """Canonical rulesets + one-call suites for the mandated inputs.
 
-``transcript_ruleset``/``validate_transcripts`` implement the BASELINE.json:6
-check suite over the transcripts schema; rule_ids match FIXTURES.md §1 so the
-golden manifests line up.
+``transcript_ruleset`` is the BASELINE.json:6 row-rule set over the
+transcripts schema (rule_ids match FIXTURES.md §1 so the golden manifests line
+up); ``run_suite`` runs the full suite through
+``fused.validate_transcripts_fused`` and writes it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
-from lyra_spark import checks
-from lyra_spark.engine import ValidationResult, compute_verdicts, validate
+from lyra_spark.engine import compute_verdicts
 from lyra_spark.io import local_frame
 from lyra_spark.rules import RuleSet, enum, nonempty, range_rule, required
 from lyra_spark.schema import ROLE_ENUM
@@ -24,92 +24,6 @@ def transcript_ruleset() -> RuleSet:
             enum("role", ROLE_ENUM, rule_id="role_enum"),
             range_rule("turn_idx", min=0, rule_id="turn_idx_range"),
         ]
-    )
-
-
-def validate_transcripts(
-    df: DataFrame,
-    tools_dim: DataFrame,
-    partition_col: str | None = "part_date",
-    ruleset: RuleSet | None = None,
-    fused: bool = True,
-    partition_from_ts: bool = True,
-    transitions: set | None = None,
-    allowed_first: set | None = None,
-    placement_ts: str | None = None,
-    convs_per_partition: bool = False,
-) -> ValidationResult:
-    """Full suite: row rules + uniqueness + referential + monotone ordering.
-
-    ``transitions`` (an allowed (prev_role, role) pair set) adds the
-    sequence-structure check on BOTH paths: fused into the single conv
-    exchange (lyra_spark.fused), or as the composable window operator;
-    ``allowed_first`` constrains each conversation's first role.
-    ``placement_ts`` (a ts column name) adds the partition-placement check:
-    fused into the row-rule scan, or as the composable map-only operator.
-    ``convs_per_partition`` (fused path only) checks each conversation within
-    each partition instead of across the whole frame.
-
-    fused=True (default): two-pass plan — one scan for all row rules with the
-    tools dim inlined, one conv_id exchange for uniqueness+monotone
-    (lyra_spark.fused). fused=False: the composable operators (salted
-    aggregate, broadcast anti-join, window) — same results, more passes; the
-    right choice when the dim is large or duplicate multiplicity is skewed.
-
-    partition_from_ts (fused path only): set False when the table layout does
-    NOT guarantee part_date = date(ts); the fused conv checks then order
-    equal-turn_idx ties by (turn_idx, ts), identical to the composable path,
-    at the cost of one extra sort."""
-    # The violation union is never cached: a cached plan materializes without
-    # adaptive execution (no exchange reuse, no coalescing), measured ~2x
-    # slower than recomputing; run_suite() writes the sink once instead.
-    ruleset = ruleset or transcript_ruleset()
-    # placement compares event time AGAINST the partition value — without a
-    # partition column the check has no referent on either path; raise the
-    # contract violation here instead of an opaque planner error
-    if placement_ts is not None and partition_col is None:
-        raise ValueError("placement_ts requires a partition column (partition_col=None)")
-    # the fused plan keys its shared exchange and verdict grid on the
-    # partition column; with partition_col=None only the composable path is
-    # well-defined — route there instead of crashing mid-plan
-    if fused and partition_col is None:
-        fused = False
-    if convs_per_partition and not fused:
-        raise ValueError("convs_per_partition needs the fused plan and a partition column")
-    if fused:
-        from lyra_spark.fused import validate_transcripts_fused
-
-        return validate_transcripts_fused(
-            df, tools_dim, ruleset, partition_col=partition_col,
-            partition_from_ts=partition_from_ts, transitions=transitions,
-            allowed_first=allowed_first, placement_ts=placement_ts,
-            convs_per_partition=convs_per_partition,
-        )
-    extra = [
-        checks.uniqueness_violations(df, partition_col=partition_col),
-        checks.referential_violations(df, tools_dim, partition_col=partition_col),
-        checks.monotone_violations(df, partition_col=partition_col),
-    ]
-    extra_ids = [checks.UNIQ_RULE, checks.REF_RULE, checks.MONO_RULE]
-    if transitions is not None:
-        extra.append(
-            checks.transition_violations(
-                df, transitions, allowed_first=allowed_first,
-                partition_col=partition_col, ts_col="ts",
-            )
-        )
-        extra_ids.append(checks.TRANSITION_RULE)
-    if placement_ts is not None:
-        extra.append(
-            checks.misplaced_violations(df, ts_col=placement_ts, partition_col=partition_col)
-        )
-        extra_ids.append(checks.PLACEMENT_RULE)
-    return validate(
-        df,
-        ruleset,
-        partition_col=partition_col,
-        extra_violations=extra,
-        extra_rule_ids=extra_ids,
     )
 
 

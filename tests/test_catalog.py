@@ -244,9 +244,8 @@ def test_cli_resume_and_revalidate_changed_through_catalog(
     assert "revalidate-changed: 1 completed" in out
     mf3 = ckpt.load_manifest(str(tmp_path), "rres")
     assert mf3.records[two[0]].completed_at != done1[two[0]]  # re-ran
-    # without --out the verdict path counts by scan, so rows re-record the
-    # ACTUAL count (catalog counts drove the change DETECTION; their
-    # propagation into verdict row counts is the previous test's claim)
-    assert mf3.records[two[0]].rows == real[two[0]]
+    # without --out the verdict grid takes its row counts from the catalog
+    # too, as with it (the previous test), so rows re-record the moved count
+    assert mf3.records[two[0]].rows == moved[two[0]]
     assert mf3.records[two[0]].snapshot_id == "snap-3"
     assert mf3.records[two[1]].completed_at == done1[two[1]]  # untouched

@@ -9,7 +9,8 @@ import pytest
 from lyra_spark import checkpoint as ckpt
 from lyra_spark import io as lio
 from lyra_spark import rules as R
-from lyra_spark.presets import transcript_ruleset, validate_transcripts
+from lyra_spark.fused import validate_transcripts_fused
+from lyra_spark.presets import transcript_ruleset
 from lyra_spark.rules import RuleSet
 
 
@@ -236,7 +237,7 @@ def test_violation_sink_deterministic(tmp_path, spark, fixtures_sf0001):
 
     outs = []
     for i in (1, 2):
-        res = validate_transcripts(tdf, dim)
+        res = validate_transcripts_fused(tdf, dim, transcript_ruleset())
         out = str(tmp_path / f"v{i}")
         lio.write_violations(res.violations_sorted(), out)
         pdf = pd.read_parquet(out).reset_index(drop=True)
@@ -628,7 +629,7 @@ def test_cli_clean_out_is_exact_complement(tmp_path, spark, fixtures_sf0001):
     for pk in done:
         part = tdf.filter(F.col("part_date") == pk)
         clean = spark.read.parquet(str(clean_dir / f"part={pk}"))
-        viol = validate_transcripts(part, dim).violations
+        viol = validate_transcripts_fused(part, dim, transcript_ruleset()).violations
         viol_keys = {
             (r.conv_id, r.turn_idx) for r in viol.select("conv_id", "turn_idx").distinct().collect()
         }

@@ -14,7 +14,7 @@ import pytest
 from lyra_spark import io as lio
 from lyra_spark import presets
 from lyra_spark.engine import ruleset_severities, ruleset_tolerances
-from lyra_spark.fused import inline_referential_rule, suite_rule_ids
+from lyra_spark.fused import inline_referential_rule, suite_rule_ids, validate_transcripts_fused
 from lyra_spark.rules import RuleSet, ruleset_from_json
 
 
@@ -93,8 +93,7 @@ def test_planning_the_fused_suite_py4j_commands(spark, fixtures_sf0001, monkeypa
         return orig(self, command, *a, **k)
 
     monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)
-    res = presets.validate_transcripts(lio.partition_scope(df, keys), dim, ruleset=suite,
-                                       convs_per_partition=True)
+    res = validate_transcripts_fused(lio.partition_scope(df, keys), dim, suite, convs_per_partition=True)
     monkeypatch.undo()
     assert res.violations is not None
     assert 0 < len(sent) < 2000, len(sent)
@@ -157,6 +156,37 @@ def test_observed_counts_equal_counts_from_the_sink(tmp_path, spark, fixtures_sf
     # the tolerance rule forgives some counts, the strict rules do not
     tol = got[got["rule_id"] == "text_required"]
     assert (tol["pass"] & (tol["violation_count"] > 0)).any()
+
+
+def test_cli_without_out_rolls_up_from_metadata(tmp_path, spark, fixtures_sf0001, monkeypatch):
+    """Without --out a batch builds its verdict grid as with it: row counts
+    from table metadata (one verdicts_from_metadata call per batch, no count
+    aggregate over the batch), violation counts from the suite's violation
+    frame instead of the write's observed counts. Its verdict parquet equals
+    the grid of an --out run over the same partitions."""
+    from jobs.validate import main
+
+    rules = tmp_path / "rules.json"
+    rules.write_text(json.dumps(TOLERANT_RULES))
+    flags = ["--rules", str(rules), "--check-transitions", "--check-placement", "--limit-partitions", "2"]
+    real = presets.verdicts_from_metadata
+    calls = []
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(presets, "verdicts_from_metadata", spy)
+    args = _cli_args(fixtures_sf0001, tmp_path, "no_out", *flags)
+    i = args.index("--out")
+    assert main(args[:i] + args[i + 2:]) == 0
+    assert len(calls) == -(-2 // spark.sparkContext.defaultParallelism)
+    monkeypatch.undo()
+    assert main(_cli_args(fixtures_sf0001, tmp_path, "with_out", *flags)) == 0
+    got, want = (_grid(spark.read.parquet(str(tmp_path / "ck" / r / "verdicts")).collect())
+                 for r in ("no_out", "with_out"))
+    pd.testing.assert_frame_equal(got, want)
+    assert len(got) == 2 * 9 and got["violation_count"].sum() > 0
 
 
 def test_observed_counts_on_a_clean_batch(tmp_path, spark):

@@ -9,7 +9,8 @@ import pandas as pd
 import pytest
 
 from lyra_spark.fixtures import gen_tools_dim
-from lyra_spark.presets import validate_transcripts
+from lyra_spark.fused import validate_transcripts_fused
+from lyra_spark.presets import transcript_ruleset
 from tests.conftest import normalize_violations
 from tests.oracle import RULE_IDS, oracle_verdicts, oracle_violations
 
@@ -36,7 +37,7 @@ def test_schema_as_expected(loaded):
 
 def test_violations_match_oracle(spark, loaded):
     tdf, dim, pdf = loaded
-    result = validate_transcripts(tdf, dim)
+    result = validate_transcripts_fused(tdf, dim, transcript_ruleset())
     engine = result.violations_sorted().toPandas()
 
     tools = set(gen_tools_dim()["tool_name"])
@@ -63,7 +64,7 @@ def test_injected_subset_detected(spark, loaded, fixtures_sf0001):
 
 def test_verdicts_match_oracle(spark, loaded):
     tdf, dim, pdf = loaded
-    result = validate_transcripts(tdf, dim)
+    result = validate_transcripts_fused(tdf, dim, transcript_ruleset())
     engine = result.verdicts.toPandas()
     engine["part_date"] = pd.to_datetime(engine["part_date"].astype(str)).dt.date
 
@@ -82,8 +83,8 @@ def test_verdicts_match_oracle(spark, loaded):
 def test_determinism_two_runs_identical(spark, loaded):
     """Two full runs produce identical violation rows (BASELINE.json:6 byte-match)."""
     tdf, dim, _ = loaded
-    a = validate_transcripts(tdf, dim).violations_sorted().toPandas()
-    b = validate_transcripts(tdf, dim).violations_sorted().toPandas()
+    a = validate_transcripts_fused(tdf, dim, transcript_ruleset()).violations_sorted().toPandas()
+    b = validate_transcripts_fused(tdf, dim, transcript_ruleset()).violations_sorted().toPandas()
     pd.testing.assert_frame_equal(a, b)
 
 

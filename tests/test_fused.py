@@ -2,15 +2,54 @@
 
 import os
 
-from lyra_spark.presets import validate_transcripts
+from lyra_spark import checks
+from lyra_spark.engine import (
+    ValidationResult,
+    compute_verdicts,
+    row_violations,
+    ruleset_severities,
+    ruleset_tolerances,
+)
+from lyra_spark.fused import validate_transcripts_fused
+from lyra_spark.presets import transcript_ruleset
 from tests.conftest import normalize_violations
+
+
+def composable_suite(df, dim, ruleset=None, transitions=None, placement_ts=None):
+    """The reference suite from the standalone operators: row rules ∪
+    checks.* violations, rolled up by compute_verdicts over the ruleset's
+    checks and the dataset-check rule ids."""
+    ruleset = ruleset or transcript_ruleset()
+    part = "part_date"
+    parts = [
+        checks.uniqueness_violations(df, partition_col=part),
+        checks.referential_violations(df, dim, partition_col=part),
+        checks.monotone_violations(df, partition_col=part),
+    ]
+    rule_ids = [r.rule_id for r in ruleset.checks] + [checks.UNIQ_RULE, checks.REF_RULE, checks.MONO_RULE]
+    if transitions is not None:
+        parts.append(checks.transition_violations(df, transitions, partition_col=part, ts_col="ts"))
+        rule_ids.append(checks.TRANSITION_RULE)
+    if placement_ts is not None:
+        parts.append(checks.misplaced_violations(df, ts_col=placement_ts, partition_col=part))
+        rule_ids.append(checks.PLACEMENT_RULE)
+    viol = row_violations(df, ruleset, partition_col=part)
+    for p in parts:
+        viol = viol.unionByName(p)
+    return ValidationResult(
+        violations=viol,
+        build_verdicts=lambda: compute_verdicts(df, viol, rule_ids, part,
+                                                severities=ruleset_severities(ruleset),
+                                                tolerances=ruleset_tolerances(ruleset)),
+        key_cols=["conv_id", "turn_idx"], partition_col=part,
+    )
 
 
 def test_fused_equals_composable(spark, fixtures_sf0001):
     tdf = spark.read.parquet(os.path.join(fixtures_sf0001, "transcripts"))
     dim = spark.read.parquet(os.path.join(fixtures_sf0001, "tools_dim.parquet"))
-    fused = validate_transcripts(tdf, dim, fused=True)
-    comp = validate_transcripts(tdf, dim, fused=False)
+    fused = validate_transcripts_fused(tdf, dim, transcript_ruleset())
+    comp = composable_suite(tdf, dim)
     assert normalize_violations(fused.violations_sorted().toPandas()) == normalize_violations(
         comp.violations_sorted().toPandas()
     )
@@ -83,8 +122,8 @@ def test_fused_equals_composable_with_null_keys(spark, fixtures_sf0001):
         .withColumn("turn_idx", F.lit(None).cast("int"))
     )
     poisoned = tdf.unionByName(bad)
-    fused = validate_transcripts(poisoned, dim, fused=True)
-    comp = validate_transcripts(poisoned, dim, fused=False)
+    fused = validate_transcripts_fused(poisoned, dim, transcript_ruleset())
+    comp = composable_suite(poisoned, dim)
     fv = normalize_violations(fused.violations_sorted().toPandas())
     cv = normalize_violations(comp.violations_sorted().toPandas())
     assert fv == cv
@@ -107,7 +146,6 @@ def test_fused_transitions_equal_composable(spark, fixtures_sf0001):
     to checks.transition_violations — forced tiny buckets so the cross-bucket
     state restore and the (turn_idx, state) tiebreak are both exercised, with
     the first-turn constraint on."""
-    from lyra_spark import checks
     from lyra_spark.fused import conv_scoped_violations
 
     tdf = spark.read.parquet(os.path.join(fixtures_sf0001, "transcripts"))
@@ -125,12 +163,12 @@ def test_fused_transitions_equal_composable(spark, fixtures_sf0001):
 
 
 def test_fused_suite_with_transitions_equals_composable(spark, fixtures_sf0001):
-    """validate_transcripts(transitions=...) — fused and composable paths
-    produce identical violations AND verdict grids with the sequence check on."""
+    """The suite with transitions=... — fused and composable paths produce
+    identical violations AND verdict grids with the sequence check on."""
     tdf = spark.read.parquet(os.path.join(fixtures_sf0001, "transcripts"))
     dim = spark.read.parquet(os.path.join(fixtures_sf0001, "tools_dim.parquet"))
-    fused = validate_transcripts(tdf, dim, fused=True, transitions=TRANSITIONS)
-    comp = validate_transcripts(tdf, dim, fused=False, transitions=TRANSITIONS)
+    fused = validate_transcripts_fused(tdf, dim, transcript_ruleset(), transitions=TRANSITIONS)
+    comp = composable_suite(tdf, dim, transitions=TRANSITIONS)
     assert normalize_violations(fused.violations_sorted().toPandas()) == normalize_violations(
         comp.violations_sorted().toPandas()
     )
@@ -148,7 +186,6 @@ def test_transitions_deterministic_on_duplicate_key_tie_groups(spark):
     partitionings AND between the fused and composable plans."""
     import datetime
 
-    from lyra_spark import checks
     from lyra_spark.fused import conv_scoped_violations
 
     rows = []
@@ -187,7 +224,6 @@ def test_fused_transitions_equal_composable_on_misplaced_rows(spark):
     composable operator unconditionally, misplaced duplicates included."""
     import datetime
 
-    from lyra_spark import checks
     from lyra_spark.fused import conv_scoped_violations
 
     rows = []
@@ -244,7 +280,6 @@ if _HAVE_HYP:
         composable operator on every input, first-turn constraint included."""
         import datetime
 
-        from lyra_spark import checks
         from lyra_spark.fused import conv_scoped_violations
 
         data = [
@@ -294,10 +329,9 @@ def test_fused_transitions_still_one_exchange(spark, fixtures_sf0001):
 def test_fused_placement_equals_composable(spark, fixtures_sf0001):
     """placement_ts fuses the placement check into the row-rule scan; its
     violations must be byte-equal to the composable misplaced_violations
-    operator, on both suite paths."""
+    operator, and the fused and composable suites must agree."""
     from pyspark.sql import functions as F
 
-    from lyra_spark import checks
 
     base = spark.read.parquet(os.path.join(fixtures_sf0001, "transcripts"))
     dim = spark.read.parquet(os.path.join(fixtures_sf0001, "tools_dim.parquet"))
@@ -305,8 +339,8 @@ def test_fused_placement_equals_composable(spark, fixtures_sf0001):
     moved = base.limit(3).withColumn("part_date", F.date_add("part_date", 400))
     null_ts = base.limit(2).withColumn("ts", F.lit(None).cast("timestamp"))
     tdf = base.unionByName(moved).unionByName(null_ts)
-    fused = validate_transcripts(tdf, dim, fused=True, placement_ts="ts")
-    comp = validate_transcripts(tdf, dim, fused=False, placement_ts="ts")
+    fused = validate_transcripts_fused(tdf, dim, transcript_ruleset(), placement_ts="ts")
+    comp = composable_suite(tdf, dim, placement_ts="ts")
     fv = normalize_violations(fused.violations_sorted().toPandas())
     assert fv == normalize_violations(comp.violations_sorted().toPandas())
     got = [t for t in fv if t[2] == "partition_placement"]
@@ -321,7 +355,8 @@ def test_fused_placement_equals_composable(spark, fixtures_sf0001):
 def test_fused_placement_sees_raw_values_under_coercion(spark, fixtures_sf0001):
     """Placement judges the STORED value: a ruleset coercion on ts (e.g. a
     default filling NULLs — exactly the rows placement exists to flag) must
-    not mask fused placement violations, and both suite paths must agree."""
+    not mask fused placement violations, and the fused and composable
+    suites must agree."""
     import datetime
 
     from pyspark.sql import functions as F
@@ -336,23 +371,32 @@ def test_fused_placement_sees_raw_values_under_coercion(spark, fixtures_sf0001):
         required("text", rule_id="text_required"),
         default("ts", datetime.datetime(2024, 1, 1)),
     ])
-    fused = validate_transcripts(tdf, dim, ruleset=rs, fused=True, placement_ts="ts")
-    comp = validate_transcripts(tdf, dim, ruleset=rs, fused=False, placement_ts="ts")
+    fused = validate_transcripts_fused(tdf, dim, rs, placement_ts="ts")
+    comp = composable_suite(tdf, dim, ruleset=rs, placement_ts="ts")
     fv = normalize_violations(fused.violations_sorted().toPandas())
     assert fv == normalize_violations(comp.violations_sorted().toPandas())
     placed = [t for t in fv if t[2] == "partition_placement"]
     assert len(placed) >= 3 and all(t[3] == "NULL" for t in placed)
 
 
-def test_placement_without_partition_column_raises(spark, fixtures_sf0001):
-    """placement compares ts against the partition value — with no partition
-    column the check has no referent; the suite must say so up front."""
+def test_suite_without_partition_column_raises_before_any_job(spark, fixtures_sf0001):
+    """The suite keys its conv exchange and verdict grid on the partition
+    column and has no whole-table form: partition_col=None raises up front,
+    naming the standalone operators, before the dim collect or any other
+    Spark job. Placement (ts against the partition value) is no exception."""
     import pytest
 
     tdf = spark.read.parquet(os.path.join(fixtures_sf0001, "transcripts"))
     dim = spark.read.parquet(os.path.join(fixtures_sf0001, "tools_dim.parquet"))
-    with pytest.raises(ValueError, match="placement_ts requires a partition column"):
-        validate_transcripts(tdf, dim, partition_col=None, placement_ts="ts")
+    sc = spark.sparkContext
+    sc.setJobGroup("suite_input_check", "suite input check")
+    try:
+        for kw in ({}, {"placement_ts": "ts"}):
+            with pytest.raises(ValueError, match="needs a partition column.*engine.validate.*checks"):
+                validate_transcripts_fused(tdf, dim, transcript_ruleset(), partition_col=None, **kw)
+        assert sc.statusTracker().getJobIdsForGroup("suite_input_check") == []
+    finally:
+        sc._jsc.clearJobGroup()
 
 
 def test_fused_suite_all_checks_two_scans(spark, fixtures_sf0001):
@@ -360,9 +404,6 @@ def test_fused_suite_all_checks_two_scans(spark, fixtures_sf0001):
     monotone + transitions + placement) reads the table exactly TWICE: the
     row-rule scan (placement fused in) and the conv exchange's scan
     (transitions fused in) — enabling both dataset checks adds no pass."""
-    from lyra_spark.fused import validate_transcripts_fused
-    from lyra_spark.presets import transcript_ruleset
-
     tdf = spark.read.parquet(os.path.join(fixtures_sf0001, "transcripts"))
     dim = spark.read.parquet(os.path.join(fixtures_sf0001, "tools_dim.parquet"))
     res = validate_transcripts_fused(
@@ -380,8 +421,8 @@ def test_fused_partition_from_ts_false_matches_composable(spark, fixtures_sf0001
     exactly like the composable monotone window — byte-equal violations."""
     tdf = spark.read.parquet(os.path.join(fixtures_sf0001, "transcripts"))
     dim = spark.read.parquet(os.path.join(fixtures_sf0001, "tools_dim.parquet"))
-    fused = validate_transcripts(tdf, dim, fused=True, partition_from_ts=False)
-    comp = validate_transcripts(tdf, dim, fused=False)
+    fused = validate_transcripts_fused(tdf, dim, transcript_ruleset(), partition_from_ts=False)
+    comp = composable_suite(tdf, dim)
     assert normalize_violations(fused.violations_sorted().toPandas()) == normalize_violations(
         comp.violations_sorted().toPandas()
     )
@@ -393,9 +434,7 @@ def test_verdict_grid_planned_only_when_read(spark, fixtures_sf0001, tmp_path, m
     grid, not two; the grid, once read, equals the one compute_verdicts
     builds over the same violations."""
     from lyra_spark import engine, fused, presets
-    from lyra_spark.fused import suite_rule_ids, validate_transcripts_fused
-    from lyra_spark.presets import transcript_ruleset
-    from lyra_spark.rules import RuleSet
+    from lyra_spark.fused import suite_rule_ids
 
     real = engine.compute_verdicts
     calls = []
@@ -426,7 +465,6 @@ def test_verdict_grid_planned_only_when_read(spark, fixtures_sf0001, tmp_path, m
     assert calls == []
     lazy = res.verdicts
     assert res.verdicts is lazy and len(calls) == 1
-    rule_ids = suite_rule_ids(RuleSet(rs.rules + [fused.inline_referential_rule(dim)]),
-                              transitions=True, placement=True)
+    rule_ids = suite_rule_ids(fused.with_referential_rule(rs, dim), transitions=True, placement=True)
     eager = real(tdf, res.violations, rule_ids, "part_date")
     assert sorted(map(tuple, lazy.collect())) == sorted(map(tuple, eager.collect()))
